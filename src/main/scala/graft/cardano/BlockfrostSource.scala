@@ -9,11 +9,16 @@ import org.apache.spark.sql.functions._
   *
   * Where the reference fetches ONE request at a time on a single asyncio
   * loop (`cardano_blocks_to_s3_pipeline.py:58-61` — sequential awaits),
-  * this fans the key range across partitions: each partition runs its own
-  * rate-limited fetch loop, so cluster-wide throughput is
-  * partitions × perPartitionRps, tunable to the API quota. Retry policy
-  * mirrors the reference (5 attempts, exponential backoff with the base
-  * delays of `get_block_from_s3.py:22-28`).
+  * this fans the keys across the cluster: every fetch first spreads its
+  * keys over `defaultParallelism` partitions, whatever partitioning they
+  * inherited (a hash list read from a one-file table arrives as ONE
+  * partition), and each partition runs its own rate-limited fetch loop.
+  * The cluster-wide rate is therefore `defaultParallelism × rps` for
+  * every stage, tunable to the API quota. Retry policy mirrors the
+  * reference (5 attempts, exponential backoff with the base delays of
+  * `get_block_from_s3.py:22-28`), and every attempt — retries included —
+  * takes a limiter token ([[paced]]), so a failing endpoint is never hit
+  * faster than the pace.
   *
   * The transport is pluggable ([[Backend]]): production wires an HTTP
   * client; tests and this zero-egress environment wire
@@ -57,18 +62,30 @@ object BlockfrostSource {
   }
 
   /** Simple per-partition rate limiter: at most `rps` calls per second
-    * within one partition (token pacing; cluster-wide rate =
-    * partitions × rps, sized to the API quota).
+    * within one partition (token pacing — any two grants are at least
+    * `1/rps` apart; cluster-wide rate = partitions × rps, sized to the
+    * API quota).
     */
   private[graft] final class RateLimiter(rps: Int) extends Serializable {
     private val intervalNanos = 1000000000L / math.max(rps, 1)
     private var nextAt = 0L
     def acquire(): Unit = {
-      val now = System.nanoTime()
-      if (now < nextAt) Thread.sleep((nextAt - now) / 1000000)
-      nextAt = math.max(now, nextAt) + intervalNanos
+      var now = System.nanoTime()
+      while (now < nextAt) {
+        Thread.sleep((nextAt - now + 999999) / 1000000)
+        now = System.nanoTime()
+      }
+      nextAt = now + intervalNanos
     }
   }
+
+  /** One fetch with retries, each attempt paced by `limiter` (the token
+    * is taken inside the retried block, so backoff never lets a retry
+    * jump the per-partition pace). The one call both fetch loops — this
+    * object's and the DataSource V2 reader's — go through.
+    */
+  private[graft] def paced[T](limiter: RateLimiter)(f: => T): T =
+    withRetry() { limiter.acquire(); f }
 
   /** S1: heights → raw block rows. */
   def fetchBlocks(heights: Dataset[java.lang.Long], backend: Backend, rps: Int = 50): DataFrame =
@@ -82,39 +99,25 @@ object BlockfrostSource {
 
   /** S3: tx hashes → raw transaction rows. */
   def fetchTransactions(hashes: Dataset[String], backend: Backend, rps: Int = 50): DataFrame =
-    fetchJsonStr(hashes, backend, rps)(_.tx(_))
+    fetchJson(hashes, backend, rps)(_.tx(_))
       .select(from_json(col("json"), Schemas.rawTransaction).as("r")).select("r.*")
 
   /** S4: tx hashes → nested UTXO docs. */
   def fetchTxUtxos(hashes: Dataset[String], backend: Backend, rps: Int = 50): DataFrame =
-    fetchJsonStr(hashes, backend, rps)(_.txUtxo(_))
+    fetchJson(hashes, backend, rps)(_.txUtxo(_))
       .select(from_json(col("json"), Schemas.rawTxUtxo).as("r")).select("r.*")
 
-  private def fetchJson(
-      keys: Dataset[java.lang.Long], backend: Backend, rps: Int)(
-      call: (Backend, Long) => Option[String]): DataFrame = {
+  /** The one fetch path: spread the keys over every slot, then one paced
+    * fetch loop per partition. The round-robin repartition is a shuffle
+    * of the keys only (tiny next to the calls it parallelizes).
+    */
+  private def fetchJson[K](keys: Dataset[K], backend: Backend, rps: Int)(
+      call: (Backend, K) => Option[String]): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
-    keys.mapPartitions { it =>
+    keys.repartition(spark.sparkContext.defaultParallelism).mapPartitions { it =>
       val limiter = new RateLimiter(rps)
-      it.flatMap { h =>
-        limiter.acquire()
-        withRetry()(call(backend, h))
-      }
-    }.toDF("json")
-  }
-
-  private def fetchJsonStr(
-      keys: Dataset[String], backend: Backend, rps: Int)(
-      call: (Backend, String) => Option[String]): DataFrame = {
-    val spark = keys.sparkSession
-    import spark.implicits._
-    keys.mapPartitions { it =>
-      val limiter = new RateLimiter(rps)
-      it.flatMap { k =>
-        limiter.acquire()
-        withRetry()(call(backend, k))
-      }
+      it.flatMap(k => paced(limiter)(call(backend, k)))
     }.toDF("json")
   }
 
@@ -122,8 +125,8 @@ object BlockfrostSource {
     * — zero extra dependencies). Endpoint + error contract mirror the
     * reference extractors (`src/extractors/get_block.py:12-38`,
     * `get_tx_utxo.py:12-35`): 404 → None (missing block/tx), any other
-    * non-200 → throw, which the per-partition fetch loop's [[withRetry]]
-    * turns into 5 attempts with exponential backoff
+    * non-200 → throw, which the per-partition fetch loop's [[paced]]
+    * retry turns into 5 paced attempts with exponential backoff
     * (`get_block_from_s3.py:22-28`).
     *
     * The instance is serialized into the `mapPartitions` closure; the

@@ -42,6 +42,19 @@ object IdempotentSink {
   /** Load-merge-append into a parquet table (creates it if absent).
     * Returns counts so callers (and the idempotency spec) can assert
     * re-loads insert zero.
+    *
+    * Into an existing table the merge runs as ONE write job, to a
+    * sibling delta directory (the merge plan reads the table, so it
+    * cannot write into it), and the delta is published by RENAMING its
+    * part files into the table directory ([[graft.core.Fs.moveParts]])
+    * — no second job re-reading and rewriting what was just written.
+    * Part names carry the write job's UUID, so they never collide with
+    * the table's; the table stays flat (every part at its top level); a
+    * reload that inserts zero rows adds no file; the delta dir is always
+    * deleted. A crash mid-publish leaves some of the delta's files moved
+    * and the rest in the delta dir — the same window a FileOutputCommitter
+    * v1 job commit (a per-file rename loop) has; the batch's watermark is
+    * not yet written, so the re-run's anti-join inserts what did not land.
     */
   def upsertParquet(
       spark: SparkSession,
@@ -72,12 +85,11 @@ object IdempotentSink {
         .observe(outObs, count(lit(1)).as("n"))
       // The merge plan reads the same path it appends to, so materialize
       // the delta to a scratch dir first (distributed — never through the
-      // driver), then append it.
+      // driver), then publish its files by rename.
       val delta = s"$path.delta-${UUID.randomUUID().toString.take(8)}"
       fresh.write.mode(SaveMode.Overwrite).parquet(delta)
       val (stagedCount, inserted) = counts()
-      if (inserted > 0)
-        spark.read.parquet(delta).write.mode(SaveMode.Append).parquet(path)
+      if (inserted > 0) graft.core.Fs.moveParts(spark, delta, path)
       graft.core.Fs.deleteRecursively(spark, delta)
       MergeStats(stagedCount, inserted, stagedCount - inserted)
     }

@@ -19,8 +19,13 @@ import org.apache.spark.sql.functions._
   * [[IdempotentSink.upsertParquet]] keyed on [[Schemas.conflictKeys]];
   * watermarks make re-runs skip completed work entirely. FK ordering for
   * the five UTXO tables (parent before child —
-  * `s3_to_db_cardano_tx_utxo_pipeline.py:142-209`) is preserved by the
-  * sequential merge order in [[runUtxos]].
+  * `s3_to_db_cardano_tx_utxo_pipeline.py:142-209`) is preserved by FK
+  * LEVELS in [[runUtxos]]: `cardano_tx_utxo`, then input ∥ output, then
+  * input_amount ∥ output_amount. Tables within a level have no FK
+  * between them, so they merge as concurrent jobs ([[graft.core.Par]]);
+  * a level starts only after its parent level committed, so no child
+  * table ever commits before its parent. The watermarks are written
+  * after the last level.
   */
 final class Pipelines(
     spark: SparkSession,
@@ -36,6 +41,12 @@ final class Pipelines(
 
   private def upsert(df: DataFrame, name: String): IdempotentSink.MergeStats =
     IdempotentSink.upsertParquet(spark, df, table(name), Schemas.conflictKeys(name))
+
+  /** Merge one FK level: tables with no FK between them, as concurrent
+    * jobs; returns once all of them committed.
+    */
+  private def upsertLevel(tables: (DataFrame, String)*): Unit =
+    graft.core.Par.run(tables.map { case (df, name) => () => upsert(df, name): Unit }: _*)
 
   def readTable(name: String): DataFrame = spark.read.parquet(table(name))
 
@@ -117,7 +128,8 @@ final class Pipelines(
   }
 
   /** EP2 stage c+d: UTXOs — fan out over loaded tx hashes (reference Q4),
-    * normalize the nested docs (T4), merge the five tables in FK order.
+    * normalize the nested docs (T4), merge the five tables level by FK
+    * level.
     */
   def runUtxos(start: Long, end: Long): Unit = {
     val from = math.max(start, watermarks.highestExportedBlock("cardano_tx_utxo") + 1)
@@ -129,12 +141,11 @@ final class Pipelines(
       lake.writeRawJson(raw, "transaction_utxo", b)
       val docs = loadRawBatch("transaction_utxo", b, Schemas.rawTxUtxo)
       val t = Transforms.normalizeUtxo(docs)
-      // FK-safe order: parent tables before child tables.
-      upsert(t.utxo, "cardano_tx_utxo")
-      upsert(t.inputs, "cardano_tx_utxo_input")
-      upsert(t.inputAmounts, "cardano_tx_utxo_input_amount")
-      upsert(t.outputs, "cardano_tx_utxo_output")
-      upsert(t.outputAmounts, "cardano_tx_utxo_output_amount")
+      // FK-safe order: each level after its parent level.
+      upsertLevel(t.utxo -> "cardano_tx_utxo")
+      upsertLevel(t.inputs -> "cardano_tx_utxo_input", t.outputs -> "cardano_tx_utxo_output")
+      upsertLevel(t.inputAmounts -> "cardano_tx_utxo_input_amount",
+        t.outputAmounts -> "cardano_tx_utxo_output_amount")
       recordLoaded("transaction_utxo", "cardano_tx_utxo", b)
       watermarks.recordBlockExport("cardano_tx_utxo", b)
     }

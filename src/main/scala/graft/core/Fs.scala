@@ -29,6 +29,22 @@ object Fs {
     fs.delete(p, true): Unit
   }
 
+  /** Move the `part-*` files at the top level of `from` into `to` by
+    * rename, keeping their names (one metadata operation per file; a
+    * copy on object stores). Committer markers such as `_SUCCESS` stay
+    * behind. Throws if a rename fails, e.g. on a name already taken.
+    */
+  def moveParts(spark: SparkSession, from: String, to: String): Unit = {
+    val (fs, src) = resolve(spark, from)
+    val dst = new Path(to)
+    fs.listStatus(src).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .foreach { s =>
+        val target = new Path(dst, s.getPath.getName)
+        if (!fs.rename(s.getPath, target))
+          throw new java.io.IOException(s"could not rename ${s.getPath} to $target")
+      }
+  }
+
   /** Content fingerprint of a directory's FILE LISTING (relative
     * paths, sizes, modification times) — one listing RPC stream, no
     * Spark job. Cheap staleness detection for derived layouts (a

@@ -28,7 +28,8 @@ import graft.cardano.{BlockfrostSource, Schemas}
   *    of the reference's sequential asyncio loop
   *    (`cardano_blocks_to_s3_pipeline.py:58-61`);
   *  - each partition builds its own transport + rate limiter (the same
-  *    per-partition client seam as the `mapPartitions` path) and parses
+  *    per-partition client seam as the `mapPartitions` path, with the
+  *    same paced retry, [[BlockfrostSource.paced]]) and parses
   *    the fetched JSON with Spark's own `JacksonParser` directly into
   *    `InternalRow`s — no driver hop, no RDD[String] detour;
   *  - column pruning is real: `SupportsPushDownRequiredColumns` hands the
@@ -216,8 +217,7 @@ final class BlockfrostPartitionReader(
 
   override def next(): Boolean = {
     while (!pending.hasNext && h <= part.to) {
-      limiter.acquire()
-      val json = BlockfrostSource.withRetry()(fetch(h))
+      val json = BlockfrostSource.paced(limiter)(fetch(h))
       h += 1
       pending = json.iterator.flatMap(s =>
         parser.parse(s, CreateJacksonParser.string, UTF8String.fromString)).map(_.copy())

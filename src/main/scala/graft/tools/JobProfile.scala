@@ -111,7 +111,7 @@ object JobProfile {
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       finally graft.core.Caches.release(blocking = true)
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let the listener bus drain (no public flush API)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val execs = execRows.asScala.toSeq.sortBy(_._1)
       val rdds = jobRows.asScala.toSeq.sortBy(_._1)

@@ -640,9 +640,8 @@ class PlanShapeSpec extends SparkSpec {
     try {
       graft.SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      // the execution-listener bus is async and has no public flush —
-      // same drain discipline as graft.tools.JobProfile
-      Thread.sleep(1500)
+      // the execution-listener bus is async: wait until it is empty
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
     } finally {
       spark.listenerManager.unregister(l)
       graft.core.Caches.release()

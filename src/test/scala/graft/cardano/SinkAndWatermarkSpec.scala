@@ -32,6 +32,28 @@ class SinkAndWatermarkSpec extends SparkSpec {
     assert(rows(1).getString(1) == "b") // conflict-skip keeps the original
   }
 
+  test("upsertParquet: deltas publish flat into the table dir; a no-op reload adds no file") {
+    import spark.implicits._
+    val root = tmpDir("sink")
+    val path = root + "/t"
+    IdempotentSink.upsertParquet(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("pk", "v"), path, Seq("pk"))
+    val more = Seq((2L, "b"), (3L, "c"), (4L, "d")).toDF("pk", "v")
+    assert(IdempotentSink.upsertParquet(spark, more, path, Seq("pk")).inserted == 2)
+    val published = graft.core.Fs.fingerprint(spark, path)
+    assert(IdempotentSink.upsertParquet(spark, more, path, Seq("pk")).inserted == 0)
+    assert(graft.core.Fs.fingerprint(spark, path) == published)
+    // no delta dir left beside the table
+    assert(new java.io.File(root).list().toSeq == Seq("t"))
+    // every part file at the table's top level: the '<t>/*.parquet'
+    // layout readers rely on
+    val parts = graft.core.Fs.listFilePaths(spark, path).filter(_.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    assert(parts.forall(f => new org.apache.hadoop.fs.Path(f).getParent.getName == "t"), parts)
+    assert(spark.read.parquet(s"$path/*.parquet").orderBy("pk").as[(Long, String)].collect()
+      .toSeq == Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+  }
+
   test("pgMergeStatements emits staging DDL + conflict-skip merge + drop") {
     val (staging, stmts) = IdempotentSink.pgMergeStatements(
       "cardano_blocks", Seq("height", "hash"), Seq("height"), "abc")
