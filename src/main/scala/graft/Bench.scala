@@ -3,22 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS); Tables.events converts.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-lifetime bucketed tables (s11) land in scratch, not CWD
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.dir("graft_wh"))
-      // shuffle/broadcast spill on RAM-backed scratch (see Scratch scaladoc)
-      .config("spark.local.dir", graft.core.Scratch.sparkLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.Session.local(cpus)
     // Streaming state backend A/B seam (SPARK_GRAFT_STATESTORE=rocksdb).
     // Measured at sf0.1 (3 reps, same window): RocksDB is equal-or-slower
     // on every st* query — worst st4 2.6→3.8s (stream-stream join: 4
@@ -80,7 +66,11 @@ object Bench {
     // min-of-2). The minimum is also the noise guard: this host has
     // multi-second noisy-neighbor stalls, and the min is the
     // sustained-throughput number a quiet machine reproduces.
-    def timedPass(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Map[String, Double] = qs.map { case (name, fn) =>
+    // A query that throws is neither timed nor summed (a failure must
+    // not read as a fast run): its error goes to stderr and its error
+    // class to the `failed` map of bench_times.json.
+    val failed = scala.collection.mutable.Map.empty[String, String]
+    def timedPass(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Map[String, Double] = qs.flatMap { case (name, fn) =>
       // Encourage cleanup of the previous query's broadcasts/codegen so
       // one query's garbage doesn't bill GC pauses to the next.
       System.gc()
@@ -97,23 +87,30 @@ object Bench {
       // higher than the pre-r17 maps — that is under-measurement
       // repaid, not regression (old numbers kept in BENCH_r16.json /
       // the git history of bench_times.json).
-      try {
+      val ok = try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        failed.getOrElseUpdate(name, e.getClass.getName)
+        false
+      }
       // Blocking: eviction is billed to the query that persisted the
       // data, not leaked into the next query's timed window.
       finally graft.core.Caches.release(blocking = true)
-      name -> (System.nanoTime() - t0) / 1e9
+      if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
     }.toMap
     val p1 = timedPass(repeated)
     val p2 = timedPass(repeated)
     val p3 = timedPass(once)
-    val results = (p1.map { case (k, v) => k -> math.min(v, p2(k)) } ++ p3)
+    // a query that failed in either repeated pass counts as failed
+    val timed = p1.filter { case (k, _) => !failed.contains(k) }
+    val results = (timed.map { case (k, v) => k -> math.min(v, p2(k)) } ++ p3)
       .toSeq.sortBy(_._1)
     // every raw rep, keyed per query — so a future window adjudicates
     // itself (warm-vs-cold and noise-vs-regression) without a judge
     // cross-referencing two committed maps (round-16 verdict #1c)
-    val reps = (p1.map { case (k, v) => k -> Seq(v, p2(k)) } ++
+    val reps = (timed.map { case (k, v) => k -> Seq(v, p2(k)) } ++
         p3.map { case (k, v) => k -> Seq(v) })
       .toSeq.sortBy(_._1)
       .map { case (k, vs) => s"\"" + k + "\":" + vs.mkString("[", ",", "]") }
@@ -148,8 +145,10 @@ object Bench {
     // CWD is the repo root under sbt; SPARK_GRAFT_BENCH_OUT overrides.
     // The file additionally carries the per-rep raw timings ("reps") —
     // stdout keeps the driver's expected shape.
+    val fails = failed.toSeq.sortBy(_._1)
+      .map { case (k, c) => s"\"" + k + "\":\"" + c + "\"" }.mkString("{", ",", "}")
     val fileLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","families":$fams,"queries":$qs,"reps":$reps,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","families":$fams,"queries":$qs,"reps":$reps,"failed":$fails,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_times.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fileLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

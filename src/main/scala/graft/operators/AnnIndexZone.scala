@@ -41,44 +41,24 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndexZone {
 
-  /** Create an empty zone sized for `expectedCount` vectors. Returns
-    * the plane count. Idempotent overwrite for an EMPTY or
-    * same-geometry zone; refuses to change the plane count or dims of
-    * a zone that already holds index rows — rewriting meta under a
-    * populated index would orphan every stored bucket (probes would
-    * hash with new planes against rows hashed with the old ones) and
-    * return silently WRONG top-k results. A capacity change on a
-    * populated zone is a rebuild: drop the zone and re-index.
+  private[operators] def zone(zoneDir: String) =
+    Zone.at("AnnIndexZone", zoneDir, rows = "index", id = "vec_id", cluster = "bucket")
+
+  /** Create an empty zone sized for `expectedCount` vectors (the
+    * [[Zone.create]] guard over `(n_planes, dims)`: probes hashing with
+    * new planes against rows hashed with the old ones would return
+    * silently WRONG top-k results). Returns the plane count.
     */
   def create(spark: SparkSession, zoneDir: String, expectedCount: Long,
       dims: Int = 64, targetBucketSize: Long = 32,
       minPlanes: Int = 4, maxPlanes: Int = 24): Int = {
     val planes = Similarity.derivePlanes(
       expectedCount, targetBucketSize, minPlanes, maxPlanes)
-    val hasMeta = graft.core.Fs.exists(spark, s"$zoneDir/meta")
-    if (graft.core.Fs.exists(spark, s"$zoneDir/index")) {
-      // index rows with NO meta is a corrupt zone (e.g. a crash inside
-      // meta's delete-then-write overwrite): creating over it would
-      // stamp a fresh plane count onto rows hashed with an unknown one
-      // — the silent-wrong-results path this guard exists to close, so
-      // it must fail just as loudly as a geometry change
-      require(graft.core.Fs.exists(spark, s"$zoneDir/meta"),
-        s"AnnIndexZone $zoneDir holds index rows but no meta (corrupt " +
-          "zone — likely an interrupted meta write); drop the zone and " +
-          "re-index rather than re-creating over rows of unknown geometry")
+    zone(zoneDir).create(spark) {
       val (oldPlanes, oldDims) = meta(spark, zoneDir)
-      require(oldPlanes == planes && oldDims == dims,
-        s"AnnIndexZone $zoneDir already holds index rows under " +
-          s"planes=$oldPlanes dims=$oldDims; re-creating with " +
-          s"planes=$planes dims=$dims would orphan every stored bucket " +
-          "— drop the zone and re-index to change its geometry")
-    }
-    // Same-geometry re-create is a NO-OP: overwriting meta
-    // (delete-then-write) opens a crash window leaving a populated
-    // zone rows-without-meta — exactly the corrupt state the guard
-    // above refuses. Write only when meta is absent (or an EMPTY zone
-    // changes geometry).
-    if (!(hasMeta && meta(spark, zoneDir) == ((planes, dims)))) {
+      if ((oldPlanes, oldDims) == ((planes, dims))) None
+      else Some((s"planes=$oldPlanes dims=$oldDims", s"planes=$planes dims=$dims"))
+    } {
       import spark.implicits._
       Seq((planes, dims)).toDF("n_planes", "dims")
         .write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
@@ -115,79 +95,32 @@ object AnnIndexZone {
       dims: Int = 64, targetBucketSize: Long = 32,
       minPlanes: Int = 4, maxPlanes: Int = 24,
       knownCount: Option[Long] = None): Int = {
-    // create() is idempotent on a same-geometry zone but appendIndex is
-    // not — a repeated build() would silently re-append the whole corpus
-    // (results stay correct through the read side's semi-join, but the
-    // index doubles on every call). Full-rebuild callers drop the zone
-    // first; delta callers use appendIndex.
-    require(!graft.core.Fs.exists(spark, s"$zoneDir/index"),
-      s"AnnIndexZone $zoneDir already holds index rows; build() would " +
-        "re-append the entire corpus on top of them — use appendIndex " +
-        "for deltas, or drop the zone first for a full rebuild")
+    zone(zoneDir).requireEmpty(spark, appendWith = "appendIndex")
     val planes = create(spark, zoneDir, knownCount.getOrElse(emb.count()),
       dims, targetBucketSize, minPlanes, maxPlanes)
     appendIndex(emb, zoneDir)
     planes
   }
 
-  /** Record vector deletions against the zone: tombstone rows under
-    * `zoneDir/tombstones`, honored by [[topK]] and [[incrementalPairs]]
-    * (a deleted vector's stored bucket rows can no longer produce
-    * candidates) and folded in for good by [[optimize]]. Append-only,
-    * replay-stable (duplicate rows change nothing — readers anti-join).
-    * `ids` must expose `vec_id`.
+  /** Tombstone vectors ([[Zone.delete]]), honored by [[topK]] and
+    * [[incrementalPairs]]. `ids` must expose `vec_id`.
     */
-  def delete(ids: DataFrame, zoneDir: String): Unit =
-    ids.select(col("vec_id")).write
-      .mode(SaveMode.Append).parquet(s"$zoneDir/tombstones")
+  def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
-  /** Drop tombstoned vectors' rows from an index frame (deletes-sized
-    * anti-join; compaction folds the list to zero).
-    */
-  private def liveIndex(spark: SparkSession, zoneDir: String,
-      index: DataFrame): DataFrame =
-    if (!graft.core.Fs.hasParquetFiles(spark, s"$zoneDir/tombstones")) index
-    else index.join(
-      spark.read.parquet(s"$zoneDir/tombstones")
-        .select(col("vec_id")).distinct(),
-      Seq("vec_id"), "left_anti")
-
-  /** OPTIMIZE the index zone: rewrite the append-only index
-    * bucket-clustered ([[ShardedWriter.compactParquet]]'s balanced
-    * range shards + crash-safe rename publish — each file then covers a
-    * tight, disjoint bucket span), fold pending TOMBSTONES in for good
-    * (keyed deletes at compaction; the list is then cleared — a crash
-    * between publish and clear re-applies them, idempotent), and
-    * persist per-file bucket min/max stats. After this, [[topK]] plans
-    * its probe's file subset from the #files-row stats table and opens
-    * ~1 file per probe instead of scanning the index — the maintenance
-    * pass a deployment schedules exactly like c3's lake OPTIMIZE.
+  /** OPTIMIZE the index zone ([[Zone.optimize]]): the index is rewritten
+    * bucket-clustered (each file then covers a tight, disjoint bucket
+    * span) and per-file bucket min/max stats are persisted. After this,
+    * [[topK]] plans its probe's file subset from the #files-row stats
+    * table and opens ~1 file per probe instead of scanning the index.
     * Later [[appendIndex]] deltas must be re-covered with
     * `ZoneMap.appendStats` (the staleness guard fails the probe loudly
     * otherwise — never a silent partial read).
     * Returns (filesBefore, filesAfter).
     */
   def optimize(spark: SparkSession, zoneDir: String,
-      targetRowsPerFile: Long = 4 << 20): (Int, Int) = {
-    // a created-but-never-appended zone has no index dir yet —
-    // compactParquet tolerates that as a (0,0) no-op, and buildStats
-    // must not then crash on the missing path
-    if (!graft.core.Fs.exists(spark, s"$zoneDir/index")) return (0, 0)
-    // tombstone clear is snapshot-scoped (the SignatureZone.optimize
-    // race fix): a tombstone appended during compaction survives to the
-    // next pass instead of being silently dropped
-    val snap = graft.core.Fs.listFilePaths(spark, s"$zoneDir/tombstones")
-    // .distinct(): replayed duplicate (vec_id, bucket) rows are
-    // result-invisible (the probes semi-join / DISTINCT), but without
-    // folding them here the index and its probe cost grow monotonically
-    // with replays — compaction is exactly where they genuinely fold
-    val res = ShardedWriter.compactParquet(
-      spark, s"$zoneDir/index", col("bucket"), targetRowsPerFile,
-      transform = ix => liveIndex(spark, zoneDir, ix).distinct())
-    graft.core.Fs.deleteFilesThenDirIfEmpty(spark, s"$zoneDir/tombstones", snap)
-    ZoneMap.buildStats(spark, s"$zoneDir/index", s"$zoneDir/stats", Seq("bucket"))
-    res
-  }
+      targetRowsPerFile: Long = 4 << 20): (Int, Int) =
+    zone(zoneDir).optimize(spark, targetRowsPerFile, () =>
+      ZoneMap.buildStats(spark, s"$zoneDir/index", s"$zoneDir/stats", Seq("bucket")))
 
   /** Verified near-dup pairs of a DELTA against the stored index AND
     * within itself — the EMBEDDING-side twin of
@@ -197,11 +130,7 @@ object AnnIndexZone {
     *
     *   1. delta bucket assignments under the zone's fixed planes (one
     *      narrow codegen'd projection — delta-only work);
-    *   2. candidates = (stored index ⋈ delta buckets on bucket) ∪
-    *      (delta self-join), pairs oriented (least, greatest) and
-    *      DISTINCT-ed — replayed duplicate index rows and a zone that
-    *      already holds the delta are both absorbed (the SignatureZone
-    *      structural-idempotency argument verbatim);
+    *   2. candidate pairs sharing a bucket ([[Zone.candidatePairs]]);
     *   3. exact cosine verification over candidate VECTORS only
     *      (`corpus` supplies embeddings by vec_id semi-join —
     *      candidate-sized, never history-sized).
@@ -220,38 +149,14 @@ object AnnIndexZone {
     */
   def incrementalPairs(corpus: DataFrame, delta: DataFrame, zoneDir: String,
       minCos: Double, maxZoneVecId: Option[Long] = None): DataFrame = {
-    // maxZoneVecId: the admission layer's self-exclusion threshold (the
-    // SignatureZone.incrementalPairs contract): zone rows at or above
-    // the delta's minimum id are replayed copies of the current batch
-    // and must not generate candidates against it — a pushed-down
-    // scalar filter on the index scan, no-op on a clean zone.
+    // maxZoneVecId: the self-exclusion cut ([[Zone.live]])
     val spark = corpus.sparkSession
     Similarity.ensure(spark)
     val (planes, dims) = meta(spark, zoneDir)
-    // delta buckets feed the zone probe and both internal self-join
-    // sides; tracked persist so the plane projection runs once
-    val db = graft.core.Caches.persistTracked(delta.select(col("vec_id"),
-      Similarity.srpBucket(col("embedding"), planes, dims).as("bucket")))
-    val internal = db.as("a")
-      .hint("shuffle_hash")
-      .join(db.as("b"), col("a.bucket") === col("b.bucket") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-    val cand = graft.core.Caches.persistTracked(
-      (if (graft.core.Fs.exists(spark, s"$zoneDir/index")) {
-        val zi0 = liveIndex(spark, zoneDir, spark.read.parquet(s"$zoneDir/index"))
-        val zi = maxZoneVecId.fold(zi0)(m => zi0.filter(col("vec_id") < m))
-        // both sides scale with data — shuffled hash, delta builds
-        val cross = zi.as("z")
-          .join(db.as("d").hint("shuffle_hash"),
-            col("z.bucket") === col("d.bucket") &&
-            col("z.vec_id") =!= col("d.vec_id"))
-          .select(least(col("z.vec_id"), col("d.vec_id")).as("vec_a"),
-            greatest(col("z.vec_id"), col("d.vec_id")).as("vec_b"))
-        cross.union(internal)
-      } else internal).distinct())
-    val candIds = cand.select(col("vec_a").as("vec_id"))
-      .union(cand.select(col("vec_b").as("vec_id"))).distinct()
+    val (cand, candIds) = zone(zoneDir).candidatePairs(
+      delta.select(col("vec_id"),
+        Similarity.srpBucket(col("embedding"), planes, dims).as("bucket")),
+      zone(zoneDir).liveRows(spark, maxZoneVecId), Seq("bucket"), "vec_a", "vec_b")
     // exact verification touches candidate vectors only
     val emb = graft.core.Caches.persistTracked(
       corpus.join(candIds, Seq("vec_id"), "left_semi")
@@ -315,17 +220,13 @@ object AnnIndexZone {
       return corpus.limit(0).crossJoin(broadcast(q1))
         .select(col("vec_id"),
           Similarity.cosine(col("embedding"), col("qvec")).as("cos_sim"))
-    val index = liveIndex(spark, zoneDir,
-      if (graft.core.Fs.exists(spark, statsDir)) {
+    val index = zone(zoneDir).live(
+      ZoneMap.statsPlannedRead(spark, indexDir, statsDir, "bucket", {
         val qb = q1
           .select(Similarity.srpBucket(col("qvec"), planes, dims).as("qb"))
           .head().getLong(0)
-        val pbs = (0 until planes).map(p => qb ^ (1L << p)) :+ qb
-        val files = ZoneMap.statsPlanFilesAnyOf(spark, indexDir, statsDir,
-          "bucket", pbs)
-        if (files.isEmpty) spark.read.parquet(indexDir).filter(lit(false))
-        else spark.read.parquet(files: _*)
-      } else spark.read.parquet(indexDir))
+        (0 until planes).map(p => qb ^ (1L << p)) :+ qb
+      }))
     val probes = q1
       .withColumn("qbucket", Similarity.srpBucket(col("qvec"), planes, dims))
       .select(col("qvec"), explode(array(

@@ -32,58 +32,35 @@ object Dedup {
     * documents still carry, because their rows were folded away).
     * Readers min-aggregate after dropping tombstoned docs, so
     * per-batch splits, replays, and duplicate rows are all absorbed
-    * (min is a semilattice). Tombstones live in `<dir>.tombstones`
-    * (`doc_id` rows, append-only — a delete is itself just an ingest
-    * event); [[optimizeMd5Zone]] folds them in and clears them.
+    * (min is a semilattice). Tombstones (`doc_id` rows) live in the
+    * sibling `<dir>.tombstones`; deletes, the live read and OPTIMIZE
+    * are the shared [[Zone]] lifecycle (the zone has no meta: md5 is
+    * its whole geometry).
     */
   def md5ZoneAppend(delta: DataFrame, text: Column, idCol: Column,
       dir: String): Unit =
     delta.select(md5(text).as("text_md5"), idCol.as("keeper_id"))
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(dir)
 
-  /** Record document deletions against an md5 zone. Replay-stable:
-    * duplicate tombstone rows change nothing (the reader anti-joins).
-    */
-  def md5ZoneDelete(ids: DataFrame, dir: String): Unit =
-    ids.select(col("doc_id")).write
-      .mode(org.apache.spark.sql.SaveMode.Append).parquet(dir + ".tombstones")
+  private[operators] def md5Zone(dir: String) = Zone("md5 zone", dir, metaDir = "",
+    rowsDir = dir, tombstonesDir = dir + ".tombstones", id = "keeper_id",
+    cluster = "text_md5", tombstoneId = "doc_id")
 
-  /** The zone's live rows: stored rows minus tombstoned documents. The
-    * tombstone list is deletes-sized (small next to the zone; Catalyst
-    * broadcasts it when stats allow), and compaction folds it to zero.
-    */
+  /** Record document deletions against an md5 zone ([[Zone.delete]]). */
+  def md5ZoneDelete(ids: DataFrame, dir: String): Unit = md5Zone(dir).delete(ids)
+
+  /** The zone's live rows: stored rows minus tombstoned documents. */
   def md5ZoneRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val rows = spark.read.parquet(dir)
-    if (!graft.core.Fs.hasParquetFiles(spark, dir + ".tombstones")) rows
-    else rows.join(
-      spark.read.parquet(dir + ".tombstones")
-        .select(col("doc_id").as("keeper_id")).distinct(),
-      Seq("keeper_id"), "left_anti")
-  }
+      dir: String): DataFrame = md5Zone(dir).live(spark.read.parquet(dir))
 
-  /** OPTIMIZE an append-only md5 keeper zone: fold the per-batch file
-    * storm, replayed duplicate rows, AND pending tombstones (keyed
-    * deletes at compaction — deleted docs' rows are dropped for good
-    * and the tombstone list cleared), rewritten md5-clustered via
-    * [[ShardedWriter.compactParquet]]'s crash-safe rename publish.
-    * Result-invisible by construction: readers already DISTINCT-read
-    * minus tombstones, so compacted and uncompacted zones answer
-    * identically (SignatureZoneSpec pins it). Crash between publish
-    * and tombstone clear re-applies the same tombstones next run —
-    * idempotent. Returns (filesBefore, filesAfter).
+  /** OPTIMIZE an append-only md5 keeper zone ([[Zone.optimize]]),
+    * rewritten md5-clustered. Result-invisible: compacted and
+    * uncompacted zones answer identically (SignatureZoneSpec pins it).
+    * Returns (filesBefore, filesAfter).
     */
   def optimizeMd5Zone(spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetRowsPerFile: Long = 4 << 20): (Int, Int) = {
-    // snapshot-scoped tombstone clear (the SignatureZone.optimize race
-    // fix): a tombstone appended by the ingest path during compaction
-    // lands outside the snapshot and survives to the next pass
-    val snap = graft.core.Fs.listFilePaths(spark, dir + ".tombstones")
-    val res = ShardedWriter.compactParquet(spark, dir, col("text_md5"),
-      targetRowsPerFile, transform = _ => md5ZoneRead(spark, dir).distinct())
-    graft.core.Fs.deleteFilesThenDirIfEmpty(spark, dir + ".tombstones", snap)
-    res
-  }
+      targetRowsPerFile: Long = 4 << 20): (Int, Int) =
+    md5Zone(dir).optimize(spark, targetRowsPerFile)
 
   /** Distinct token n-gram shingles per document: (id, shingle) rows.
     * `array_distinct` before the explode keeps the shuffle volume at
@@ -217,7 +194,6 @@ object Dedup {
     // in). Tracked: drivers release via graft.core.Caches after the
     // consuming action.
     val sh = graft.core.Caches.persistTracked(maxDocFreq.fold(sh0)(capShingles(sh0, _)))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val a = sh.as("a")
     val b = sh.as("b")
     // Both sides are corpus-sized: force a shuffled hash join — a
@@ -228,6 +204,15 @@ object Dedup {
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_common"))
+    withJaccard(common, sh, minJaccard)
+  }
+
+  /** `common` pairs `(doc_a, doc_b, n_common)` with their Jaccard over
+    * the `(doc_id, shingle)` table `sh`, kept at `jaccard >= minJaccard`.
+    */
+  private def withJaccard(common: DataFrame, sh: DataFrame,
+      minJaccard: Double): DataFrame = {
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     common
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
@@ -313,12 +298,19 @@ object Dedup {
     // shuffle.
     val sh = graft.core.Caches.persistTracked(
       capShingles(shingles(df, idCol, text, n), maxDocFreq))
-    val cand = lshCandidatePairs(minhash(sh, k), k, bands)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    // Attach both docs' shingle sets to each candidate pair; the shingle
-    // equi-key makes the intersection a join condition, the count the
-    // intersection size. Candidate side is the small one but still scales
-    // with the corpus — shuffled hash joins on doc_id.
+    verifyJaccard(lshCandidatePairs(minhash(sh, k), k, bands), sh, minJaccard)
+  }
+
+  /** Exact-Jaccard verification of candidate pairs `(doc_a, doc_b)` over
+    * their `(doc_id, shingle)` table `sh` — shared by [[lshVerifiedPairs]]
+    * and [[SignatureZone.incrementalPairs]]. Both docs' shingle sets
+    * attach to each pair; the shingle equi-key makes the intersection a
+    * join condition, the count the intersection size. The candidate
+    * side is the small one but still scales with the corpus — shuffled
+    * hash joins on doc_id. Output: (doc_a, doc_b, n_common, jaccard).
+    */
+  private[operators] def verifyJaccard(cand: DataFrame, sh: DataFrame,
+      minJaccard: Double): DataFrame = {
     val common = cand
       .hint("shuffle_hash")
       .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
@@ -327,12 +319,7 @@ object Dedup {
         col("doc_b") === col("sb.doc_id") && col("sa.shingle") === col("sb.shingle"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= minJaccard)
+    withJaccard(common, sh, minJaccard)
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
   }
 

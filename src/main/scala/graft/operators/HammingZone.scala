@@ -34,10 +34,8 @@ import org.apache.spark.sql.functions._
   * `EventStream.streamHammingZone` maintains the zone from a
   * checkpointed stream); replay idempotency is STRUCTURAL (the read
   * side DISTINCTs candidates and the signature lookup, so duplicate
-  * rows from a replayed batch change nothing). Deletes are tombstones
-  * ([[delete]]), folded for good by [[optimize]] with the
-  * snapshot-scoped clear (a tombstone appended during compaction
-  * survives to the next pass).
+  * rows from a replayed batch change nothing). Deletes, the live-rows
+  * read and OPTIMIZE are the shared [[Zone]] lifecycle.
   *
   * Scale shape of [[incrementalPairs]]: chunking the delta is a narrow
   * codegen'd projection; the zone probe is one (c, v)-keyed shuffled
@@ -49,37 +47,27 @@ import org.apache.spark.sql.functions._
   */
 object HammingZone {
 
-  /** Create an empty zone with fixed pigeonhole geometry. Idempotent
-    * for an empty or same-geometry zone; refuses to change geometry
-    * under stored rows (chunk boundaries of stored rows would no longer
-    * align with probes — the silent-miss path every zone guard closes).
+  private[operators] def zone(zoneDir: String) =
+    Zone.at("HammingZone", zoneDir, rows = "rows", id = "doc_id", cluster = "v")
+
+  /** Create an empty zone with fixed pigeonhole geometry (the
+    * [[Zone.create]] guard: chunk boundaries of stored rows must align
+    * with every probe's).
     */
   def create(spark: SparkSession, zoneDir: String,
       bits: Int = 60, maxHamming: Int = 5, chunks: Int = 6): Unit = {
     require(chunks > maxHamming, "pigeonhole guarantee needs chunks > maxHamming")
     require(bits % chunks == 0, s"chunks must divide the $bits-bit signature")
-    val hasMeta = graft.core.Fs.exists(spark, s"$zoneDir/meta")
-    if (graft.core.Fs.exists(spark, s"$zoneDir/rows")) {
-      require(hasMeta,
-        s"HammingZone $zoneDir holds rows but no meta (corrupt zone — " +
-          "likely an interrupted meta write); drop the zone and re-index")
+    zone(zoneDir).create(spark) {
       val (ob, oh, oc) = meta(spark, zoneDir)
-      require(ob == bits && oh == maxHamming && oc == chunks,
-        s"HammingZone $zoneDir already holds rows under bits=$ob " +
-          s"max_hamming=$oh chunks=$oc; re-creating with bits=$bits " +
-          s"max_hamming=$maxHamming chunks=$chunks would orphan every " +
-          "stored chunk — drop the zone and re-index to change geometry")
+      if ((ob, oh, oc) == ((bits, maxHamming, chunks))) None
+      else Some((s"bits=$ob max_hamming=$oh chunks=$oc",
+        s"bits=$bits max_hamming=$maxHamming chunks=$chunks"))
+    } {
+      import spark.implicits._
+      Seq((bits, maxHamming, chunks)).toDF("bits", "max_hamming", "chunks")
+        .write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
     }
-    // Same-geometry re-create of an existing zone is a NO-OP, not a
-    // rewrite: overwriting meta (delete-then-write) opens a crash
-    // window in which a populated zone holds rows-without-meta — the
-    // exact state the corrupt-zone guard above then refuses as
-    // unrecoverable. Write meta only when it is absent (or when an
-    // EMPTY zone legitimately changes geometry).
-    if (hasMeta && meta(spark, zoneDir) == ((bits, maxHamming, chunks))) return
-    import spark.implicits._
-    Seq((bits, maxHamming, chunks)).toDF("bits", "max_hamming", "chunks")
-      .write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
   }
 
   /** Zone meta — a driver-side 1-row read (the watermark altitude),
@@ -119,63 +107,33 @@ object HammingZone {
   }
 
   /** Create + index an existing corpus in one call (the batch-backfill
-    * path). Refuses a populated zone — create is idempotent, append is
-    * not (the [[SignatureZone.build]] contract).
+    * path); refuses a populated zone ([[Zone.requireEmpty]]).
     */
   def build(spark: SparkSession, sigs: DataFrame, zoneDir: String,
       bits: Int = 60, maxHamming: Int = 5, chunks: Int = 6): Unit = {
-    require(!graft.core.Fs.exists(spark, s"$zoneDir/rows"),
-      s"HammingZone $zoneDir already holds rows; build() would re-append " +
-        "the entire corpus — use append for deltas, or drop the zone first")
+    zone(zoneDir).requireEmpty(spark)
     create(spark, zoneDir, bits, maxHamming, chunks)
     append(sigs, zoneDir)
   }
 
-  /** Record document deletions: tombstone rows, honored by
-    * [[incrementalPairs]] and folded for good by [[optimize]].
-    * Append-only, replay-stable. `ids` must expose `doc_id`.
+  /** Tombstone documents ([[Zone.delete]]), honored by
+    * [[incrementalPairs]]. `ids` must expose `doc_id`.
     */
-  def delete(ids: DataFrame, zoneDir: String): Unit =
-    ids.select(col("doc_id")).write
-      .mode(SaveMode.Append).parquet(s"$zoneDir/tombstones")
+  def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
-  private def liveRows(spark: SparkSession, zoneDir: String,
-      rows: DataFrame): DataFrame =
-    if (!graft.core.Fs.hasParquetFiles(spark, s"$zoneDir/tombstones")) rows
-    else rows.join(
-      spark.read.parquet(s"$zoneDir/tombstones")
-        .select(col("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-
-  /** OPTIMIZE: fold replayed duplicate chunk rows (DISTINCT) and
-    * pending tombstones (snapshot-scoped clear — a tombstone appended
-    * during compaction survives to the next pass), rewritten
-    * chunk-value-clustered via [[ShardedWriter.compactParquet]]'s
-    * crash-safe rename publish. Result-invisible: the read side
-    * DISTINCTs and anti-joins already. Returns (filesBefore,
-    * filesAfter).
+  /** OPTIMIZE ([[Zone.optimize]]), rewritten chunk-value-clustered.
+    * Returns (filesBefore, filesAfter).
     */
   def optimize(spark: SparkSession, zoneDir: String,
-      targetRowsPerFile: Long = 4 << 20): (Int, Int) = {
-    if (!graft.core.Fs.exists(spark, s"$zoneDir/rows")) return (0, 0)
-    val snap = graft.core.Fs.listFilePaths(spark, s"$zoneDir/tombstones")
-    val res = ShardedWriter.compactParquet(spark, s"$zoneDir/rows", col("v"),
-      targetRowsPerFile,
-      transform = r => liveRows(spark, zoneDir, r).distinct())
-    graft.core.Fs.deleteFilesThenDirIfEmpty(spark, s"$zoneDir/tombstones", snap)
-    res
-  }
+      targetRowsPerFile: Long = 4 << 20): (Int, Int) =
+    zone(zoneDir).optimize(spark, targetRowsPerFile)
 
   /** Verified near-dup pairs of a DELTA against the stored zone AND
     * within itself — [[Dedup.hammingPairs]]'s incremental posture:
     *
     *   1. delta chunk rows under the zone's geometry (delta-only,
     *      narrow);
-    *   2. candidates = (stored chunks ⋈ delta chunks on (c, v)) ∪
-    *      (delta self-join), oriented (least, greatest), DISTINCT-ed —
-    *      replayed rows and a zone already holding the delta are both
-    *      absorbed (the [[SignatureZone.incrementalPairs]] structural-
-    *      idempotency argument);
+    *   2. candidate pairs sharing a chunk (c, v) ([[Zone.candidatePairs]]);
     *   3. exact Hamming verification from STORED signatures — history
     *      media is never re-decoded; candidate docs' sigs arrive via
     *      semi-join (candidate-sized, never history-sized).
@@ -187,47 +145,18 @@ object HammingZone {
     * and `sig`. Output: (doc_a, doc_b, hamming), hamming ≤ the zone's
     * max_hamming, at least one delta member per pair.
     *
-    * `maxZoneDocId`: the admission layer's SELF-EXCLUSION threshold
-    * (the [[SignatureZone.incrementalPairs]] contract verbatim) —
-    * stored rows at or above it are ignored, so a checkpoint-replayed
-    * batch whose own chunk rows already landed decides as if they had
-    * not. A pushed-down scalar filter on the zone scan; a no-op on
-    * zones covering strictly smaller ids.
+    * `maxZoneDocId`: the self-exclusion cut ([[Zone.live]]) — a
+    * checkpoint-replayed batch whose own chunk rows already landed
+    * decides as if they had not.
     */
   def incrementalPairs(delta: DataFrame, zoneDir: String,
       maxZoneDocId: Option[Long] = None): DataFrame = {
     val spark = delta.sparkSession
     val (bits, maxH, chunks) = meta(spark, zoneDir)
-    // delta chunks feed the zone probe AND both internal self-join
-    // sides; tracked persist so the chunk projection runs once
-    val dc = graft.core.Caches.persistTracked(
-      chunkRows(delta.select(col("doc_id"), col("sig")), bits, chunks))
-    val internal = dc.as("a")
-      .hint("shuffle_hash")
-      .join(dc.as("b"), col("a.c") === col("b.c") &&
-        col("a.v") === col("b.v") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val zoneLive =
-      if (graft.core.Fs.exists(spark, s"$zoneDir/rows"))
-        Some(maxZoneDocId.fold(
-          liveRows(spark, zoneDir, spark.read.parquet(s"$zoneDir/rows")))(m =>
-          liveRows(spark, zoneDir, spark.read.parquet(s"$zoneDir/rows"))
-            .filter(col("doc_id") < m)))
-      else None
-    val cand = graft.core.Caches.persistTracked(
-      zoneLive.fold(internal) { zc =>
-        // both sides scale with data: shuffled hash, the DELTA side
-        // builds (per-batch-sized hash map, never a history-sized one)
-        val cross = zc.as("z")
-          .join(dc.as("d").hint("shuffle_hash"),
-            col("z.c") === col("d.c") && col("z.v") === col("d.v") &&
-            col("z.doc_id") =!= col("d.doc_id"))
-          .select(least(col("z.doc_id"), col("d.doc_id")).as("doc_a"),
-            greatest(col("z.doc_id"), col("d.doc_id")).as("doc_b"))
-        cross.union(internal)
-      }.distinct())
-    val candIds = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
+    val zoneLive = zone(zoneDir).liveRows(spark, maxZoneDocId)
+    val (cand, candIds) = zone(zoneDir).candidatePairs(
+      chunkRows(delta.select(col("doc_id"), col("sig")), bits, chunks),
+      zoneLive, Seq("c", "v"), "doc_a", "doc_b")
     // verification signatures: the delta's own plus the ZONE's stored
     // ones for candidate docs only — DISTINCT absorbs both the 1-row-
     // per-chunk duplication and replayed appends

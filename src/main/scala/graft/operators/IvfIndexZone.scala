@@ -31,8 +31,8 @@ import graft.functions.VectorExpressions
   *     bit-deterministic and a SQL oracle replays it exactly.
   *   - `zoneDir/lists`: `(vec_id, cid)` rows, append-only — the
   *     inverted lists, row-oriented so maintenance is delta-sized.
-  *   - `zoneDir/tombstones` / `zoneDir/stats`: deletes and per-file cid
-  *     min/max, exactly the [[AnnIndexZone]] contracts.
+  *   - `zoneDir/tombstones` / `zoneDir/stats`: deletes ([[Zone]]) and
+  *     the per-file cid min/max that [[optimize]] persists.
   *
   * Maintenance is DELTA-ONLY: [[append]] assigns a batch against the
   * stored centroids as k literal-centroid codegen'd distance folds
@@ -64,30 +64,22 @@ import graft.functions.VectorExpressions
   */
 object IvfIndexZone {
 
-  /** Create an empty zone under FIXED fitted centroids. Idempotent for
-    * a same-centroids re-create (true no-op — no meta rewrite crash
-    * window); refuses different centroids over stored lists.
+  private[operators] def zone(zoneDir: String) = Zone.at("IvfIndexZone", zoneDir,
+    rows = "lists", id = "vec_id", cluster = "cid", meta = "centroids")
+
+  /** Create an empty zone under FIXED fitted centroids (the
+    * [[Zone.create]] guard: a different quantizer over stored lists is
+    * refused).
     */
   def create(spark: SparkSession, zoneDir: String,
       cents: Seq[Array[Long]]): Unit = {
     require(cents.nonEmpty, "IVF zone needs at least one centroid")
-    val hasCents = graft.core.Fs.exists(spark, s"$zoneDir/centroids")
-    val same = hasCents &&
-      Similarity.loadCentroids(spark, s"$zoneDir/centroids")
-        .map(_.toSeq) == cents.map(_.toSeq)
-    if (graft.core.Fs.exists(spark, s"$zoneDir/lists")) {
-      require(hasCents,
-        s"IvfIndexZone $zoneDir holds list rows but no centroids " +
-          "(corrupt zone — likely an interrupted create); drop the zone " +
-          "and re-index rather than stamping a quantizer onto rows of " +
-          "unknown geometry")
-      require(same,
-        s"IvfIndexZone $zoneDir already holds list rows under a " +
-          "different fitted quantizer; re-creating would orphan every " +
-          "stored list — rebuild the zone (ZoneRebuild) to re-fit")
+    zone(zoneDir).create(spark) {
+      if (centroids(spark, zoneDir).map(_.toSeq) == cents.map(_.toSeq)) None
+      else Some(("a different fitted quantizer", "these centroids"))
+    } {
+      Similarity.saveCentroids(spark, cents, s"$zoneDir/centroids")
     }
-    if (same) return
-    Similarity.saveCentroids(spark, cents, s"$zoneDir/centroids")
   }
 
   /** The stored coarse quantizer — a k·dims driver read (the watermark
@@ -109,55 +101,30 @@ object IvfIndexZone {
   }
 
   /** Fit + create + index an existing corpus in one call (the
-    * batch-backfill path). Refuses a populated zone — create is
-    * idempotent, append is not (the [[AnnIndexZone.build]] contract).
+    * batch-backfill path); refuses a populated zone
+    * ([[Zone.requireEmpty]]).
     */
   def build(spark: SparkSession, emb: DataFrame, zoneDir: String,
       k: Int = 8, iters: Int = 3): Seq[Array[Long]] = {
-    require(!graft.core.Fs.exists(spark, s"$zoneDir/lists"),
-      s"IvfIndexZone $zoneDir already holds list rows; build() would " +
-        "re-append the entire corpus — use append for deltas, or drop " +
-        "the zone first for a full rebuild")
+    zone(zoneDir).requireEmpty(spark)
     val cents = Similarity.kmeansFit(emb, k, iters)
     create(spark, zoneDir, cents)
     append(emb, zoneDir)
     cents
   }
 
-  /** Tombstone vector deletions (append-only, replay-stable; readers
-    * anti-join, [[optimize]] folds them for good). `ids` must expose
-    * `vec_id`.
-    */
-  def delete(ids: DataFrame, zoneDir: String): Unit =
-    ids.select(col("vec_id")).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$zoneDir/tombstones")
+  /** Tombstone vectors ([[Zone.delete]]). `ids` must expose `vec_id`. */
+  def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
-  private def liveLists(spark: SparkSession, zoneDir: String,
-      lists: DataFrame): DataFrame =
-    if (!graft.core.Fs.hasParquetFiles(spark, s"$zoneDir/tombstones")) lists
-    else lists.join(
-      spark.read.parquet(s"$zoneDir/tombstones")
-        .select(col("vec_id")).distinct(),
-      Seq("vec_id"), "left_anti")
-
-  /** OPTIMIZE: rewrite the append-only lists cid-clustered (crash-safe
-    * rename publish), fold tombstones and replayed duplicates for good,
-    * and persist per-file cid min/max stats — after which [[topK]]
+  /** OPTIMIZE ([[Zone.optimize]]): the lists rewritten cid-clustered,
+    * then per-file cid min/max stats persisted — after which [[topK]]
     * opens ~the files holding probed cells instead of the table.
     * Returns (filesBefore, filesAfter).
     */
   def optimize(spark: SparkSession, zoneDir: String,
-      targetRowsPerFile: Long = 4 << 20): (Int, Int) = {
-    if (!graft.core.Fs.exists(spark, s"$zoneDir/lists")) return (0, 0)
-    val snap = graft.core.Fs.listFilePaths(spark, s"$zoneDir/tombstones")
-    val res = ShardedWriter.compactParquet(
-      spark, s"$zoneDir/lists", col("cid"), targetRowsPerFile,
-      transform = ls => liveLists(spark, zoneDir, ls).distinct())
-    graft.core.Fs.deleteFilesThenDirIfEmpty(spark, s"$zoneDir/tombstones", snap)
-    ZoneMap.buildStats(spark, s"$zoneDir/lists", s"$zoneDir/stats", Seq("cid"))
-    res
-  }
+      targetRowsPerFile: Long = 4 << 20): (Int, Int) =
+    zone(zoneDir).optimize(spark, targetRowsPerFile, () =>
+      ZoneMap.buildStats(spark, s"$zoneDir/lists", s"$zoneDir/stats", Seq("cid")))
 
   /** Per-row probe cells under literal centroids: sort the k
     * (dist, cid) structs lexicographically — (dist asc, cid asc), the
@@ -174,15 +141,6 @@ object IvfIndexZone {
     slice(array_sort(scored), 1, nprobe)
   }
 
-  /** ANN top-k for a QUERY FRAME `(q_id, qvec)` against the stored
-    * zone: each query probes its `nprobe` nearest cells, exact cosine
-    * re-ranks the probed cells' members, top-k per query by
-    * (cos_sim desc, vec_id). Output `(q_id, vec_id, cos_sim, nn_rank)`.
-    *
-    * `nprobe = k` (all cells probed) is EXACT brute force; smaller
-    * `nprobe` trades the boundary-cell recall band for reading only
-    * nprobe/k of the corpus — the IVF contract, spec-pinned.
-    */
   /** The probe + candidate stage shared by [[topK]] and the IVF-PQ
     * composition ([[PqZone.ivfAdcTopK]]): DISTINCT `(q_id, vec_id)`
     * candidates — each query's probed cells' live members. Returns an
@@ -211,15 +169,9 @@ object IvfIndexZone {
     // matter how many queries ride the batch (cells, not queries, are
     // the metadata key), so the planning collect is bounded by the
     // quantizer size — the watermark altitude
-    val lists = liveLists(spark, zoneDir,
-      if (graft.core.Fs.exists(spark, statsDir)) {
-        val cids = probes.select(col("cid")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        val files = ZoneMap.statsPlanFilesAnyOf(spark, listsDir, statsDir,
-          "cid", cids)
-        if (files.isEmpty) spark.read.parquet(listsDir).filter(lit(false))
-        else spark.read.parquet(files: _*)
-      } else spark.read.parquet(listsDir))
+    val lists = zone(zoneDir).live(
+      ZoneMap.statsPlannedRead(spark, listsDir, statsDir, "cid",
+        probes.select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq))
     // candidates: one cid-keyed join, probe side broadcast (nq·nprobe
     // rows); DISTINCT absorbs replayed duplicate list rows
     lists
@@ -227,22 +179,42 @@ object IvfIndexZone {
       .select(col("q_id"), col("vec_id")).distinct()
   }
 
+  /** ANN top-k for a QUERY FRAME `(q_id, qvec)` against the stored
+    * zone: each query probes its `nprobe` nearest cells, exact cosine
+    * re-ranks the probed cells' members, top-k per query by
+    * (cos_sim desc, vec_id). Output `(q_id, vec_id, cos_sim, nn_rank)`.
+    *
+    * `nprobe = k` (all cells probed) is EXACT brute force; smaller
+    * `nprobe` trades the boundary-cell recall band for reading only
+    * nprobe/k of the corpus — the IVF contract, spec-pinned.
+    */
   def topK(corpus: DataFrame, queries: DataFrame, zoneDir: String,
       k: Int, nprobe: Int): DataFrame = {
     val cand = candidateIds(queries, zoneDir, nprobe)
     // exact cosine over candidate vectors only: corpus streams through
-    // one vec_id-keyed shuffled-hash join (candidates build), then the
-    // tiny query frame broadcasts back in by q_id
-    val scored = corpus.select(col("vec_id"), col("embedding"))
+    // one vec_id-keyed shuffled-hash join (candidates build)
+    cosineTopK(corpus.select(col("vec_id"), col("embedding"))
       .hint("shuffle_hash")
-      .join(cand, Seq("vec_id"))
+      .join(cand, Seq("vec_id")), queries, k)
+  }
+
+  /** Exact-cosine top-k of candidate rows `(vec_id, embedding, q_id)`:
+    * the tiny query frame broadcasts in by q_id. Output
+    * `(q_id, vec_id, cos_sim, nn_rank)`.
+    */
+  private[operators] def cosineTopK(cand: DataFrame, queries: DataFrame,
+      k: Int): DataFrame =
+    rank(cand
       .join(broadcast(queries.select(col("q_id"), col("qvec"))), Seq("q_id"))
       .select(col("q_id"), col("vec_id"),
-        Similarity.cosine(col("embedding"), col("qvec")).as("cos_sim"))
-    scored
-      .withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc)).cast("long"))
+        Similarity.cosine(col("embedding"), col("qvec")).as("cos_sim")),
+      col("cos_sim").desc, k)
+
+  /** The per-query top-k by `by` then vec_id, as a window riding the
+    * q_id partitioning; `nn_rank` is 1-based.
+    */
+  private[operators] def rank(scored: DataFrame, by: Column, k: Int): DataFrame =
+    scored.withColumn("nn_rank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(by, col("vec_id").asc)).cast("long"))
       .filter(col("nn_rank") <= k)
-  }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
@@ -84,35 +83,27 @@ object PqZone {
     books.toSeq
   }
 
-  /** Create an empty zone under FIXED codebooks. Idempotent for a
-    * same-codebook re-create (true no-op); refuses different codebooks
-    * over stored codes.
+  private[operators] def zone(zoneDir: String) = Zone.at("PqZone", zoneDir,
+    rows = "codes", id = "vec_id", cluster = "vec_id", meta = "books")
+
+  /** Create an empty zone under FIXED codebooks (the [[Zone.create]]
+    * guard: different codebooks over stored codes are refused).
     */
   def create(spark: SparkSession, zoneDir: String,
       books: Seq[Seq[Array[Long]]]): Unit = {
     require(books.nonEmpty && books.forall(_.nonEmpty),
       "PQ zone needs at least one codebook with at least one code")
-    val hasBooks = graft.core.Fs.exists(spark, s"$zoneDir/books")
-    val same = hasBooks &&
-      loadBooks(spark, zoneDir).map(_.map(_.toSeq)) == books.map(_.map(_.toSeq))
-    if (graft.core.Fs.exists(spark, s"$zoneDir/codes")) {
-      require(hasBooks,
-        s"PqZone $zoneDir holds code rows but no codebooks (corrupt " +
-          "zone — likely an interrupted create); drop the zone and " +
-          "re-encode rather than stamping codebooks onto codes of " +
-          "unknown geometry")
-      require(same,
-        s"PqZone $zoneDir already holds code rows under different " +
-          "codebooks; re-creating would orphan every stored code — " +
-          "rebuild the zone (ZoneRebuild) to re-train")
+    zone(zoneDir).create(spark) {
+      if (loadBooks(spark, zoneDir).map(_.map(_.toSeq)) == books.map(_.map(_.toSeq))) None
+      else Some(("different codebooks", "these codebooks"))
+    } {
+      import spark.implicits._
+      books.zipWithIndex.flatMap { case (book, s) =>
+        book.zipWithIndex.map { case (c, cid) => (s, cid.toLong, c.toSeq) }
+      }.toDF("s", "cid", "centroid")
+        .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$zoneDir/books")
     }
-    if (same) return
-    import spark.implicits._
-    books.zipWithIndex.flatMap { case (book, s) =>
-      book.zipWithIndex.map { case (c, cid) => (s, cid.toLong, c.toSeq) }
-    }.toDF("s", "cid", "centroid")
-      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$zoneDir/books")
   }
 
   /** The stored codebooks — an m·k·dsub driver read (the watermark
@@ -162,34 +153,20 @@ object PqZone {
   }
 
   /** Fit + create + encode an existing corpus (the batch-backfill
-    * path). Refuses a populated zone.
+    * path); refuses a populated zone ([[Zone.requireEmpty]]).
     */
   def build(spark: SparkSession, emb: DataFrame, zoneDir: String,
       m: Int = 4, k: Int = 8, iters: Int = 2,
       dims: Int = 64): Seq[Seq[Array[Long]]] = {
-    require(!graft.core.Fs.exists(spark, s"$zoneDir/codes"),
-      s"PqZone $zoneDir already holds code rows; build() would " +
-        "re-append the entire corpus — use append for deltas, or drop " +
-        "the zone first for a full rebuild")
+    zone(zoneDir).requireEmpty(spark)
     val books = fit(emb, m, k, iters, dims)
     create(spark, zoneDir, books)
     append(emb, zoneDir, dims)
     books
   }
 
-  /** Tombstone vector deletions (append-only, replay-stable). */
-  def delete(ids: DataFrame, zoneDir: String): Unit =
-    ids.select(col("vec_id")).write
-      .mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$zoneDir/tombstones")
-
-  private def liveCodes(spark: SparkSession, zoneDir: String,
-      codes: DataFrame): DataFrame =
-    if (!graft.core.Fs.hasParquetFiles(spark, s"$zoneDir/tombstones")) codes
-    else codes.join(
-      spark.read.parquet(s"$zoneDir/tombstones")
-        .select(col("vec_id")).distinct(),
-      Seq("vec_id"), "left_anti")
+  /** Tombstone vectors ([[Zone.delete]]). `ids` must expose `vec_id`. */
+  def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
   /** The readable code table with replay dedup SKIPPED when provably
     * unnecessary: [[optimize]] stamps the compacted listing's
@@ -209,32 +186,25 @@ object PqZone {
     val clean = graft.core.Fs.hasParquetFiles(spark, marker) &&
       graft.core.MetaReads.row(spark, marker).getString(0) ==
         graft.core.Fs.fingerprint(spark, s"$zoneDir/codes")
-    liveCodes(spark, zoneDir, if (clean) codes else codes.distinct())
+    zone(zoneDir).live(if (clean) codes else codes.distinct())
   }
 
-  /** OPTIMIZE: rewrite the append-only codes vec_id-clustered (tight
-    * per-file id spans for the re-rank point lookups), folding
-    * tombstones and replayed duplicates for good.
+  /** OPTIMIZE ([[Zone.optimize]]): the codes rewritten vec_id-clustered
+    * (tight per-file id spans for the re-rank point lookups), then the
+    * compacted listing stamped under `zoneDir/clean` — reads skip the
+    * dedup exchange while the stamp is fresh (a crash before the stamp
+    * just leaves the DISTINCT fallback in place — safe either way).
     * Returns (filesBefore, filesAfter).
     */
   def optimize(spark: SparkSession, zoneDir: String,
-      targetRowsPerFile: Long = 4 << 20): (Int, Int) = {
-    if (!graft.core.Fs.exists(spark, s"$zoneDir/codes")) return (0, 0)
-    val snap = graft.core.Fs.listFilePaths(spark, s"$zoneDir/tombstones")
-    val res = ShardedWriter.compactParquet(
-      spark, s"$zoneDir/codes", col("vec_id"), targetRowsPerFile,
-      transform = cs => liveCodes(spark, zoneDir, cs).distinct())
-    graft.core.Fs.deleteFilesThenDirIfEmpty(spark, s"$zoneDir/tombstones", snap)
-    // stamp the compacted listing: reads skip the dedup exchange while
-    // the stamp is fresh (a crash before the stamp just leaves the
-    // DISTINCT fallback in place — safe either way)
-    import spark.implicits._
-    Seq(graft.core.Fs.fingerprint(spark, s"$zoneDir/codes"))
-      .toDF("codes_fingerprint").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$zoneDir/clean")
-    res
-  }
+      targetRowsPerFile: Long = 4 << 20): (Int, Int) =
+    zone(zoneDir).optimize(spark, targetRowsPerFile, () => {
+      import spark.implicits._
+      Seq(graft.core.Fs.fingerprint(spark, s"$zoneDir/codes"))
+        .toDF("codes_fingerprint").coalesce(1)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .parquet(s"$zoneDir/clean")
+    })
 
   /** The query-side LUT columns (`lut0..lut{m-1}`): per subspace, the
     * integer distance from the query's subvector to EVERY codebook
@@ -278,10 +248,11 @@ object PqZone {
     val books = loadBooks(spark, zoneDir)
     val m = books.size
     val codes = readableCodes(spark, zoneDir)
-    rank(codes.crossJoin(
+    IvfIndexZone.rank(codes.crossJoin(
         broadcast(withLuts(queries, books, dims / m)
           .select(col("q_id") +: (0 until m).map(s => col(s"lut$s")): _*)))
-      .select(col("q_id"), col("vec_id"), adcExpr(m).as("adc_dist")), k)
+      .select(col("q_id"), col("vec_id"), adcExpr(m).as("adc_dist")),
+      col("adc_dist").asc, k)
   }
 
   /** The IVF-PQ composition: [[IvfIndexZone]] routes (each query's
@@ -298,11 +269,12 @@ object PqZone {
     val cand = IvfIndexZone.candidateIds(queries, ivfZoneDir, nprobe)
     val codes = readableCodes(spark, pqZoneDir)
     // codes stream; the candidate set builds (probed-cells-sized)
-    rank(codes.hint("shuffle_hash").join(cand, Seq("vec_id"))
+    IvfIndexZone.rank(codes.hint("shuffle_hash").join(cand, Seq("vec_id"))
       .join(broadcast(withLuts(queries, books, dims / m)
         .select(col("q_id") +: (0 until m).map(s => col(s"lut$s")): _*)),
         Seq("q_id"))
-      .select(col("q_id"), col("vec_id"), adcExpr(m).as("adc_dist")), k)
+      .select(col("q_id"), col("vec_id"), adcExpr(m).as("adc_dist")),
+      col("adc_dist").asc, k)
   }
 
   /** The three-stage production retrieval pipeline: IVF routes, ADC
@@ -318,20 +290,7 @@ object PqZone {
       dims: Int = 64): DataFrame = {
     val shortlist = ivfAdcTopK(queries, pqZoneDir, ivfZoneDir, r, nprobe,
       dims).select(col("q_id"), col("vec_id"))
-    corpus.select(col("vec_id"), col("embedding"))
-      .join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(queries.select(col("q_id"), col("qvec"))), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        Similarity.cosine(col("embedding"), col("qvec")).as("cos_sim"))
-      .withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("cos_sim").desc, col("vec_id").asc)).cast("long"))
-      .filter(col("nn_rank") <= k)
+    IvfIndexZone.cosineTopK(corpus.select(col("vec_id"), col("embedding"))
+      .join(broadcast(shortlist), Seq("vec_id")), queries, k)
   }
-
-  private def rank(scored: DataFrame, k: Int): DataFrame =
-    scored.withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("adc_dist").asc, col("vec_id").asc)).cast("long"))
-      .filter(col("nn_rank") <= k)
 }

@@ -47,29 +47,20 @@ import org.apache.spark.sql.functions._
   */
 object ShingleDfZone {
 
-  /** Create an empty zone with fixed shingle width. Same-width
-    * re-create is idempotent; changing the width under stored rows is
-    * refused (mixed-width counts are meaningless — rebuild instead).
+  /** Create an empty zone with fixed shingle width (the [[Zone.create]]
+    * guard: mixed-width counts are meaningless — rebuild instead).
     */
-  def create(spark: SparkSession, zoneDir: String, shingleN: Int): Unit = {
-    val hasMeta = graft.core.Fs.exists(spark, s"$zoneDir/meta")
-    if (graft.core.Fs.exists(spark, s"$zoneDir/rows")) {
-      require(hasMeta,
-        s"ShingleDfZone $zoneDir holds rows but no meta (corrupt zone); " +
-          "drop and re-index rather than re-stamping a width")
+  def create(spark: SparkSession, zoneDir: String, shingleN: Int): Unit =
+    Zone.at("ShingleDfZone", zoneDir, rows = "rows", id = "shingle",
+        cluster = "shingle").create(spark) {
       val n = shingleWidth(spark, zoneDir)
-      require(n == shingleN,
-        s"ShingleDfZone $zoneDir already counts $n-shingles; re-creating " +
-          s"with shingle_n=$shingleN would mix incompatible counts — " +
-          "drop the zone and re-index to change its width")
+      if (n == shingleN) None
+      else Some((s"$n-shingle counts", s"shingle_n=$shingleN (incompatible counts)"))
+    } {
+      import spark.implicits._
+      Seq(shingleN).toDF("shingle_n")
+        .write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
     }
-    // Same-width re-create is a NO-OP — overwriting meta opens the
-    // rows-without-meta crash window the corrupt-zone guard refuses.
-    if (hasMeta && shingleWidth(spark, zoneDir) == shingleN) return
-    import spark.implicits._
-    Seq(shingleN).toDF("shingle_n")
-      .write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
-  }
 
   /** Zone meta — a driver-side 1-row read (the watermark altitude),
     * served from the fingerprint-guarded cache

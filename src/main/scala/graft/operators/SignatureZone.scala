@@ -49,58 +49,34 @@ import org.apache.spark.sql.functions._
   */
 object SignatureZone {
 
-  /** Create an empty zone with fixed signature geometry. Idempotent
-    * overwrite for an EMPTY or same-geometry zone; refuses to change
-    * the geometry of a zone that already holds band rows — re-stamping
-    * `(shingle_n, k, bands)` under stored rows would make every future
-    * probe hash differently from the stored bands and silently miss
-    * near-dups. A geometry change on a populated zone is a rebuild:
-    * drop the zone and re-index.
+  private[operators] def zone(zoneDir: String) =
+    Zone.at("SignatureZone", zoneDir, rows = "bands", id = "doc_id", cluster = "bh")
+
+  /** Create an empty zone with fixed signature geometry (the
+    * [[Zone.create]] guard). The df-cap binding is geometry too: bands
+    * of capped and uncapped shingle sets hash differently, and a
+    * different [[ShingleDfZone]] with the same cap drops a DIFFERENT
+    * hot-shingle set than the stored bands were hashed with, so the
+    * guard compares the full (cap, df_dir) binding.
     */
   def create(spark: SparkSession, zoneDir: String,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4,
       capDf: Option[(Long, String)] = None): Unit = {
     require(k % bands == 0, "k must divide into equal bands")
-    val hasMeta = graft.core.Fs.exists(spark, s"$zoneDir/meta")
-    if (graft.core.Fs.exists(spark, s"$zoneDir/bands")) {
-      // band rows with NO meta is a corrupt zone (a crash inside meta's
-      // delete-then-write overwrite): stamping fresh geometry onto rows
-      // hashed with an unknown one is the silent-miss path this guard
-      // closes — fail as loudly as a geometry change
-      require(graft.core.Fs.exists(spark, s"$zoneDir/meta"),
-        s"SignatureZone $zoneDir holds band rows but no meta (corrupt " +
-          "zone — likely an interrupted meta write); drop the zone and " +
-          "re-index rather than re-creating over rows of unknown geometry")
+    zone(zoneDir).create(spark) {
       val (on, ok, ob) = meta(spark, zoneDir)
-      require(on == shingleN && ok == k && ob == bands,
-        s"SignatureZone $zoneDir already holds band rows under " +
-          s"shingle_n=$on k=$ok bands=$ob; re-creating with " +
-          s"shingle_n=$shingleN k=$k bands=$bands would orphan every " +
-          "stored band — drop the zone and re-index to change its geometry")
-      // the cap is geometry too: bands of capped and uncapped shingle
-      // sets hash differently, so flipping cappedness, the cap value,
-      // OR the bound df zone under stored rows is the same silent-miss
-      // path — a different ShingleDfZone with the same cap drops a
-      // DIFFERENT hot-shingle set than the stored bands were hashed
-      // with, so the guard compares the full (cap, df_dir) binding
-      require(capInfo(spark, zoneDir) == capDf,
-        s"SignatureZone $zoneDir already holds band rows under df-cap " +
-          s"binding ${capInfo(spark, zoneDir)}; re-creating with binding " +
-          s"$capDf would orphan every stored band — drop the zone and " +
-          "re-index to change its cap or its df zone")
+      val cap = capInfo(spark, zoneDir)
+      if ((on, ok, ob) != ((shingleN, k, bands)))
+        Some((s"shingle_n=$on k=$ok bands=$ob",
+          s"shingle_n=$shingleN k=$k bands=$bands"))
+      else if (cap != capDf) Some((s"df-cap binding $cap", s"binding $capDf"))
+      else None
+    } {
+      import spark.implicits._
+      Seq((shingleN, k, bands, capDf.map(_._1), capDf.map(_._2)))
+        .toDF("shingle_n", "k", "bands", "cap", "df_dir")
+        .write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
     }
-    // Same-geometry re-create is a NO-OP: overwriting meta
-    // (delete-then-write) opens a crash window leaving a populated
-    // zone rows-without-meta — the state the corrupt-zone guard above
-    // refuses as unrecoverable. Write only when meta is absent (or an
-    // EMPTY zone changes geometry).
-    if (hasMeta && meta(spark, zoneDir) == ((shingleN, k, bands))
-        && capInfo(spark, zoneDir) == capDf) return
-    import spark.implicits._
-    Seq((shingleN, k, bands,
-        capDf.map(_._1), capDf.map(_._2)))
-      .toDF("shingle_n", "k", "bands", "cap", "df_dir")
-      .write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
   }
 
   /** Zone meta — a driver-side 1-row read (the watermark altitude),
@@ -175,16 +151,11 @@ object SignatureZone {
   }
 
   /** Create + index an existing corpus in one call (the batch-backfill
-    * path). Refuses a zone that already holds band rows — create is
-    * idempotent but append is not, so a repeated build would double the
-    * band table (the [[AnnIndexZone.build]] contract).
+    * path); refuses a populated zone ([[Zone.requireEmpty]]).
     */
   def build(spark: SparkSession, docs: DataFrame, zoneDir: String,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4): Unit = {
-    require(!graft.core.Fs.exists(spark, s"$zoneDir/bands"),
-      s"SignatureZone $zoneDir already holds band rows; build() would " +
-        "re-append the entire corpus on top of them — use append for " +
-        "deltas, or drop the zone first for a full rebuild")
+    zone(zoneDir).requireEmpty(spark)
     create(spark, zoneDir, shingleN, k, bands)
     append(docs, zoneDir)
   }
@@ -201,69 +172,27 @@ object SignatureZone {
   def buildCapped(spark: SparkSession, docs: DataFrame, zoneDir: String,
       dfZoneDir: String, cap: Long,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4): Unit = {
-    require(!graft.core.Fs.exists(spark, s"$zoneDir/bands"),
-      s"SignatureZone $zoneDir already holds band rows; buildCapped() " +
-        "would re-append the entire corpus on top of them — use append " +
-        "for deltas, or drop the zone first for a full rebuild")
+    zone(zoneDir).requireEmpty(spark, "buildCapped()")
     create(spark, zoneDir, shingleN, k, bands, Some((cap, dfZoneDir)))
     append(docs, zoneDir)
   }
 
-  /** Record document deletions against the zone: tombstone rows under
-    * `zoneDir/tombstones`, honored by [[incrementalPairs]] (a deleted
-    * doc's stored bands can no longer produce candidates — so
-    * re-ingesting its content is admitted instead of blocked on a dead
-    * keeper) and folded in for good by [[optimize]]. A delete is
-    * itself just an ingest event: append-only, replay-stable
-    * (duplicate tombstone rows change nothing — the reader anti-joins).
-    * `ids` must expose `doc_id`.
+  /** Tombstone documents ([[Zone.delete]]): a deleted doc's stored
+    * bands can no longer produce candidates, so re-ingesting its content
+    * is admitted instead of blocked on a dead keeper. `ids` must expose
+    * `doc_id`.
     */
-  def delete(ids: DataFrame, zoneDir: String): Unit =
-    ids.select(col("doc_id")).write
-      .mode(SaveMode.Append).parquet(s"$zoneDir/tombstones")
+  def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
-  /** Drop tombstoned docs' rows from a bands frame. The tombstone list
-    * is deletes-sized (small next to the zone; Catalyst broadcasts it
-    * when stats allow) and compaction folds it to zero.
-    */
-  private def liveBands(spark: SparkSession, zoneDir: String,
-      bands: DataFrame): DataFrame =
-    if (!graft.core.Fs.hasParquetFiles(spark, s"$zoneDir/tombstones")) bands
-    else bands.join(
-      spark.read.parquet(s"$zoneDir/tombstones")
-        .select(col("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-
-  /** OPTIMIZE the band zone: rewrite the append-only bands table with
-    * replay duplicates DISTINCTed away, pending TOMBSTONES folded in
-    * for good (keyed deletes at compaction — the tombstone list is
-    * then cleared; a crash between publish and clear re-applies the
-    * same tombstones, idempotent), and the per-batch file storm folded
-    * into balanced bh-clustered shards
-    * ([[ShardedWriter.compactParquet]]'s crash-safe rename publish) —
-    * the maintenance pass a deployment schedules exactly like c3's
-    * lake OPTIMIZE and d21's index OPTIMIZE. Result-invisible by
-    * construction: the read side DISTINCTs candidates and already
-    * subtracts tombstones (SignatureZoneSpec pins the hash).
-    * Returns (filesBefore, filesAfter).
+  /** OPTIMIZE the band zone ([[Zone.optimize]]): replay duplicates and
+    * tombstones folded, the per-batch file storm compacted into
+    * bh-clustered shards — the maintenance pass a deployment schedules
+    * like c3's lake OPTIMIZE and d21's index OPTIMIZE (SignatureZoneSpec
+    * pins the result hash across it). Returns (filesBefore, filesAfter).
     */
   def optimize(spark: SparkSession, zoneDir: String,
-      targetRowsPerFile: Long = 4 << 20): (Int, Int) = {
-    if (!graft.core.Fs.exists(spark, s"$zoneDir/bands")) return (0, 0)
-    // snapshot the tombstone LISTING before the compaction reads it:
-    // the fold consumes whatever is live at read time, but the clear
-    // afterwards removes ONLY the snapshotted files — a tombstone
-    // appended concurrently by the ingest path (st23's stream) lands in
-    // files outside the snapshot and survives to the next OPTIMIZE,
-    // instead of being silently discarded (which would resurrect the
-    // deleted doc in every later probe)
-    val snap = graft.core.Fs.listFilePaths(spark, s"$zoneDir/tombstones")
-    val res = ShardedWriter.compactParquet(spark, s"$zoneDir/bands", col("bh"),
-      targetRowsPerFile,
-      transform = b => liveBands(spark, zoneDir, b).distinct())
-    graft.core.Fs.deleteFilesThenDirIfEmpty(spark, s"$zoneDir/tombstones", snap)
-    res
-  }
+      targetRowsPerFile: Long = 4 << 20): (Int, Int) =
+    zone(zoneDir).optimize(spark, targetRowsPerFile)
 
   // session-scoped staleness ledger for bucketed band tables: table
   // name -> the bands dir's listing fingerprint at staging time. Lives
@@ -323,14 +252,9 @@ object SignatureZone {
     * candidate documents.
     *
     *   1. delta band rows (delta-only work, the zone's geometry);
-    *   2. candidates = (stored bands ⋈ delta bands on (band, bh)) ∪
-    *      (delta self-join), pairs oriented (least, greatest) and
-    *      DISTINCT-ed — which also absorbs replayed duplicate band rows
-    *      (structural idempotency) and makes the result identical
-    *      whether the zone holds history only or already includes the
-    *      delta (both cross-leg shapes produce the same pair set, so a
-    *      maintainer that appended the delta before querying gets the
-    *      same answer);
+    *   2. candidate pairs sharing a (band, bh) ([[Zone.candidatePairs]]:
+    *      replayed band rows and a zone that already holds the delta
+    *      change nothing);
     *   3. exact-Jaccard verification over the candidate documents'
     *      shingles only (`corpus` supplies text by doc_id semi-join —
     *      candidate-sized, not history-sized).
@@ -355,82 +279,29 @@ object SignatureZone {
   def incrementalPairs(corpus: DataFrame, delta: DataFrame, zoneDir: String,
       minJaccard: Double, bandsTable: Option[String] = None,
       maxZoneDocId: Option[Long] = None): DataFrame = {
-    // maxZoneDocId: the admission layer's SELF-EXCLUSION threshold —
-    // under the admission-timeline contract the zone covers strictly
-    // smaller ids than the delta, so any stored band row at or above
-    // the delta's minimum id is a replayed copy of the CURRENT batch
-    // (foreachBatch is at-least-once: a crash after the feedback
-    // appends replays the decide) and must not generate candidates
-    // against it. A pushed-down scalar filter on the zone scan — zero
-    // new exchanges, and a no-op on a clean (history-only) zone.
-    // Direct probes (d22/st20's full-corpus postures) pass None and
-    // keep their zone-may-hold-the-delta invariance semantics.
+    // maxZoneDocId: the self-exclusion cut ([[Zone.live]]). Direct
+    // probes (d22/st20's full-corpus postures) pass None and keep
+    // their zone-may-hold-the-delta invariance semantics.
     val spark = corpus.sparkSession
     val (n, k, b) = meta(spark, zoneDir)
     val drop = dropList(spark, zoneDir)
-    // the delta bands feed the zone probe AND the internal self-join's
-    // two sides; tracked persist so shingle+minhash derivation runs once
-    val db = graft.core.Caches.persistTracked(deltaBandRows(delta, n, k, b, drop))
-    val internal = db.as("a")
-      .hint("shuffle_hash")
-      .join(db.as("b"), col("a.band") === col("b.band") &&
-        col("a.bh") === col("b.bh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    // two consumers (the candidate-id semi-join and the verify join)
-    // would each re-run the zone probe — persist the DISTINCT-ed pair
-    // set once (candidate-pair-sized, bounded by band collisions)
-    val cand = graft.core.Caches.persistTracked(
-      (if (bandsTable.isDefined ||
-          graft.core.Fs.exists(spark, s"$zoneDir/bands")) {
-        // a staged bucketed table serves the probe with zero zone-side
-        // Exchange (freshness-guarded); otherwise the parquet dir.
-        // Tombstones are subtracted LIVE on either path (the tombstone
-        // dir is outside the bands fingerprint, so deletes never
-        // invalidate a staged table — they are honored on read)
-        val zb0 = liveBands(spark, zoneDir,
-          bandsTable.fold(spark.read.parquet(s"$zoneDir/bands"))(
-            freshBandsTable(spark, zoneDir, _)))
-        val zb = maxZoneDocId.fold(zb0)(m => zb0.filter(col("doc_id") < m))
-        // both sides scale with data (the zone with history, the delta
-        // with the batch): shuffled hash join, never a broadcast. The
-        // hint sits on the DELTA side so IT builds (per-batch-sized
-        // hash map, never a history-sized one) and the zone side
-        // streams — on a bucketed bands table the zone scan then joins
-        // with zero Exchange (its bucketing IS the required hash
-        // partitioning)
-        val cross = zb.as("z")
-          .join(db.as("d").hint("shuffle_hash"),
-            col("z.band") === col("d.band") &&
-            col("z.bh") === col("d.bh") && col("z.doc_id") =!= col("d.doc_id"))
-          .select(least(col("z.doc_id"), col("d.doc_id")).as("doc_a"),
-            greatest(col("z.doc_id"), col("d.doc_id")).as("doc_b"))
-        cross.union(internal)
-      } else internal).distinct())
+    // a staged bucketed table serves the probe with zero zone-side
+    // Exchange (freshness-guarded); otherwise the parquet dir.
+    // Tombstones are subtracted LIVE on either path (the tombstone dir
+    // is outside the bands fingerprint, so deletes never invalidate a
+    // staged table — they are honored on read)
+    val stored = bandsTable.fold(zone(zoneDir).liveRows(spark, maxZoneDocId))(t =>
+      Some(zone(zoneDir).live(freshBandsTable(spark, zoneDir, t), maxZoneDocId)))
     // verification reads text for candidate documents ONLY — the pair
     // ids are the access pattern, never the history table
-    val candIds = cand.select(col("doc_a").as("doc_id"))
-      .union(cand.select(col("doc_b").as("doc_id"))).distinct()
+    val (cand, candIds) = zone(zoneDir).candidatePairs(
+      deltaBandRows(delta, n, k, b, drop), stored, Seq("band", "bh"), "doc_a", "doc_b")
     // a capped zone verifies over the SAME capped universe it banded —
     // jaccard over mixed universes would not match any batch twin
     val sh = graft.core.Caches.persistTracked(dropHot(
       Dedup.shingles(
         corpus.join(candIds, Seq("doc_id"), "left_semi"),
         col("doc_id"), col("text"), n), drop))
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val common = cand
-      .hint("shuffle_hash")
-      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .hint("shuffle_hash")
-      .join(sh.as("sb"),
-        col("doc_b") === col("sb.doc_id") && col("sa.shingle") === col("sb.shingle"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
+    Dedup.verifyJaccard(cand, sh, minJaccard)
   }
 }

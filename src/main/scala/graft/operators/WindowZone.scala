@@ -40,23 +40,20 @@ import org.apache.spark.sql.functions._
   */
 object WindowZone {
 
-  /** Create an empty zone with fixed window width. */
+  /** Create an empty zone with fixed window width (the [[Zone.create]]
+    * guard).
+    */
   def create(spark: SparkSession, zoneDir: String, w: Int): Unit = {
     require(w >= 2, s"window width must be >= 2 (got $w)")
-    val hasMeta = graft.core.Fs.exists(spark, s"$zoneDir/meta")
-    if (graft.core.Fs.exists(spark, s"$zoneDir/rows")) {
-      require(hasMeta,
-        s"WindowZone $zoneDir holds rows but no meta (corrupt zone); " +
-          "drop and re-index rather than re-stamping a width")
-      require(width(spark, zoneDir) == w,
-        s"WindowZone $zoneDir already counts ${width(spark, zoneDir)}-token " +
-          s"windows; re-creating with w=$w would mix incompatible counts " +
-          "— drop the zone and re-index to change its width")
-    }
-    // same-width re-create is a NO-OP (no meta-rewrite crash window)
-    if (hasMeta && width(spark, zoneDir) == w) return
-    import spark.implicits._
-    Seq(w).toDF("w").write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
+    Zone.at("WindowZone", zoneDir, rows = "rows", id = "h", cluster = "h")
+      .create(spark) {
+        val old = width(spark, zoneDir)
+        if (old == w) None
+        else Some((s"$old-token window counts", s"w=$w (incompatible counts)"))
+      } {
+        import spark.implicits._
+        Seq(w).toDF("w").write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
+      }
   }
 
   /** Zone meta — a driver-side 1-row read (the watermark altitude),

@@ -84,13 +84,20 @@ object ZoneMap {
     * number of newly covered files (0 = up to date).
     */
   def appendStats(spark: SparkSession, dataDir: String, statsDir: String,
-      cols: Seq[String]): Long = {
-    val covered = spark.read.parquet(statsDir)
+      cols: Seq[String]): Long =
+    appendUncovered(spark, dataDir, statsDir)(statsAgg(_, cols))
+
+  /** Append the per-file rows of the data files `metaDir` does not
+    * cover yet; returns how many files that was.
+    */
+  private def appendUncovered(spark: SparkSession, dataDir: String,
+      metaDir: String)(perFile: DataFrame => DataFrame): Long = {
+    val covered = spark.read.parquet(metaDir)
       .select(col("file")).collect().map(_.getString(0)).toSet
     val fresh = spark.read.parquet(dataDir).inputFiles.filterNot(covered)
     if (fresh.isEmpty) return 0L
-    statsAgg(spark.read.parquet(fresh: _*), cols)
-      .write.mode(SaveMode.Append).parquet(statsDir)
+    perFile(spark.read.parquet(fresh.toIndexedSeq: _*))
+      .write.mode(SaveMode.Append).parquet(metaDir)
     fresh.length.toLong
   }
 
@@ -122,11 +129,27 @@ object ZoneMap {
     requireFresh(spark, dataDir,
       stats.select(col("file")).collect().map(_.getString(0)).toSet,
       "zone map", "stats")
-    if (files.isEmpty)
-      // no file can match: empty frame, schema preserved from the dir
-      spark.read.parquet(dataDir).filter(lit(false))
-    else spark.read.parquet(files: _*)
+    readFiles(spark, dataDir, files)
   }
+
+  /** The planned `files` of `dataDir` as one frame; no file can match:
+    * an empty frame, schema preserved from the dir.
+    */
+  private def readFiles(spark: SparkSession, dataDir: String,
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.read.parquet(dataDir).filter(lit(false))
+    else spark.read.parquet(files: _*)
+
+  /** The read of a zone's rows once OPTIMIZE persisted `statsDir`
+    * (`points` are computed only then): the files whose `column` range
+    * can hold any of `points` ([[statsPlanFilesAnyOf]]). Without stats,
+    * the whole dir.
+    */
+  private[operators] def statsPlannedRead(spark: SparkSession, dataDir: String,
+      statsDir: String, column: String, points: => Seq[Long]): DataFrame =
+    if (!graft.core.Fs.exists(spark, statsDir)) spark.read.parquet(dataDir)
+    else readFiles(spark, dataDir,
+      statsPlanFilesAnyOf(spark, dataDir, statsDir, column, points))
 
   /** Stats-planned POINT-SET file planning: the files whose `[min_c,
     * max_c]` range contains ANY of the probe points — the disjunctive
@@ -166,12 +189,15 @@ object ZoneMap {
     */
   def buildBlooms(spark: SparkSession, dataDir: String, bloomDir: String,
       keyCol: String, expectedItemsPerFile: Int): Unit =
-    spark.read.parquet(dataDir)
-      .groupBy(input_file_name().as("file"))
+    bloomAgg(spark.read.parquet(dataDir), keyCol, expectedItemsPerFile)
+      .write.mode(SaveMode.Overwrite).parquet(bloomDir)
+
+  private def bloomAgg(df: DataFrame, keyCol: String,
+      expectedItemsPerFile: Int): DataFrame =
+    df.groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         graft.functions.SketchExpressions
           .bloomAgg(col(keyCol), expectedItemsPerFile).as("bloom"))
-      .write.mode(SaveMode.Overwrite).parquet(bloomDir)
 
   /** Incremental bloom maintenance — [[appendStats]]'s discipline for
     * the membership zone: scan ONLY the data files the bloom table does
@@ -181,19 +207,8 @@ object ZoneMap {
     * guard fails loudly). Returns the number of newly covered files.
     */
   def appendBlooms(spark: SparkSession, dataDir: String, bloomDir: String,
-      keyCol: String, expectedItemsPerFile: Int): Long = {
-    val covered = spark.read.parquet(bloomDir)
-      .select(col("file")).collect().map(_.getString(0)).toSet
-    val fresh = spark.read.parquet(dataDir).inputFiles.filterNot(covered)
-    if (fresh.isEmpty) return 0L
-    spark.read.parquet(fresh.toIndexedSeq: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"),
-        graft.functions.SketchExpressions
-          .bloomAgg(col(keyCol), expectedItemsPerFile).as("bloom"))
-      .write.mode(SaveMode.Append).parquet(bloomDir)
-    fresh.length.toLong
-  }
+      keyCol: String, expectedItemsPerFile: Int): Long =
+    appendUncovered(spark, dataDir, bloomDir)(bloomAgg(_, keyCol, expectedItemsPerFile))
 
   /** Read only the files whose Bloom filter might contain `key` —
     * driver-side planning over the #files-row bloom table (the
@@ -205,9 +220,7 @@ object ZoneMap {
     */
   def bloomPrunedRead(spark: SparkSession, dataDir: String, bloomDir: String,
       key: Long): DataFrame = {
-    val files = bloomPlanFiles(spark, dataDir, bloomDir, Seq(key))(key)
-    if (files.isEmpty) spark.read.parquet(dataDir).filter(lit(false))
-    else spark.read.parquet(files: _*)
+    readFiles(spark, dataDir, bloomPlanFiles(spark, dataDir, bloomDir, Seq(key))(key))
   }
 
   /** Batch bloom planning: ONE pass over the bloom table answers every

@@ -5,11 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** Side-by-side zone REBUILD with a fingerprint-guarded atomic cutover
   * — the operational move when a corpus outgrows its zone geometry.
   * Every persisted zone ([[SignatureZone]], [[AnnIndexZone]],
-  * [[HammingZone]], the md5 keeper zone) fixes its geometry/capacity at
-  * creation and — correctly — REFUSES in-place changes: stored rows
-  * hashed under one geometry are unreadable under another, so the
-  * guards fail loudly. What a deployment then does is exactly this:
-  * build the new-geometry zone COMPLETE at a staging path from the
+  * [[HammingZone]], [[IvfIndexZone]], [[PqZone]], [[ShingleDfZone]],
+  * [[WindowZone]]) fixes its geometry/capacity at creation and —
+  * correctly — REFUSES in-place changes ([[Zone.create]]'s guard):
+  * stored rows hashed under one geometry are unreadable under another,
+  * so the guard fails loudly. The md5 keeper zone has no geometry to
+  * change, but is rebuilt the same way to fold its sibling tombstones.
+  * What a deployment then does is exactly this: build the
+  * new-geometry zone COMPLETE at a staging path from the
   * live corpus, verify the old zone did not move while the rebuild
   * read it, and publish with two directory renames. The old zone
   * serves every reader until the instant of the swap.

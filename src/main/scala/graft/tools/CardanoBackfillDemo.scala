@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 import graft.cardano._
@@ -15,15 +14,7 @@ object CardanoBackfillDemo {
   def main(args: Array[String]): Unit = {
     val (start, end) =
       if (args.length >= 2) (args(0).toLong, args(1).toLong) else (1L, 200L)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(8)
 
     val root = java.nio.file.Files.createTempDirectory("cardano_demo").toString
     println(s"[demo] working under $root")

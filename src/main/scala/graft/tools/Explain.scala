@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev-only: print the formatted physical plan for one or all queries. */
@@ -8,19 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-lifetime bucketed tables (s11) land in scratch, not CWD
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.dir("graft_wh"))
-      // shuffle/broadcast spill on RAM-backed scratch (see Scratch scaladoc)
-      .config("spark.local.dir", graft.core.Scratch.sparkLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(8)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_ == q._1))
       .foreach { case (name, fn) =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import graft.SparkEntry
 
@@ -18,22 +17,12 @@ object JobProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // A/B seam for measuring AQE's per-action fixed cost on k-row
-      // micro-batch plans (dev-only; Bench itself stays AQE-on)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.dir("graft_wh"))
-      .config("spark.local.dir", graft.core.Scratch.sparkLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Session.local(cpus)
+    // A/B seam for measuring AQE's per-action fixed cost on k-row
+    // micro-batch plans (dev-only; Bench itself stays AQE-on)
+    sys.env.get("SPARK_GRAFT_AQE")
+      .foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     val execStarts = new java.util.concurrent.ConcurrentHashMap[Long, (Long, String)]()
     val execRows = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]()
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Boolean)]()

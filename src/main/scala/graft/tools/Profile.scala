@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev-only profiler: runs each query N times to separate JVM/codegen
@@ -12,21 +11,8 @@ object Profile {
     val reps = if (args.length > 1) args(1).toInt else 3
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // session-lifetime bucketed tables (s11) land in scratch, not CWD
-      .config("spark.sql.warehouse.dir", graft.core.Scratch.dir("graft_wh"))
-      // shuffle/broadcast spill on RAM-backed scratch (see Scratch scaladoc)
-      .config("spark.local.dir", graft.core.Scratch.sparkLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Session.local(cpus)
     // A/B seam for the streaming state backend (same knob as Bench).
     if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb")) {
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -13,24 +13,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed (bucketed) test tables land in scratch, not the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      // shuffle/broadcast spill on RAM-backed scratch (see the
-      // graft.core.Scratch scaladoc — the suite's many tiny shuffles
-      // otherwise ride the host's noisy-neighbor disk queue)
-      .config("spark.local.dir", graft.core.Scratch.sparkLocalDir())
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = graft.core.Session.local(4)
 }

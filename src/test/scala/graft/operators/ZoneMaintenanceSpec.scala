@@ -97,41 +97,93 @@ class ZoneMaintenanceSpec extends SparkSpec {
   test("same-geometry re-create of a populated zone is a true no-op (no meta rewrite crash window)") {
     import spark.implicits._
     val root = tmpDir("recreate")
-    def metaFp(z: String) = graft.core.Fs.fingerprint(spark, s"$z/meta")
-    // a crash inside an Overwrite meta rewrite leaves rows-without-meta
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val sigs = Seq((1L, 37L)).toDF("doc_id", "sig")
+    // one row per zone: its meta dir, how to populate it, a same-geometry
+    // re-create, a geometry change, and a build over its rows (if any).
+    // A crash inside an Overwrite meta rewrite leaves rows-without-meta
     // — the state every zone's corrupt-zone guard refuses as
     // unrecoverable — so an idempotent re-create must not TOUCH meta:
     // the listing fingerprint (names, sizes, mtimes) must be identical
+    case class Guarded(name: String, meta: String, populate: () => Unit,
+        recreate: () => Unit, change: () => Unit, build: Option[() => Unit])
     val sig = s"$root/sig"
-    SignatureZone.build(spark, docs.limit(40), sig)
-    val sigFp = metaFp(sig)
-    SignatureZone.create(spark, sig)
-    assert(metaFp(sig) == sigFp, "SignatureZone re-create rewrote meta")
     val ann = s"$root/ann"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    AnnIndexZone.build(spark, emb, ann): Unit
-    val annFp = metaFp(ann)
-    AnnIndexZone.create(spark, ann, emb.count()): Unit
-    assert(metaFp(ann) == annFp, "AnnIndexZone re-create rewrote meta")
     val ham = s"$root/ham"
-    HammingZone.create(spark, ham)
-    HammingZone.append(Seq((1L, 37L)).toDF("doc_id", "sig"), ham)
-    val hamFp = metaFp(ham)
-    HammingZone.create(spark, ham)
-    assert(metaFp(ham) == hamFp, "HammingZone re-create rewrote meta")
     val dfz = s"$root/df"
-    ShingleDfZone.create(spark, dfz, 3)
-    ShingleDfZone.append(docs.limit(10), dfz, batchId = 0L)
-    val dfFp = metaFp(dfz)
-    ShingleDfZone.create(spark, dfz, 3)
-    assert(metaFp(dfz) == dfFp, "ShingleDfZone re-create rewrote meta")
+    val win = s"$root/win"
+    val ivf = s"$root/ivf"
+    val pq = s"$root/pq"
+    lazy val cents = IvfIndexZone.centroids(spark, ivf)
+    lazy val books = PqZone.loadBooks(spark, pq)
+    val zones = Seq(
+      Guarded("SignatureZone", s"$sig/meta",
+        () => SignatureZone.build(spark, docs.limit(40), sig),
+        () => SignatureZone.create(spark, sig),
+        () => SignatureZone.create(spark, sig, shingleN = 2),
+        Some(() => SignatureZone.build(spark, docs.limit(40), sig))),
+      Guarded("AnnIndexZone", s"$ann/meta",
+        () => AnnIndexZone.build(spark, emb, ann): Unit,
+        () => AnnIndexZone.create(spark, ann, emb.count()): Unit,
+        () => AnnIndexZone.create(spark, ann, emb.count(), dims = 32): Unit,
+        Some(() => AnnIndexZone.build(spark, emb, ann): Unit)),
+      Guarded("HammingZone", s"$ham/meta",
+        () => { HammingZone.create(spark, ham); HammingZone.append(sigs, ham) },
+        () => HammingZone.create(spark, ham),
+        () => HammingZone.create(spark, ham, maxHamming = 3, chunks = 4),
+        Some(() => HammingZone.build(spark, sigs, ham))),
+      Guarded("ShingleDfZone", s"$dfz/meta",
+        () => {
+          ShingleDfZone.create(spark, dfz, 3)
+          ShingleDfZone.append(docs.limit(10), dfz, batchId = 0L)
+        },
+        () => ShingleDfZone.create(spark, dfz, 3),
+        () => ShingleDfZone.create(spark, dfz, 2),
+        None),
+      Guarded("WindowZone", s"$win/meta",
+        () => {
+          WindowZone.create(spark, win, 5)
+          WindowZone.append(docs.limit(10), win, batchId = 0L)
+        },
+        () => WindowZone.create(spark, win, 5),
+        () => WindowZone.create(spark, win, 6),
+        None),
+      Guarded("IvfIndexZone", s"$ivf/centroids",
+        () => IvfIndexZone.build(spark, emb, ivf, k = 3, iters = 1): Unit,
+        () => IvfIndexZone.create(spark, ivf, cents),
+        () => IvfIndexZone.create(spark, ivf, cents.map(_.map(_ + 1L))),
+        Some(() => IvfIndexZone.build(spark, emb, ivf, k = 3, iters = 1): Unit)),
+      Guarded("PqZone", s"$pq/books",
+        () => PqZone.build(spark, emb, pq, m = 2, k = 2, iters = 1): Unit,
+        () => PqZone.create(spark, pq, books),
+        () => PqZone.create(spark, pq, books.map(_.map(_.map(_ + 1L)))),
+        Some(() => PqZone.build(spark, emb, pq, m = 2, k = 2, iters = 1): Unit)))
+    zones.foreach { z =>
+      z.populate()
+      val fp = graft.core.Fs.fingerprint(spark, z.meta)
+      z.recreate()
+      assert(graft.core.Fs.fingerprint(spark, z.meta) == fp,
+        s"${z.name} re-create rewrote meta")
+      val orphan = intercept[IllegalArgumentException] { z.change() }
+      assert(orphan.getMessage.contains("orphan"), s"${z.name}: ${orphan.getMessage}")
+      assert(graft.core.Fs.fingerprint(spark, z.meta) == fp,
+        s"${z.name} refused geometry change still touched meta")
+      z.build.foreach { b =>
+        val e = intercept[IllegalArgumentException] { b() }
+        assert(e.getMessage.contains("already holds rows"), s"${z.name}: ${e.getMessage}")
+      }
+      graft.core.Fs.deleteRecursively(spark, z.meta)
+      val corrupt = intercept[IllegalArgumentException] { z.recreate() }
+      assert(corrupt.getMessage.contains("corrupt"), s"${z.name}: ${corrupt.getMessage}")
+    }
     // geometry change on an EMPTY zone still legitimately rewrites
     val ham2 = s"$root/ham2"
     HammingZone.create(spark, ham2, bits = 60, maxHamming = 5, chunks = 6)
     HammingZone.create(spark, ham2, bits = 60, maxHamming = 3, chunks = 4)
     assert(HammingZone.meta(spark, ham2) == ((60, 3, 4)),
       "empty-zone geometry change was silently ignored")
+    graft.core.Caches.release()
   }
 
   test("snapshot-scoped clear sweeps empty subdirectory scaffolds but spares occupied ones") {
