@@ -15,8 +15,10 @@ import org.apache.spark.sql.types.StructType
   *
   * {{{
   *   <root>/cardano/<entity>/raw/<endBlock>/          JSON (batch files)
-  *   <root>/cardano/<entity>/transformed/...          parquet (engine upgrade from CSV)
   * }}}
+  *
+  * The transformed zone is the parquet warehouse the pipelines merge
+  * into ([[IdempotentSink.upsertParquet]]).
   *
   * The height-keyed directory layout is the partition-pruning analogue:
   * at scale, raw zones written `partitionBy(batchEnd)` let Catalyst prune
@@ -32,9 +34,6 @@ final class Lake(spark: SparkSession, root: String) {
 
   def rawDir(entity: String, endBlock: Long): String =
     s"$root/cardano/$entity/raw/$endBlock"
-
-  def transformedDir(entity: String): String =
-    s"$root/cardano/$entity/transformed"
 
   /** K1: write one raw-zone JSON batch (array-of-records file shape, as
     * the reference's exporter produced — one batch per directory).
@@ -71,17 +70,4 @@ final class Lake(spark: SparkSession, root: String) {
     */
   def maxFileModification(df: DataFrame): Option[Timestamp] =
     Option(df.select(max(col("_metadata.file_modification_time"))).head().getTimestamp(0))
-
-  /** K2: transformed-zone write (parquet — the engine upgrade over the
-    * reference's CSV; columnar, schema'd, splittable).
-    */
-  def writeTransformed(df: DataFrame, entity: String): String = {
-    val dir = transformedDir(entity)
-    df.write.mode(SaveMode.Append).parquet(dir)
-    dir
-  }
-
-  /** S6-equivalent read of the transformed zone. */
-  def readTransformed(entity: String): DataFrame =
-    spark.read.parquet(transformedDir(entity))
 }

@@ -64,8 +64,9 @@ object ShardedWriter {
     * drops the retired copy. A crash before the first rename leaves the
     * source untouched (stale staging is re-overwritten next run); a
     * crash BETWEEN the renames leaves `dir` absent with the data intact
-    * in `.pre-compact` — the next call detects exactly that state and
-    * renames the retired copy back before proceeding, so the window is
+    * in `.pre-compact`, and one after the publish leaves a stale
+    * `.pre-compact` beside the new `dir` — the next call settles either
+    * state first ([[recoverInterrupted]]), so the windows are
     * self-healing, not just documented. Concurrency is a single-writer
     * assumption; a transactional table format replaces the whole rename
     * protocol with a metadata commit at deployment.
@@ -103,7 +104,6 @@ object ShardedWriter {
     try writeSharded(frame, staging, key, targetRowsPerFile, knownCount)
     finally if (knownCount.isEmpty) frame.unpersist(): Unit
     val (fs, _) = graft.core.Fs.resolve(spark, dir)
-    graft.core.Fs.deleteRecursively(spark, retired)
     require(fs.rename(new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(retired)), s"retire rename failed: $dir")
     require(fs.rename(new org.apache.hadoop.fs.Path(staging),
@@ -207,16 +207,33 @@ object ShardedWriter {
     else fs.listStatus(hp).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
 
-  /** Recover an interrupted publish: dir absent but the retired copy
-    * present means a crash landed between the two renames — complete it
-    * (restore) instead of silently treating the table as empty.
+  /** Settle what a crashed [[compactParquet]] left behind; afterwards no
+    * `.pre-compact` exists. The staging dir `.compact` tells the windows
+    * apart, since the publish rename consumes it:
+    *   - retired copy, no `dir`: the crash landed between the renames —
+    *     restore it instead of treating the table as empty;
+    *   - retired copy, `dir` AND staging: the same crash, after which an
+    *     append recreated `dir` — move the retired parts into `dir`
+    *     (rename by name, so a re-run after a crash mid-move moves the
+    *     rest), or dropping the retired copy would lose every row it
+    *     holds;
+    *   - retired copy and `dir`, no staging: the publish completed and
+    *     the retired copy is stale — drop it (folding it in would
+    *     duplicate every row).
     */
   private def recoverInterrupted(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val (fs, dirP) = graft.core.Fs.resolve(spark, dir)
-    val retiredP = new org.apache.hadoop.fs.Path(dir + ".pre-compact")
-    if (!fs.exists(dirP) && fs.exists(retiredP))
+    val retired = dir + ".pre-compact"
+    val retiredP = new org.apache.hadoop.fs.Path(retired)
+    if (!fs.exists(retiredP)) return
+    if (!fs.exists(dirP))
       require(fs.rename(retiredP, dirP),
         s"interrupted-publish recovery rename failed: $retiredP -> $dirP")
+    else {
+      if (fs.exists(new org.apache.hadoop.fs.Path(dir + ".compact")))
+        graft.core.Fs.moveParts(spark, retired, dir)
+      graft.core.Fs.deleteRecursively(spark, retired)
+    }
   }
 }

@@ -49,8 +49,9 @@ import graft.core.Fs
   *     crash between the publish and the clear re-applies the same
   *     tombstones next pass — idempotent. A crash between the publish's
   *     two renames leaves `<rows>.pre-compact` and no rows dir; the next
-  *     OPTIMIZE restores it and compacts. Appends and reads do not
-  *     restore it, so re-run the interrupted OPTIMIZE before either.
+  *     OPTIMIZE restores it and compacts, folding in any rows appended
+  *     in between (appends may run first and lose nothing). Until that
+  *     OPTIMIZE, reads do not see the parked rows.
   *
   * `tombstoneId` names the tombstone column when it differs from the
   * rows' `id` (the md5 keeper zone tombstones `doc_id` against

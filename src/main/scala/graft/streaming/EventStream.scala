@@ -1,10 +1,13 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
+
+import graft.core.Par
 
 /** Structured Streaming surface (SURVEY §2.5): the reference's
   * watermark-based incremental file pattern (S7+Q2) re-expressed as the
@@ -28,7 +31,12 @@ object EventStream {
     * derive cleanly).
     */
   case class EventIn(user_id: Long, value: Double, tsMicros: Long)
-  case class UserState(n: Long, cents: Long, lastTs: Long)
+  case class UserState(n: Long, cents: Long, lastTs: Long) {
+    /** The running-stats fold st3 and st10 share (one oracle). */
+    def fold(rows: Iterator[EventIn]): UserState = rows.foldLeft(this) { (s, r) =>
+      UserState(s.n + 1, s.cents + math.round(r.value * 100), math.max(s.lastTs, r.tsMicros))
+    }
+  }
   // carries the watermarked `ts` column itself: event-time timeout
   // requires the watermark attribute to survive into the stateful
   // operator's child output (projecting it away fails analysis)
@@ -58,12 +66,32 @@ object EventStream {
   private val scratchDirs = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
   sys.addShutdownHook { scratchDirs.synchronized { scratchDirs.foreach(deleteTree) } }
 
-  /** [[graft.core.Par.run]] — the per-batch zone groups here (tombstone
-    * deletes, feedback appends, post-stream OPTIMIZEs) all write to
-    * disjoint directories, so each group runs as concurrent Spark jobs
-    * and costs its slowest member, not the sum.
+  /** The scratch scope of one query: run `body` against a fresh scratch
+    * root, materialize the frame it returns ONCE (eager
+    * `localCheckpoint`) and reap the root, also when the body throws.
+    * Materializing first is the condition every entry depends on: a
+    * lazy frame over the root's zones, sinks or fates would read a
+    * reaped directory.
     */
-  private def inParallel(ops: (() => Unit)*): Unit = graft.core.Par.run(ops: _*)
+  private[streaming] def scoped(prefix: String)(
+      body: java.nio.file.Path => DataFrame): DataFrame = {
+    val root = scratchDir(prefix)
+    try body(root).localCheckpoint() finally reap(root)
+  }
+
+  /** The post-stream OPTIMIZE: every named zone compacts concurrently
+    * ([[graft.core.Par.run]] — zones live in disjoint dirs, so the group
+    * costs its slowest member), then each must have folded: a zone the
+    * stream fed ends with at least one file and no more than it had.
+    */
+  private def optimizeAll(zones: (String, () => (Int, Int))*): Unit = {
+    val res = new Array[(Int, Int)](zones.size)
+    Par.run(zones.indices.map(i => () => res(i) = zones(i)._2()): _*)
+    zones.map(_._1).zip(res).foreach { case (name, (before, after)) =>
+      require(after <= before && after > 0,
+        s"$name optimize produced $after of $before files")
+    }
+  }
 
   /** ONE 1-row aggregation over a CDC micro-batch yielding both batch
     * scalars every loop needs: the crash-replay self-exclusion cut (min
@@ -81,6 +109,13 @@ object EventStream {
       count(when(col("op") === "D", lit(1)))).head()
     (if (r.isNullAt(0)) Long.MaxValue else r.getLong(0), r.getLong(1) > 0L)
   }
+
+  /** A CDC micro-batch split on `op`: its inserts projected to `cols`,
+    * and its delete ids (`doc_id`).
+    */
+  private def insertsAndDeletes(batch: DataFrame, cols: String*): (DataFrame, DataFrame) =
+    (batch.filter(col("op") === "I").select(cols.map(col): _*),
+      batch.filter(col("op") === "D").select(col("doc_id")))
 
   private def deleteTree(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
@@ -181,6 +216,31 @@ object EventStream {
       .map("%02x".format(_)).mkString
   }
 
+  /** The staged source of a checkpointed maintainer: `build` yields the
+    * ordered batch frames plus a scalar the caller needs (a cut, a
+    * corpus size) and runs only on a cache miss. Each batch is staged as
+    * one parquet file under one scratch dir, and the files get strictly
+    * ascending mtimes in declared order: the file source orders
+    * micro-batches by modification time, and fast sequential copies can
+    * tie. Cached per JVM under `kind:dir` and the content fingerprint of
+    * the `tables` (`<dir>/<table>.parquet`) the frames read
+    * ([[stageSourceOnce]]). Returns the dir, the first batch's schema
+    * and the scalar.
+    */
+  private def stageBatches[A](kind: String, dir: String, tables: String*)(
+      build: => (Seq[DataFrame], A)): (String, StructType, A) =
+    stageSourceOnce(s"$kind:$dir",
+        sourceFingerprint(tables.map(t => s"$dir/$t.parquet"): _*)) {
+      val (batches, scalar) = build
+      val d = scratchDir(kind)
+      batches.zipWithIndex.foreach { case (df, i) =>
+        stageSingleFile(df, d, s"$i.parquet")
+        Files.setLastModifiedTime(d.resolve(s"$i.parquet"),
+          FileTime.fromMillis(1700000000000L + i * 1000L)): Unit
+      }
+      (d.toString, batches.head.schema, scalar)
+    }
+
   /** The events table as a stream: nanos-as-long ts converted to a real
     * event-time timestamp column (same convention as
     * [[graft.core.Tables.events]]).
@@ -269,8 +329,7 @@ object EventStream {
     runDurableWith(df, outputMode, drainAndStop = true)
 
   private def runDurableWith(df: DataFrame, outputMode: String,
-      drainAndStop: Boolean): DataFrame = {
-    val root = scratchDir("sink")
+      drainAndStop: Boolean): DataFrame = scoped("sink") { root =>
     val out = root.resolve("data").toString
     val ckpt = root.resolve("ckpt").toString
     val writer = outputMode match {
@@ -282,78 +341,75 @@ object EventStream {
             batch.write.mode("append").parquet(out)
         }
     }
-    // Materialize (localCheckpoint is eager), then reap in finally: the
-    // RAM-backed sink+checkpoint must not outlive the run, success or
-    // failure. Read back with the stream's own schema: a query whose
-    // batches produced ZERO rows leaves a sink with only the
+    // The RAM-backed sink+checkpoint must not outlive the run, success
+    // or failure ([[scoped]]). Read back with the stream's own schema: a
+    // query whose batches produced ZERO rows leaves a sink with only the
     // `_spark_metadata` log (or, for foreachBatch with zero batches, no
     // directory at all), and schema inference over zero files fails.
-    try {
-      if (drainAndStop) {
-        val q = writer.option("checkpointLocation", ckpt).start()
-        try {
-          // A progress is SETTLED when its batch read zero rows AND every
-          // source reports nothing pending (endOffset caught up to
-          // latestOffset). Basing the predicate on SOURCE OFFSETS — not
-          // input rows alone — keeps it sound for rationed sources
-          // (maxFilesPerTrigger): a TTL-service batch interleaved between
-          // file batches reads zero rows, but its source still advertises
-          // pending files (latestOffset ahead of endOffset), so it cannot
-          // satisfy the predicate with data unread.
-          def settled(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Boolean =
-            p.numInputRows == 0 && p.sources.forall(s =>
-              s.latestOffset == null || s.latestOffset == s.endOffset)
-          // Drained = the LATEST progress is settled. For the BOUNDED
-          // sources this runner contracts for (a staged fixture dir —
-          // nothing arrives after start), one settled batch is a proof:
-          // its planning-time listing saw every file the dir will ever
-          // hold and its offsets are caught up. An unbounded deployment
-          // would need consecutive settled batches to rule out arrivals
-          // between planning and observation — measured here at ~+0.5 s
-          // per run (one extra service-batch wait), which a bounded
-          // replay should not pay. Also drains a source empty from the
-          // start — no input-rows>0 precondition — provided batches fire
-          // at all; a zero-state query over an empty dir may schedule NO
-          // batches, which the no-progress fallback below covers from
-          // query STATUS.
-          def drained: Boolean =
-            q.recentProgress.lastOption.exists(settled)
-          // Fallback for the batchless-empty case: no micro-batch has
-          // EVER run, the engine is demonstrably past initialization and
-          // parked waiting for data (trigger inactive + a waiting status
-          // message — the poll evidence; during first-batch planning or
-          // listing the trigger is active / the message says
-          // initializing, so a slow start cannot satisfy this), and 30s
-          // of that state — well above this host's observed 8-12s
-          // first-batch stalls — without data appearing.
-          def emptyIdle(sinceStart: Long): Boolean =
-            q.recentProgress.isEmpty && sinceStart > 30L * 1000000000L &&
-              !q.status.isDataAvailable && !q.status.isTriggerActive &&
-              q.status.message.toLowerCase(java.util.Locale.ROOT).contains("waiting")
-          val t0 = System.nanoTime()
-          val deadline = t0 + 300L * 1000000000L
-          while (!drained && !emptyIdle(System.nanoTime() - t0) &&
-              System.nanoTime() < deadline) {
-            q.exception.foreach(throw _)
-            Thread.sleep(50)
-          }
-          if (!drained && !emptyIdle(System.nanoTime() - t0))
-            throw new IllegalStateException(
-              "bounded source did not drain within deadline")
-        } finally q.stop()
-      } else {
-        val q = writer
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      if (Files.exists(Paths.get(out)))
-        df.sparkSession.read.schema(df.schema).parquet(out).localCheckpoint()
-      else
-        df.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
-    } finally reap(root)
+    if (drainAndStop) {
+      val q = writer.option("checkpointLocation", ckpt).start()
+      try {
+        // A progress is SETTLED when its batch read zero rows AND every
+        // source reports nothing pending (endOffset caught up to
+        // latestOffset). Basing the predicate on SOURCE OFFSETS — not
+        // input rows alone — keeps it sound for rationed sources
+        // (maxFilesPerTrigger): a TTL-service batch interleaved between
+        // file batches reads zero rows, but its source still advertises
+        // pending files (latestOffset ahead of endOffset), so it cannot
+        // satisfy the predicate with data unread.
+        def settled(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Boolean =
+          p.numInputRows == 0 && p.sources.forall(s =>
+            s.latestOffset == null || s.latestOffset == s.endOffset)
+        // Drained = the LATEST progress is settled. For the BOUNDED
+        // sources this runner contracts for (a staged fixture dir —
+        // nothing arrives after start), one settled batch is a proof:
+        // its planning-time listing saw every file the dir will ever
+        // hold and its offsets are caught up. An unbounded deployment
+        // would need consecutive settled batches to rule out arrivals
+        // between planning and observation — measured here at ~+0.5 s
+        // per run (one extra service-batch wait), which a bounded
+        // replay should not pay. Also drains a source empty from the
+        // start — no input-rows>0 precondition — provided batches fire
+        // at all; a zero-state query over an empty dir may schedule NO
+        // batches, which the no-progress fallback below covers from
+        // query STATUS.
+        def drained: Boolean =
+          q.recentProgress.lastOption.exists(settled)
+        // Fallback for the batchless-empty case: no micro-batch has
+        // EVER run, the engine is demonstrably past initialization and
+        // parked waiting for data (trigger inactive + a waiting status
+        // message — the poll evidence; during first-batch planning or
+        // listing the trigger is active / the message says
+        // initializing, so a slow start cannot satisfy this), and 30s
+        // of that state — well above this host's observed 8-12s
+        // first-batch stalls — without data appearing.
+        def emptyIdle(sinceStart: Long): Boolean =
+          q.recentProgress.isEmpty && sinceStart > 30L * 1000000000L &&
+            !q.status.isDataAvailable && !q.status.isTriggerActive &&
+            q.status.message.toLowerCase(java.util.Locale.ROOT).contains("waiting")
+        val t0 = System.nanoTime()
+        val deadline = t0 + 300L * 1000000000L
+        while (!drained && !emptyIdle(System.nanoTime() - t0) &&
+            System.nanoTime() < deadline) {
+          q.exception.foreach(throw _)
+          Thread.sleep(50)
+        }
+        if (!drained && !emptyIdle(System.nanoTime() - t0))
+          throw new IllegalStateException(
+            "bounded source did not drain within deadline")
+      } finally q.stop()
+    } else {
+      val q = writer
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    if (Files.exists(Paths.get(out)))
+      df.sparkSession.read.schema(df.schema).parquet(out)
+    else
+      df.sparkSession.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
   }
 
   /** Event-time windowed counts with a watermark (6h tumbling windows,
@@ -459,29 +515,34 @@ object EventStream {
   def userRunningStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-
-    val in = readEventsStaged(spark, dir)
-      .select(col("user_id"), col("value"),
-        unix_micros(col("ts")).as("tsMicros"))
-      .as[EventIn]
-    val out = in.groupByKey(_.user_id)
+    val out = runningStatsInput(spark, dir).groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (user: Long, rows: Iterator[EventIn], state: GroupState[UserState]) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0L, Long.MinValue))
-          val next = rows.foldLeft(prev) { (s, r) =>
-            UserState(s.n + 1, s.cents + math.round(r.value * 100), math.max(s.lastTs, r.tsMicros))
-          }
+          val next = state.getOption.getOrElse(UserState(0L, 0L, Long.MinValue)).fold(rows)
           state.update(next)
           (user, next.n, next.cents, next.lastTs)
       }
-    // The changelog holds one state snapshot per (user, micro-batch).
-    // n_events is strictly increasing across a user's snapshots, so the
-    // row with max n_events IS the final state — pick every column from
-    // that row with max_by. (Independent max() per column would be wrong:
-    // value_cents is a running sum, not monotone when values go negative,
-    // and per-column maxes could mix snapshots.)
-    val snapshots = withStatePartitions(spark, 4)(withUnboundedKeyspaceState(spark)(
-      runDurable(out.toDF("user_id", "n_events", "value_cents", "last_ts_micros"), "update")))
+    runningStatsFinal(withStatePartitions(spark, 4)(withUnboundedKeyspaceState(spark)(
+      runDurable(out.toDF("user_id", "n_events", "value_cents", "last_ts_micros"), "update"))))
+  }
+
+  /** st3/st10's input: the staged events as typed [[EventIn]] rows. */
+  private def runningStatsInput(spark: SparkSession, dir: String) = {
+    import spark.implicits._
+    readEventsStaged(spark, dir)
+      .select(col("user_id"), col("value"), unix_micros(col("ts")).as("tsMicros"))
+      .as[EventIn]
+  }
+
+  /** st3/st10's answer from their changelog, which holds one state
+    * snapshot per (user, micro-batch). n_events is strictly increasing
+    * across a user's snapshots, so the row with max n_events IS the
+    * final state — pick every column from that row with max_by.
+    * (Independent max() per column would be wrong: value_cents is a
+    * running sum, not monotone when values go negative, and per-column
+    * maxes could mix snapshots.)
+    */
+  private def runningStatsFinal(snapshots: DataFrame): DataFrame =
     snapshots
       .groupBy(col("user_id"))
       .agg(
@@ -489,7 +550,6 @@ object EventStream {
         max_by(col("value_cents"), col("n_events")).as("value_cents"),
         max_by(col("last_ts_micros"), col("n_events")).as("last_ts_micros"))
       .orderBy(col("user_id"))
-  }
 
   /** [[userRunningStats]] through the MODERN arbitrary-state API
     * (Spark 4 `transformWithState`): a [[RunningStatsProcessor]] with
@@ -514,23 +574,12 @@ object EventStream {
   def userRunningStatsTtl(spark: SparkSession, dir: String,
       ttl: Option[java.time.Duration] = Some(java.time.Duration.ofHours(1))): DataFrame = {
     import spark.implicits._
-    val in = readEventsStaged(spark, dir)
-      .select(col("user_id"), col("value"),
-        unix_micros(col("ts")).as("tsMicros"))
-      .as[EventIn]
-    val out = in.groupByKey(_.user_id)
+    val out = runningStatsInput(spark, dir).groupByKey(_.user_id)
       .transformWithState(new RunningStatsProcessor(ttl),
         org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-    val snapshots = withStatePartitions(spark, 4)(withStateProvider(spark)(
-      runDurableDrained(out.toDF("user_id", "n_events", "value_cents", "last_ts_micros"), "update")))
-    snapshots
-      .groupBy(col("user_id"))
-      .agg(
-        max(col("n_events")).as("n_events"),
-        max_by(col("value_cents"), col("n_events")).as("value_cents"),
-        max_by(col("last_ts_micros"), col("n_events")).as("last_ts_micros"))
-      .orderBy(col("user_id"))
+    runningStatsFinal(withStatePartitions(spark, 4)(withStateProvider(spark)(
+      runDurableDrained(out.toDF("user_id", "n_events", "value_cents", "last_ts_micros"), "update"))))
   }
 
   /** The `StatefulProcessor` behind [[userRunningStatsTtl]] — same fold
@@ -557,10 +606,8 @@ object EventStream {
         ttl.fold(TTLConfig.NONE)(TTLConfig(_)))
     override def handleInputRows(user: Long, rows: Iterator[EventIn],
         timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
-      val prev = if (state.exists()) state.get() else UserState(0L, 0L, Long.MinValue)
-      val next = rows.foldLeft(prev) { (s, r) =>
-        UserState(s.n + 1, s.cents + math.round(r.value * 100), math.max(s.lastTs, r.tsMicros))
-      }
+      val next = (if (state.exists()) state.get()
+        else UserState(0L, 0L, Long.MinValue)).fold(rows)
       state.update(next)
       Iterator.single((user, next.n, next.cents, next.lastTs))
     }
@@ -884,31 +931,27 @@ object EventStream {
     * contract (per-file cap, disjoint sorted spans) is pinned in
     * ShardedWriterSpec.
     */
-  def compactedIngest(spark: SparkSession, dir: String): DataFrame = {
+  def compactedIngest(spark: SparkSession, dir: String): DataFrame = scoped("st11") { root =>
     val (src, schema) = stagedOverlapSource(spark, dir)
-    val root = scratchDir("st11")
     val target = root.resolve("data").toString
-    val ckpt = root.resolve("ckpt").toString
-    try {
-      ingestIncremental(
-        spark, src, schema, target, Seq("event_id"), ckpt,
-        filesPerTrigger = Some(1))
-      val n = spark.read.parquet(target).count()
-      // Target ~4 shards, but never MORE files than the ingest left (at
-      // toy scale two micro-batches can land as two already-large files;
-      // a fixed shard count would then expand, not fold). Real
-      // deployments size by bytes; rows are the local proxy.
-      val preCount = {
-        val (fs, p) = graft.core.Fs.resolve(spark, target)
-        fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      }
-      val shards = math.min(4L, math.max(1L, preCount / 2L))
-      val (before, after) = graft.operators.ShardedWriter.compactParquet(
-        spark, target, col("event_id"), math.max(1L, (n + shards - 1) / shards))
-      require(after < before,
-        s"compaction did not fold the ingest layout ($before -> $after files)")
-      spark.read.parquet(target).orderBy(col("event_id")).localCheckpoint()
-    } finally reap(root)
+    ingestIncremental(
+      spark, src, schema, target, Seq("event_id"), root.resolve("ckpt").toString,
+      filesPerTrigger = Some(1))
+    val n = spark.read.parquet(target).count()
+    // Target ~4 shards, but never MORE files than the ingest left (at
+    // toy scale two micro-batches can land as two already-large files;
+    // a fixed shard count would then expand, not fold). Real
+    // deployments size by bytes; rows are the local proxy.
+    val preCount = {
+      val (fs, p) = graft.core.Fs.resolve(spark, target)
+      fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+    }
+    val shards = math.min(4L, math.max(1L, preCount / 2L))
+    val (before, after) = graft.operators.ShardedWriter.compactParquet(
+      spark, target, col("event_id"), math.max(1L, (n + shards - 1) / shards))
+    require(after < before,
+      s"compaction did not fold the ingest layout ($before -> $after files)")
+    spark.read.parquet(target).orderBy(col("event_id"))
   }
 
   /** st12: the reference's ACTUAL production loop — stream into a live
@@ -979,10 +1022,9 @@ object EventStream {
     */
   def streamSketchZone(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.SketchZone
-    val (src, schema) = stagedDayOverlapSource(spark, dir)
-    val root = scratchDir("st13")
-    val zone = root.resolve("zone").toString
-    try {
+    val (src, schema, _) = stagedDayOverlapSource(spark, dir)
+    scoped("st13") { root =>
+      val zone = root.resolve("zone").toString
       runForeachBatchStream(spark, src, schema) { batch =>
         SketchZone.appendThetaBatch(spark, batch, "day", "user_id", zone): Unit
       }
@@ -993,9 +1035,7 @@ object EventStream {
           col("retained").as("retained_users"),
           col("churned").as("churned_users"))
         .orderBy(col("day"))
-        // materialize before the zone dir is reaped
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** st13's staged source: the st6 overlap shape (evens file, then ALL
@@ -1003,15 +1043,11 @@ object EventStream {
     * aggregates on.
     */
   private def stagedDayOverlapSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st13src:$dir", sourceFingerprint(s"$dir/events.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Unit) =
+    stageBatches("st13src", dir, "events") {
       val events = graft.core.Tables.events(spark, dir)
         .select(col("event_id"), to_date(col("ts")).as("day"), col("user_id"))
-      val d = scratchDir("st13src")
-      stageSingleFile(events.filter(col("event_id") % 2 === 0), d, "a.parquet")
-      stageSingleFile(events, d, "b.parquet")
-      (d.toString, events.schema)
+      (Seq(events.filter(col("event_id") % 2 === 0), events), ())
     }
 
   /** st14: streaming MAINTENANCE of the SCD2 dimension zone — the
@@ -1031,11 +1067,10 @@ object EventStream {
     * q51's from-scratch oracle: maintained ≡ rebuilt.
     */
   def streamScd2(spark: SparkSession, dir: String): DataFrame = {
-    val (src, schema) = stagedOrdersOverlapSource(spark, dir)
-    val root = scratchDir("st14")
-    val log = root.resolve("log").toString
-    val dim = root.resolve("dim").toString
-    try {
+    val (src, schema, _) = stagedOrdersOverlapSource(spark, dir)
+    scoped("st14") { root =>
+      val log = root.resolve("log").toString
+      val dim = root.resolve("dim").toString
       runForeachBatchStream(spark, src, schema) { batch =>
         scd2ApplyBatch(batch, log, dim): Unit
       }
@@ -1043,8 +1078,7 @@ object EventStream {
         .select(col("o_custkey"), col("version"), col("priority"),
           col("valid_from"), col("valid_to"), col("is_current"))
         .orderBy(col("o_custkey"), col("version"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** Key-bucket count for the SCD2 dim zone. Toy-sized here; at scale
@@ -1114,16 +1148,12 @@ object EventStream {
     * [[graft.queries.Relational.scd2Collapse]] consumes.
     */
   private def stagedOrdersOverlapSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st14src:$dir", sourceFingerprint(s"$dir/orders.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Unit) =
+    stageBatches("st14src", dir, "orders") {
       val orders = spark.read.parquet(s"$dir/orders.parquet")
         .select(col("o_custkey"), col("o_orderpriority").as("priority"),
           col("o_orderdate"), col("o_orderkey"))
-      val d = scratchDir("st14src")
-      stageSingleFile(orders.filter(col("o_orderkey") % 2 === 0), d, "a.parquet")
-      stageSingleFile(orders, d, "b.parquet")
-      (d.toString, orders.schema)
+      (Seq(orders.filter(col("o_orderkey") % 2 === 0), orders), ())
     }
 
   /** st16: streaming CDC apply — [[graft.queries.Relational.cdcApply]]'s
@@ -1154,9 +1184,8 @@ object EventStream {
     */
   def streamCdc(spark: SparkSession, dir: String): DataFrame = {
     val (src, schema) = stagedCdcFeedSource(spark, dir)
-    val root = scratchDir("st16")
-    val snap = root.resolve("snap").toString
-    try {
+    scoped("st16") { root =>
+      val snap = root.resolve("snap").toString
       // initial snapshot load: the base table as seq-0 upserts
       val kb = pmod(col("key"), lit(cdcBuckets.toLong)).cast("int")
       spark.read.parquet(s"$dir/orders.parquet")
@@ -1172,8 +1201,7 @@ object EventStream {
         .filter(col("op") =!= "D")
         .select(col("key").as("o_orderkey"), col("cents"))
         .orderBy(col("o_orderkey"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** Key-bucket count for the CDC snapshot zone — st14's knob: rewrite
@@ -1237,9 +1265,8 @@ object EventStream {
     * then ALL changes (a full replay of the first file plus the rest).
     */
   private[streaming] def stagedCdcFeedSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st16src:$dir", sourceFingerprint(s"$dir/lineitem.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType) = {
+    val (src, schema, _) = stageBatches("st16src", dir, "lineitem") {
       val feed = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(
           when(col("l_partkey") % 10 === 0, col("l_orderkey") + 1000000L)
@@ -1247,11 +1274,10 @@ object EventStream {
           col("l_linenumber").cast("long").as("seq"),
           when(col("l_returnflag") === "R", lit("D")).otherwise(lit("U")).as("op"),
           round(col("l_extendedprice") * 100).cast("long").as("new_cents"))
-      val d = scratchDir("st16src")
-      stageSingleFile(feed.filter(col("seq") <= 3), d, "a.parquet")
-      stageSingleFile(feed, d, "b.parquet")
-      (d.toString, feed.schema)
+      (Seq(feed.filter(col("seq") <= 3), feed), ())
     }
+    (src, schema)
+  }
 
   /** st17: streaming MAINTENANCE of the bloom zone — the membership
     * sibling of st15's min/max stats: each micro-batch PK-merges into
@@ -1270,19 +1296,12 @@ object EventStream {
     */
   def streamBloomZone(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.ZoneMap
-    val (src, schema) = stagedRangeOverlapSource(spark, dir)
-    val root = scratchDir("st17")
-    val target = root.resolve("data").toString
-    val blooms = root.resolve("blooms").toString
-    try {
-      runForeachBatchStream(spark, src, schema) { batch =>
-        val s = batch.sparkSession
-        graft.cardano.IdempotentSink.upsertParquet(
-          s, batch, target, Seq("event_id")): Unit
-        if (graft.core.Fs.exists(s, blooms))
-          ZoneMap.appendBlooms(s, target, blooms, "event_id", 65536): Unit
-        else ZoneMap.buildBlooms(s, target, blooms, "event_id", 65536)
-      }
+    val (src, schema, _) = stagedRangeOverlapSource(spark, dir)
+    scoped("st17") { root =>
+      val target = root.resolve("data").toString
+      val blooms = root.resolve("blooms").toString
+      runForeachBatchStream(spark, src, schema)(
+        mergeWithZoneMaps(_, target, stats = None, blooms = Some(blooms)))
       val total = spark.read.parquet(target).inputFiles.length
       val maxId = spark.read.parquet(target)
         .agg(max(col("event_id"))).head().getLong(0)
@@ -1295,8 +1314,28 @@ object EventStream {
         .filter(col("event_id").isin(probes: _*))
         .select(col("event_id"), col("event_type"), col("cents"))
         .orderBy(col("event_id"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
+  }
+
+  /** The zone-map maintainers' batch step (st15, st17, st18, c3): PK-merge
+    * the batch into `target` on event_id, then bring the per-file stats
+    * over `stats._2` and the event_id blooms current — built on the
+    * first batch, then appended for never-covered files only.
+    */
+  private def mergeWithZoneMaps(batch: DataFrame, target: String,
+      stats: Option[(String, Seq[String])], blooms: Option[String]): Unit = {
+    import graft.operators.ZoneMap
+    val s = batch.sparkSession
+    graft.cardano.IdempotentSink.upsertParquet(s, batch, target, Seq("event_id")): Unit
+    stats.foreach { case (dir, cols) =>
+      if (graft.core.Fs.exists(s, dir)) ZoneMap.appendStats(s, target, dir, cols): Unit
+      else ZoneMap.buildStats(s, target, dir, cols)
+    }
+    blooms.foreach { dir =>
+      if (graft.core.Fs.exists(s, dir))
+        ZoneMap.appendBlooms(s, target, dir, "event_id", 65536): Unit
+      else ZoneMap.buildBlooms(s, target, dir, "event_id", 65536)
+    }
   }
 
   /** st18: ONE ingest stream maintaining ALL the zones — st13's theta
@@ -1323,24 +1362,15 @@ object EventStream {
     */
   def streamAllZones(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{SketchZone, ZoneMap}
-    val (src, schema) = stagedAllZonesSource(spark, dir)
-    val root = scratchDir("st18")
-    val target = root.resolve("data").toString
-    val stats = root.resolve("stats").toString
-    val blooms = root.resolve("blooms").toString
-    val sketch = root.resolve("sketch").toString
-    try {
+    val (src, schema, _) = stagedAllZonesSource(spark, dir)
+    scoped("st18") { root =>
+      val target = root.resolve("data").toString
+      val stats = root.resolve("stats").toString
+      val blooms = root.resolve("blooms").toString
+      val sketch = root.resolve("sketch").toString
       runForeachBatchStream(spark, src, schema) { batch =>
-        val s = batch.sparkSession
-        graft.cardano.IdempotentSink.upsertParquet(
-          s, batch, target, Seq("event_id")): Unit
-        if (graft.core.Fs.exists(s, stats))
-          ZoneMap.appendStats(s, target, stats, Seq("event_id")): Unit
-        else ZoneMap.buildStats(s, target, stats, Seq("event_id"))
-        if (graft.core.Fs.exists(s, blooms))
-          ZoneMap.appendBlooms(s, target, blooms, "event_id", 65536): Unit
-        else ZoneMap.buildBlooms(s, target, blooms, "event_id", 65536)
-        SketchZone.appendThetaBatch(s, batch, "day", "user_id", sketch): Unit
+        mergeWithZoneMaps(batch, target, Some(stats -> Seq("event_id")), Some(blooms))
+        SketchZone.appendThetaBatch(batch.sparkSession, batch, "day", "user_id", sketch): Unit
       }
       val nul = lit(null).cast("long")
       // (1) retention/churn from the sketch zone alone (st13's read)
@@ -1383,8 +1413,7 @@ object EventStream {
           col("cents").as("a"), nul.as("b"), nul.as("c"))
       retention.unionByName(range).unionByName(lookup)
         .orderBy(col("section"), col("k"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** st18's staged source: the union of the columns the three zones
@@ -1394,18 +1423,14 @@ object EventStream {
     * is what makes the min/max skipping assertable.
     */
   private def stagedAllZonesSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st18src:$dir", sourceFingerprint(s"$dir/events.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Unit) =
+    stageBatches("st18src", dir, "events") {
       val events = graft.core.Tables.events(spark, dir)
         .select(col("event_id"), to_date(col("ts")).as("day"),
           col("user_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
       val half = events.agg(max(col("event_id"))).head().getLong(0) / 2
-      val d = scratchDir("st18src")
-      stageSingleFile(events.filter(col("event_id") < half), d, "a.parquet")
-      stageSingleFile(events, d, "b.parquet")
-      (d.toString, events.schema)
+      (Seq(events.filter(col("event_id") < half), events), ())
     }
 
   /** c3: the lakehouse MAINTENANCE WEEKEND end-to-end — the composition
@@ -1430,21 +1455,14 @@ object EventStream {
     */
   def lakeMaintenance(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{ShardedWriter, ZoneMap}
-    val (src, schema) = stagedLakeSource(spark, dir)
-    val root = scratchDir("c3")
-    val target = root.resolve("data").toString
-    val stats = root.resolve("stats").toString
-    val statsRebuilt = root.resolve("stats-rebuilt").toString
+    val (src, schema, _) = stagedLakeSource(spark, dir)
     val statCols = Seq("user_id", "sec")
-    try {
-      runForeachBatchStream(spark, src, schema) { batch =>
-        val s = batch.sparkSession
-        graft.cardano.IdempotentSink.upsertParquet(
-          s, batch, target, Seq("event_id")): Unit
-        if (graft.core.Fs.exists(s, stats))
-          ZoneMap.appendStats(s, target, stats, statCols): Unit
-        else ZoneMap.buildStats(s, target, stats, statCols)
-      }
+    scoped("c3") { root =>
+      val target = root.resolve("data").toString
+      val stats = root.resolve("stats").toString
+      val statsRebuilt = root.resolve("stats-rebuilt").toString
+      runForeachBatchStream(spark, src, schema)(
+        mergeWithZoneMaps(_, target, Some(stats -> statCols), blooms = None))
       val n = spark.read.parquet(target).count()
       ShardedWriter.compactZorder2(
         spark, target, "user_id", "sec", math.max(1L, (n + 7) / 8)): Unit
@@ -1463,8 +1481,7 @@ object EventStream {
           countDistinct(col("user_id")).as("users_box"),
           min(col("event_id")).as("min_eid"),
           max(col("event_id")).as("max_eid"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** c3's staged source: events projected to the lake schema
@@ -1473,18 +1490,14 @@ object EventStream {
     * the stats append before the maintenance pass.
     */
   private def stagedLakeSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"c3src:$dir", sourceFingerprint(s"$dir/events.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Unit) =
+    stageBatches("c3src", dir, "events") {
       val events = graft.core.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
           unix_timestamp(col("ts")).as("sec"),
           round(col("value") * 100).cast("long").as("cents"))
       val half = events.agg(max(col("event_id"))).head().getLong(0) / 2
-      val d = scratchDir("c3src")
-      stageSingleFile(events.filter(col("event_id") < half), d, "a.parquet")
-      stageSingleFile(events, d, "b.parquet")
-      (d.toString, events.schema)
+      (Seq(events.filter(col("event_id") < half), events), ())
     }
 
   /** st15: streaming MAINTENANCE of the zone-map stats table — the
@@ -1505,20 +1518,13 @@ object EventStream {
     */
   def streamZoneMapIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.ZoneMap
-    val (src, schema) = stagedRangeOverlapSource(spark, dir)
-    val root = scratchDir("st15")
-    val target = root.resolve("data").toString
-    val stats = root.resolve("stats").toString
+    val (src, schema, _) = stagedRangeOverlapSource(spark, dir)
     val statCols = Seq("event_id")
-    try {
-      runForeachBatchStream(spark, src, schema) { batch =>
-        val s = batch.sparkSession
-        graft.cardano.IdempotentSink.upsertParquet(
-          s, batch, target, Seq("event_id")): Unit
-        if (graft.core.Fs.exists(s, stats))
-          ZoneMap.appendStats(s, target, stats, statCols): Unit
-        else ZoneMap.buildStats(s, target, stats, statCols)
-      }
+    scoped("st15") { root =>
+      val target = root.resolve("data").toString
+      val stats = root.resolve("stats").toString
+      runForeachBatchStream(spark, src, schema)(
+        mergeWithZoneMaps(_, target, Some(stats -> statCols), blooms = None))
       // plan the query from stats alone: lower quarter of the id range
       val hi = spark.read.parquet(stats)
         .agg(max(col("max_event_id"))).head().getLong(0) / 4
@@ -1533,8 +1539,7 @@ object EventStream {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
         .orderBy(col("event_type"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** st19: the persisted ANN index zone
@@ -1557,9 +1562,8 @@ object EventStream {
   def streamAnnIndex(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.AnnIndexZone
     val (src, schema, total) = stagedEmbeddingSource(spark, dir)
-    val root = scratchDir("st19")
-    val zone = root.resolve("annzone").toString
-    try {
+    scoped("st19") { root =>
+      val zone = root.resolve("annzone").toString
       AnnIndexZone.create(spark, zone, expectedCount = total): Unit
       runForeachBatchStream(spark, src, schema) { batch =>
         AnnIndexZone.appendIndex(batch, zone)
@@ -1567,8 +1571,8 @@ object EventStream {
       val emb = graft.core.Tables(spark, dir, "embeddings")
       val query = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qvec"))
-      AnnIndexZone.topK(emb, query, zone, 10).localCheckpoint()
-    } finally reap(root)
+      AnnIndexZone.topK(emb, query, zone, 10)
+    }
   }
 
   /** st27: the IVF-flat index zone ([[graft.operators.IvfIndexZone]])
@@ -1590,9 +1594,8 @@ object EventStream {
   def streamIvfIndex(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{IvfIndexZone, Similarity}
     val (src, schema, _) = stagedEmbeddingSource(spark, dir)
-    val root = scratchDir("st27")
-    val zone = root.resolve("ivfzone").toString
-    try {
+    scoped("st27") { root =>
+      val zone = root.resolve("ivfzone").toString
       // quantizer size comes from TrainingData's shared constant (the
       // st20 discipline): the streamed zone must fit the same k cells
       // as the batch twin (d28) and the oracle's kmeansCtes
@@ -1607,8 +1610,7 @@ object EventStream {
           graft.queries.TrainingData.ivfQueries(spark, dir), zone,
           k = 10, nprobe = 2)
         .orderBy(col("q_id"), col("nn_rank"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** st28: the PQ code zone ([[graft.operators.PqZone]]) maintained
@@ -1628,9 +1630,8 @@ object EventStream {
   def streamPqCodes(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.PqZone
     val (src, schema, _) = stagedEmbeddingSource(spark, dir)
-    val root = scratchDir("st28")
-    val zone = root.resolve("pqzone").toString
-    try {
+    scoped("st28") { root =>
+      val zone = root.resolve("pqzone").toString
       val emb = graft.core.Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       import graft.queries.TrainingData.{pqCodes, pqSubspaces}
@@ -1642,8 +1643,7 @@ object EventStream {
       PqZone.adcTopK(graft.queries.TrainingData.ivfQueries(spark, dir),
           zone, k = 10)
         .orderBy(col("q_id"), col("nn_rank"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** st20: the persisted MinHash signature zone
@@ -1666,14 +1666,13 @@ object EventStream {
   def streamSignatureZone(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.SignatureZone
     val (src, schema, cut) = stagedDocumentSource(spark, dir)
-    val root = scratchDir("st20")
-    val zone = root.resolve("sigzone").toString
     // geometry and threshold come from TrainingData's constants, NOT
     // re-hardcoded here: the streamed zone must hash identically to the
     // batch twin (d22) and the oracle — a local copy would desync them
     // silently the moment the shared constants moved
     import graft.queries.TrainingData.{jaccardThreshold, minhashBands, minhashK, shingleN}
-    try {
+    scoped("st20") { root =>
+      val zone = root.resolve("sigzone").toString
       SignatureZone.create(spark, zone, shingleN, minhashK, minhashBands)
       runForeachBatchStream(spark, src, schema) { batch =>
         SignatureZone.append(batch, zone)
@@ -1683,8 +1682,49 @@ object EventStream {
         .select(col("doc_id"), col("text"))
       SignatureZone.incrementalPairs(docs, delta, zone, jaccardThreshold)
         .orderBy(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
+  }
+
+  /** The admission zones a curation stream maintains under one root:
+    * the MinHash signature zone `sig` (created with TrainingData's
+    * shared geometry, not a copy — the st20 desync argument), the
+    * exact-md5 keeper zone `md5` and, when `ann` gives the embeddings
+    * and their total, the SRP index zone `ann` (plane count fixed from
+    * the FULL expected corpus at creation — d19's capacity rule, what
+    * the oracles re-derive). Each step yields one op per zone; the dirs
+    * are disjoint, so callers run a step as one concurrent
+    * [[graft.core.Par.run]] group (§2.6).
+    */
+  private final class AdmissionZones(spark: SparkSession,
+      root: java.nio.file.Path, ann: Option[(DataFrame, Long)]) {
+    import graft.operators.{AnnIndexZone, Dedup, SignatureZone}
+    import graft.queries.TrainingData.{minhashBands, minhashK, shingleN}
+    val sig = root.resolve("sig").toString
+    val md5 = root.resolve("md5").toString
+    val annDir = root.resolve("ann").toString
+    SignatureZone.create(spark, sig, shingleN, minhashK, minhashBands)
+    ann.foreach { case (_, total) =>
+      AnnIndexZone.create(spark, annDir, expectedCount = total): Unit }
+
+    /** Append `ins` (doc_id, text) to every zone; the index takes the
+      * embedding rows of its doc_ids.
+      */
+    def appends(ins: DataFrame): Seq[() => Unit] =
+      Seq(() => SignatureZone.append(ins, sig),
+        () => Dedup.md5ZoneAppend(ins, col("text"), col("doc_id"), md5)) ++
+        ann.map { case (emb, _) => () => AnnIndexZone.appendIndex(
+          emb.join(ins.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"), annDir) }
+
+    /** Tombstone the `doc_id`s in `dels`. */
+    def deletes(dels: DataFrame): Seq[() => Unit] =
+      Seq(() => SignatureZone.delete(dels, sig), () => Dedup.md5ZoneDelete(dels, md5)) ++
+        ann.map(_ => () => AnnIndexZone.delete(dels.select(col("doc_id").as("vec_id")), annDir))
+
+    /** The post-stream OPTIMIZEs, named for [[optimizeAll]]. */
+    def optimizes: Seq[(String, () => (Int, Int))] =
+      Seq("band" -> (() => SignatureZone.optimize(spark, sig)),
+        "md5" -> (() => Dedup.optimizeMd5Zone(spark, md5))) ++
+        ann.map(_ => "ann" -> (() => AnnIndexZone.optimize(spark, annDir)))
   }
 
   /** st21: BOTH admission zones (exact-md5 + signature) maintained from
@@ -1704,42 +1744,22 @@ object EventStream {
     * oracle end-to-end.
     */
   def streamAdmissionZones(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, SignatureZone}
     val (src, schema, cut) = stagedHistorySource(spark, dir)
-    val root = scratchDir("st21")
-    val sigZone = root.resolve("sig").toString
-    val md5Zone = root.resolve("md5").toString
-    // shared constants, not copies — the st20 desync argument
-    import graft.queries.TrainingData.{minhashBands, minhashK, shingleN}
-    try {
-      SignatureZone.create(spark, sigZone, shingleN, minhashK, minhashBands)
-      runForeachBatchStream(spark, src, schema) { batch =>
-        // disjoint zone dirs — concurrent appends (§2.6)
-        inParallel(
-          () => SignatureZone.append(batch, sigZone),
-          () => Dedup.md5ZoneAppend(batch, col("text"), col("doc_id"), md5Zone))
-      }
+    scoped("st21") { root =>
+      val zones = new AdmissionZones(spark, root, ann = None)
+      runForeachBatchStream(spark, src, schema)(batch => Par.run(zones.appends(batch): _*))
       // OPTIMIZE both zones before serving: fold the file-per-batch
       // storm and the overlap-replayed rows (the source replays the
       // first half of history inside the second batch, so BOTH folds
       // have real duplicates to collapse) — the maintenance pass a
       // deployment schedules; result-invisible because the readers
       // DISTINCT (bands) and min-aggregate (md5), which the oracle
-      // hash then proves end-to-end. Independent zones — concurrent
-      var sOpt: (Int, Int) = null
-      var mOpt: (Int, Int) = null
-      inParallel(
-        () => sOpt = SignatureZone.optimize(spark, sigZone),
-        () => mOpt = Dedup.optimizeMd5Zone(spark, md5Zone))
-      val (sb, sa) = sOpt
-      require(sa <= sb && sa > 0, s"band optimize produced $sa of $sb files")
-      val (mb, ma) = mOpt
-      require(ma <= mb && ma > 0, s"md5 optimize produced $ma of $mb files")
+      // hash then proves end-to-end
+      optimizeAll(zones.optimizes: _*)
       val docs = graft.core.Tables(spark, dir, "documents")
       graft.queries.TrainingData.admissionDecisions(spark,
-          docs, docs.filter(col("doc_id") >= cut), md5Zone, sigZone)
-        .localCheckpoint()
-    } finally reap(root)
+        docs, docs.filter(col("doc_id") >= cut), zones.md5, zones.sig)
+    }
   }
 
   /** st24: ALL THREE admission zones (exact-md5 + signature + ANN
@@ -1765,50 +1785,18 @@ object EventStream {
     * range, because the vector gate needs delta AND history vectors.
     */
   def streamSemanticZones(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{AnnIndexZone, Dedup, SignatureZone}
     val emb = graft.core.Tables(spark, dir, "embeddings")
     val embTotal = graft.core.Tables.countOf(spark, dir, "embeddings")
     val (src, schema, cut) = stagedEmbeddedHistorySource(spark, dir)
-    val root = scratchDir("st24")
-    val sigZone = root.resolve("sig").toString
-    val md5Zone = root.resolve("md5").toString
-    val annZone = root.resolve("ann").toString
-    // shared constants, not copies — the st20 desync argument
-    import graft.queries.TrainingData.{minhashBands, minhashK, shingleN}
-    try {
-      SignatureZone.create(spark, sigZone, shingleN, minhashK, minhashBands)
-      // plane count fixed from the FULL expected corpus at creation
-      // (capacity planning — d19's rule, what the oracle re-derives)
-      AnnIndexZone.create(spark, annZone, expectedCount = embTotal): Unit
-      runForeachBatchStream(spark, src, schema) { batch =>
-        // disjoint zone dirs — concurrent appends (§2.6)
-        inParallel(
-          () => SignatureZone.append(batch, sigZone),
-          () => Dedup.md5ZoneAppend(batch, col("text"), col("doc_id"), md5Zone),
-          () => AnnIndexZone.appendIndex(
-            emb.join(batch.select(col("doc_id").as("vec_id")),
-              Seq("vec_id"), "left_semi"), annZone))
-      }
-      // independent zones — concurrent compactions (§2.6)
-      var sOpt: (Int, Int) = null
-      var mOpt: (Int, Int) = null
-      var aOpt: (Int, Int) = null
-      inParallel(
-        () => sOpt = SignatureZone.optimize(spark, sigZone),
-        () => mOpt = Dedup.optimizeMd5Zone(spark, md5Zone),
-        () => aOpt = AnnIndexZone.optimize(spark, annZone))
-      val (sb, sa) = sOpt
-      require(sa <= sb && sa > 0, s"band optimize produced $sa of $sb files")
-      val (mb, ma) = mOpt
-      require(ma <= mb && ma > 0, s"md5 optimize produced $ma of $mb files")
-      val (ab, aa) = aOpt
-      require(aa <= ab && aa > 0, s"ann optimize produced $aa of $ab files")
+    scoped("st24") { root =>
+      val zones = new AdmissionZones(spark, root, Some(emb -> embTotal))
+      runForeachBatchStream(spark, src, schema)(batch => Par.run(zones.appends(batch): _*))
+      optimizeAll(zones.optimizes: _*)
       val docs = graft.core.Tables(spark, dir, "documents")
       graft.queries.TrainingData.semanticAdmissionDecisions(spark, docs, emb,
-          docs.filter(col("doc_id") >= cut && col("doc_id") < embTotal),
-          md5Zone, sigZone, annZone)
-        .localCheckpoint()
-    } finally reap(root)
+        docs.filter(col("doc_id") >= cut && col("doc_id") < embTotal),
+        zones.md5, zones.sig, zones.annDir)
+    }
   }
 
   /** st22: the shingle document-frequency zone
@@ -1830,11 +1818,10 @@ object EventStream {
   def streamDfZone(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, ShingleDfZone, SignatureZone}
     val (src, schema, cut) = stagedDisjointHistorySource(spark, dir)
-    val root = scratchDir("st22")
-    val dfZone = root.resolve("df").toString
-    val sigZone = root.resolve("sig").toString
     import graft.queries.TrainingData.{jaccardThreshold, minhashBands, minhashK, shingleN}
-    try {
+    scoped("st22") { root =>
+      val dfZone = root.resolve("df").toString
+      val sigZone = root.resolve("sig").toString
       ShingleDfZone.create(spark, dfZone, shingleN)
       runForeachBatchStreamWithId(spark, src, schema) { (batch, id) =>
         ShingleDfZone.append(batch, dfZone, id)
@@ -1849,8 +1836,7 @@ object EventStream {
         .select(col("doc_id"), col("text"))
       SignatureZone.incrementalPairs(docs, delta, sigZone, jaccardThreshold)
         .orderBy(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
-    } finally reap(root)
+    }
   }
 
   /** st23: zone DELETES arriving THROUGH the ingest stream — the CDC
@@ -1875,48 +1861,28 @@ object EventStream {
     * candidate a-side.
     */
   def streamZoneTombstones(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{Dedup, SignatureZone}
     val (src, schema, cut) = stagedCdcHistorySource(spark, dir)
-    val root = scratchDir("st23")
-    val sigZone = root.resolve("sig").toString
-    val md5Zone = root.resolve("md5").toString
-    import graft.queries.TrainingData.{minhashBands, minhashK, shingleN}
-    try {
-      SignatureZone.create(spark, sigZone, shingleN, minhashK, minhashBands)
+    scoped("st23") { root =>
+      val zones = new AdmissionZones(spark, root, ann = None)
       runForeachBatchStream(spark, src, schema) { batch =>
-        val ins = batch.filter(col("op") === "I")
-          .select(col("doc_id"), col("text"))
-        val dels = batch.filter(col("op") === "D").select(col("doc_id"))
+        val (ins, dels) = insertsAndDeletes(batch, "doc_id", "text")
         // the four writes land in four disjoint dirs (bands, md5 rows,
         // and the two tombstone lists) and no decision reads between
         // them inside a batch — one concurrent group (§2.6)
-        inParallel(
-          () => SignatureZone.append(ins, sigZone),
-          () => Dedup.md5ZoneAppend(ins, col("text"), col("doc_id"), md5Zone),
-          () => SignatureZone.delete(dels, sigZone),
-          () => Dedup.md5ZoneDelete(dels, md5Zone))
+        Par.run(zones.appends(ins) ++ zones.deletes(dels): _*)
       }
       // retention GC in the streamed posture: fold the tombstones (and
       // the per-batch file storm) for good before serving — independent
       // zones, concurrent compactions (§2.6)
-      var sOpt: (Int, Int) = null
-      var mOpt: (Int, Int) = null
-      inParallel(
-        () => sOpt = SignatureZone.optimize(spark, sigZone),
-        () => mOpt = Dedup.optimizeMd5Zone(spark, md5Zone))
-      val (sb, sa) = sOpt
-      require(sa <= sb && sa > 0, s"band optimize produced $sa of $sb files")
+      optimizeAll(zones.optimizes: _*)
       // no tombstone ROWS may survive the fold; the dir itself may
       // linger only as an empty scaffold a concurrent marker left
-      require(!graft.core.Fs.hasParquetFiles(spark, s"$sigZone/tombstones"),
+      require(!graft.core.Fs.hasParquetFiles(spark, s"${zones.sig}/tombstones"),
         "optimize left the band tombstone list")
-      val (mb, ma) = mOpt
-      require(ma <= mb && ma > 0, s"md5 optimize produced $ma of $mb files")
       val docs = graft.core.Tables(spark, dir, "documents")
       graft.queries.TrainingData.admissionDecisions(spark,
-          docs, docs.filter(col("doc_id") >= cut), md5Zone, sigZone)
-        .localCheckpoint()
-    } finally reap(root)
+        docs, docs.filter(col("doc_id") >= cut), zones.md5, zones.sig)
+    }
   }
 
   /** st25: the ADMISSION LOOP run FROM the checkpointed stream with all
@@ -1984,33 +1950,24 @@ object EventStream {
     * identical fates — `SemanticLoopSpec` pins the decide step under
     * exactly that replay.
     */
-  def streamSemanticAdmissionLoop(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchDir("st25")
-    try runSemanticAdmissionLoop(spark, dir, root)
-    finally reap(root)
-  }
+  def streamSemanticAdmissionLoop(spark: SparkSession, dir: String): DataFrame =
+    scoped("st25")(runSemanticAdmissionLoop(spark, dir, _))
 
   /** st25's core against a caller-owned root (the spec inspects the
-    * zones the loop leaves behind; the public entry reaps them).
+    * zones the loop leaves behind; the public entry reaps them). The
+    * answer is left lazy over the root's fates: the caller materializes
+    * it once ([[scoped]]).
     */
   private[graft] def runSemanticAdmissionLoop(spark: SparkSession,
       dir: String, root: java.nio.file.Path): DataFrame = {
-    import graft.operators.{AnnIndexZone, Dedup, SignatureZone}
-    import graft.queries.TrainingData.{minhashBands, minhashK, shingleN}
     val emb = graft.core.Tables(spark, dir, "embeddings")
     val embTotal = graft.core.Tables.countOf(spark, dir, "embeddings")
-    val (src, schema) = stagedCdcEmbeddedLoopSource(spark, dir)
-    val sigZone = root.resolve("sig").toString
-    val md5Zone = root.resolve("md5").toString
-    val annZone = root.resolve("ann").toString
+    val (src, schema, _) = stagedCdcLoopSource(spark, dir)
     val fates = root.resolve("fates").toString
     val docs = graft.core.Tables(spark, dir, "documents")
-    SignatureZone.create(spark, sigZone, shingleN, minhashK, minhashBands)
-    AnnIndexZone.create(spark, annZone, expectedCount = embTotal): Unit
+    val zones = new AdmissionZones(spark, root, Some(emb -> embTotal))
     runForeachBatchStreamWithId(spark, src, schema) { (batch, id) =>
-      val ins = batch.filter(col("op") === "I")
-        .select(col("doc_id"), col("text"))
-      val dels = batch.filter(col("op") === "D").select(col("doc_id"))
+      val (ins, dels) = insertsAndDeletes(batch, "doc_id", "text")
       // ONE 1-row agg per batch yields the self-exclusion cut and the
       // delete-presence flag ([[batchCutAndDeletes]]) — delete-free
       // batches skip the three zero-row tombstone writes outright
@@ -2020,10 +1977,7 @@ object EventStream {
       // three zones' tombstone dirs are disjoint — concurrent jobs
       // (§2.6), ordering preserved GROUP-wise (all deletes join before
       // the decide below)
-      if (hasDels) inParallel(
-        () => SignatureZone.delete(dels, sigZone),
-        () => Dedup.md5ZoneDelete(dels, md5Zone),
-        () => AnnIndexZone.delete(dels.select(col("doc_id").as("vec_id")), annZone))
+      if (hasDels) Par.run(zones.deletes(dels): _*)
       // decide (batch 0 is history backfill — nothing to decide) and
       // MATERIALIZE the fates before any feedback append; overwrite
       // makes a checkpoint-replayed batch rewrite identical fates.
@@ -2032,18 +1986,13 @@ object EventStream {
       // re-read and globally ordered after the stream
       if (id > 0) {
         graft.queries.TrainingData.semanticAdmissionDecisions(
-            spark, docs, emb, ins, md5Zone, sigZone, annZone,
+            spark, docs, emb, ins, zones.md5, zones.sig, zones.annDir,
             selfCutOpt = Some(selfCut), ordered = false)
           .write.mode("overwrite").parquet(s"$fates/round=$id")
       }
       // ...then feed back: the batch joins ingested history (disjoint
       // zone dirs — concurrent, after the fates materialized above)
-      inParallel(
-        () => SignatureZone.append(ins, sigZone),
-        () => Dedup.md5ZoneAppend(ins, col("text"), col("doc_id"), md5Zone),
-        () => AnnIndexZone.appendIndex(
-          emb.join(ins.select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi"), annZone))
+      Par.run(zones.appends(ins): _*)
       // one round's working set, not K (c9's release discipline)
       graft.core.Caches.release()
     }
@@ -2051,24 +2000,11 @@ object EventStream {
     // per-batch file storm for good (result-invisible: fates are on
     // disk; the folded zones answer later probes identically) —
     // independent zones, concurrent compactions (§2.6)
-    var sOpt: (Int, Int) = null
-    var mOpt: (Int, Int) = null
-    var aOpt: (Int, Int) = null
-    inParallel(
-      () => sOpt = SignatureZone.optimize(spark, sigZone),
-      () => mOpt = Dedup.optimizeMd5Zone(spark, md5Zone),
-      () => aOpt = AnnIndexZone.optimize(spark, annZone))
-    val (sb, sa) = sOpt
-    require(sa <= sb && sa > 0, s"band optimize produced $sa of $sb files")
-    val (mb, ma) = mOpt
-    require(ma <= mb && ma > 0, s"md5 optimize produced $ma of $mb files")
-    val (ab, aa) = aOpt
-    require(aa <= ab && aa > 0, s"ann optimize produced $aa of $ab files")
+    optimizeAll(zones.optimizes: _*)
     spark.read.parquet(fates)
       .select(col("doc_id"), col("round").cast("long").as("round"),
         col("fate"), col("dup_of"), col("quality_score"))
       .orderBy(col("doc_id"))
-      .localCheckpoint()
   }
 
   /** st29: the FULL STREAMED PRODUCTION PIPELINE — the terminal
@@ -2128,11 +2064,8 @@ object EventStream {
     * against history — history text, vectors, and shards are never
     * re-read.
     */
-  def streamProductionPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchDir("st29")
-    try runProductionPipeline(spark, dir, root)
-    finally reap(root)
-  }
+  def streamProductionPipeline(spark: SparkSession, dir: String): DataFrame =
+    scoped("st29")(runProductionPipeline(spark, dir, _))
 
   /** st30: st29 with the DECISION-STATE REFRESH closed into the loop —
     * the missing half of the refresh discipline (zone GEOMETRY already
@@ -2166,11 +2099,8 @@ object EventStream {
     * that a replayed batch-3 refresh+decide over crash-point zones
     * reproduces round 3's recorded fates exactly.
     */
-  def streamRefreshLoop(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchDir("st30")
-    try runProductionPipeline(spark, dir, root, refreshAtBatch = Some(3L))
-    finally reap(root)
-  }
+  def streamRefreshLoop(spark: SparkSession, dir: String): DataFrame =
+    scoped("st30")(runProductionPipeline(spark, dir, _, refreshAtBatch = Some(3L)))
 
   /** st31: st29 with the MEDIA modality closed into the loop — the
     * five-gate terminal shape (calibrated quality, exact-md5, text
@@ -2187,11 +2117,8 @@ object EventStream {
     * chunk rows already landed decides identically (the st25
     * crash-replay contract extended to the fourth modality).
     */
-  def streamMediaLoop(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchDir("st31")
-    try runProductionPipeline(spark, dir, root, mediaGate = true)
-    finally reap(root)
-  }
+  def streamMediaLoop(spark: SparkSession, dir: String): DataFrame =
+    scoped("st31")(runProductionPipeline(spark, dir, _, mediaGate = true))
 
   /** st32: the TOKENIZER REFRESH closed into the streamed loop — the
     * last trained structure to get the zone + scheduled-re-fit
@@ -2242,21 +2169,19 @@ object EventStream {
     * join-free; md5 maintenance is delta-sized appends. Nothing
     * rescans history between refreshes.
     */
-  def streamTokenizerLoop(spark: SparkSession, dir: String): DataFrame = {
-    val root = scratchDir("st32")
-    try runTokenizerLoop(spark, dir, root, refreshAtBatch = Some(3L))
-    finally reap(root)
-  }
+  def streamTokenizerLoop(spark: SparkSession, dir: String): DataFrame =
+    scoped("st32")(runTokenizerLoop(spark, dir, _, refreshAtBatch = Some(3L)))
 
   /** st32's core against a caller-owned root (the spec inspects the
-    * zones and replays the refresh; the public entry reaps them).
+    * zones and replays the refresh; the public entry reaps them and
+    * materializes the lazy answer once, [[scoped]]).
     */
   private[graft] def runTokenizerLoop(spark: SparkSession, dir: String,
       root: java.nio.file.Path,
       refreshAtBatch: Option[Long] = None): DataFrame = {
     import graft.operators.{Bpe, Dedup}
     import graft.queries.TrainingData
-    val (src, schema) = stagedCdcEmbeddedLoopSource(spark, dir)
+    val (src, schema, _) = stagedCdcLoopSource(spark, dir)
     val md5Zone = root.resolve("md5").toString
     val bpeZone = root.resolve("bpe").toString
     val priced = root.resolve("priced").toString
@@ -2267,9 +2192,7 @@ object EventStream {
     Bpe.saveMerges(spark, Bpe.train(docs.filter(col("doc_id") < histCut),
       col("text"), TrainingData.bpeVocabTop, TrainingData.bpeMerges), bpeZone)
     runForeachBatchStreamWithId(spark, src, schema) { (batch, id) =>
-      val ins = batch.filter(col("op") === "I")
-        .select(col("doc_id"), col("text"))
-      val dels = batch.filter(col("op") === "D").select(col("doc_id"))
+      val (ins, dels) = insertsAndDeletes(batch, "doc_id", "text")
       // tombstones FIRST: the re-fit reads the corpus as of this batch
       Dedup.md5ZoneDelete(dels, md5Zone)
       if (refreshAtBatch.contains(id)) {
@@ -2302,42 +2225,36 @@ object EventStream {
       graft.core.Caches.release()
     }
     // retention GC in the streamed posture (st25's closing discipline)
-    val (mb, ma) = Dedup.optimizeMd5Zone(spark, md5Zone)
-    require(ma <= mb && ma > 0, s"md5 optimize produced $ma of $mb files")
+    optimizeAll("md5" -> (() => Dedup.optimizeMd5Zone(spark, md5Zone)))
     spark.read.parquet(priced)
       .select(col("doc_id"), col("round").cast("long").as("round"),
         col("n_words"), col("n_syms0"), col("n_bpe_tokens"),
         col("compression"))
       .orderBy(col("doc_id"))
-      .localCheckpoint()
   }
 
   /** st29/st30/st31's core against a caller-owned root (the specs
     * inspect zones and per-round shards; the public entries reap
-    * them). `refreshAtBatch`: run the scheduled decision-state refresh
-    * at the start of this batch id (st30); None = the slice-0 fit
-    * serves the whole loop (st29). `mediaGate`: maintain the Hamming
-    * zone and decide with the fifth (media) gate (st31).
+    * them and materialize the lazy answer once, [[scoped]]).
+    * `refreshAtBatch`: run the scheduled decision-state refresh at the
+    * start of this batch id (st30); None = the slice-0 fit serves the
+    * whole loop (st29). `mediaGate`: maintain the Hamming zone and
+    * decide with the fifth (media) gate (st31).
     */
   private[graft] def runProductionPipeline(spark: SparkSession,
       dir: String, root: java.nio.file.Path,
       refreshAtBatch: Option[Long] = None,
       mediaGate: Boolean = false): DataFrame = {
-    import graft.operators.{AnnIndexZone, Dedup, SignatureZone, Similarity}
+    import graft.operators.{Dedup, Similarity}
     import graft.queries.TrainingData
-    import graft.queries.TrainingData.{minhashBands, minhashK, shingleN}
     val emb = graft.core.Tables(spark, dir, "embeddings")
     val embTotal = graft.core.Tables.countOf(spark, dir, "embeddings")
-    val (src, schema) = stagedCdcProductionSource(spark, dir)
-    val sigZone = root.resolve("sig").toString
-    val md5Zone = root.resolve("md5").toString
-    val annZone = root.resolve("ann").toString
+    val (src, schema, _) = stagedCdcLoopSource(spark, dir)
     val fates = root.resolve("fates").toString
     val shards = root.resolve("shards").toString
     val docs = graft.core.Tables(spark, dir, "documents")
     val hamZone = root.resolve("ham").toString
-    SignatureZone.create(spark, sigZone, shingleN, minhashK, minhashBands)
-    AnnIndexZone.create(spark, annZone, expectedCount = embTotal): Unit
+    val zones = new AdmissionZones(spark, root, Some(emb -> embTotal))
     if (mediaGate)
       graft.operators.HammingZone.create(spark, hamZone,
         TrainingData.audioHammingBits, TrainingData.audioHammingMax,
@@ -2355,9 +2272,7 @@ object EventStream {
       Similarity.kmeansFit(emb.filter(col("vec_id") < histCut)),
       s"$root/cents")
     runForeachBatchStreamWithId(spark, src, schema) { (batch, id) =>
-      val ins = batch.filter(col("op") === "I")
-        .select(col("doc_id"), col("source"), col("text"))
-      val dels = batch.filter(col("op") === "D").select(col("doc_id"))
+      val (ins, dels) = insertsAndDeletes(batch, "doc_id", "source", "text")
       // ONE 1-row agg per batch yields the self-exclusion cut for the
       // refresh and every decide gate AND whether this batch carries
       // deletes at all ([[batchCutAndDeletes]]) — delete-free batches
@@ -2367,10 +2282,7 @@ object EventStream {
       // tombstones FIRST (st25's rule: this batch's decisions see the
       // corpus as of this batch) — disjoint zone dirs, concurrent jobs
       // (§2.6); the whole group joins before the refresh/decide below
-      if (hasDels) inParallel(Seq(
-        () => SignatureZone.delete(dels, sigZone),
-        () => Dedup.md5ZoneDelete(dels, md5Zone),
-        () => AnnIndexZone.delete(dels.select(col("doc_id").as("vec_id")), annZone)) ++
+      if (hasDels) Par.run(zones.deletes(dels) ++
         (if (mediaGate)
           Seq(() => graft.operators.HammingZone.delete(dels, hamZone))
         else Nil): _*)
@@ -2389,7 +2301,7 @@ object EventStream {
         // The live history is read from the md5 zone's OWN keeper
         // rows: ingested minus tombstoned, exactly the state every
         // gate probes — no side-channel corpus knowledge.
-        val liveAll = Dedup.md5ZoneRead(spark, md5Zone)
+        val liveAll = Dedup.md5ZoneRead(spark, zones.md5)
           .select(col("keeper_id").as("doc_id")).distinct()
         val live = graft.core.Caches.persistTracked(
           if (selfCut == Long.MaxValue) liveAll
@@ -2398,7 +2310,7 @@ object EventStream {
         // disjoint zone dirs — concurrent rebuilds (§2.6): the
         // threshold scan back-fills the Lloyd fit's driver-sequential
         // seeding tail
-        inParallel(
+        Par.run(
           () => graft.operators.ZoneRebuild.rebuild(spark, s"$root/cal") { staging =>
             TrainingData.calibrationThresholds(
                 docs.join(live, Seq("doc_id"), "left_semi")
@@ -2426,11 +2338,11 @@ object EventStream {
         // any feedback append (c9's write-then-append ordering)
         val decided =
           if (mediaGate) TrainingData.mediaAdmissionDecisions(
-            spark, docs, emb, ins, md5Zone, sigZone, annZone, hamZone,
+            spark, docs, emb, ins, zones.md5, zones.sig, zones.annDir, hamZone,
             calThresholds = Some(cal), deltaSigs = batchSigs,
             selfCutOpt = Some(selfCut), ordered = false)
           else TrainingData.semanticAdmissionDecisions(
-            spark, docs, emb, ins, md5Zone, sigZone, annZone,
+            spark, docs, emb, ins, zones.md5, zones.sig, zones.annDir,
             calThresholds = Some(cal),
             selfCutOpt = Some(selfCut), ordered = false)
         decided.write.mode("overwrite").parquet(s"$fates/round=$id")
@@ -2456,39 +2368,17 @@ object EventStream {
       }) else Nil
       // ...then feed back: the batch joins ingested history (disjoint
       // zone dirs — concurrent, after the fates materialized)
-      inParallel(shardTail ++ Seq(
-        () => SignatureZone.append(ins.select(col("doc_id"), col("text")), sigZone),
-        () => Dedup.md5ZoneAppend(ins, col("text"), col("doc_id"), md5Zone),
-        () => AnnIndexZone.appendIndex(
-          emb.join(ins.select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi"), annZone)) ++
+      Par.run(shardTail ++ zones.appends(ins) ++
         batchSigs.map(bs =>
           () => graft.operators.HammingZone.append(bs, hamZone)): _*)
       graft.core.Caches.release()
     }
     // retention GC in the streamed posture (st25's closing discipline)
     // — independent zones, concurrent compactions (§2.6)
-    var sOpt: (Int, Int) = null
-    var mOpt: (Int, Int) = null
-    var aOpt: (Int, Int) = null
-    var hOpt: (Int, Int) = null
-    inParallel(Seq(
-      () => sOpt = SignatureZone.optimize(spark, sigZone),
-      () => mOpt = Dedup.optimizeMd5Zone(spark, md5Zone),
-      () => aOpt = AnnIndexZone.optimize(spark, annZone)) ++
+    optimizeAll(zones.optimizes ++
       (if (mediaGate)
-        Seq(() => hOpt = graft.operators.HammingZone.optimize(spark, hamZone))
+        Seq("hamming" -> (() => graft.operators.HammingZone.optimize(spark, hamZone)))
       else Nil): _*)
-    val (sb, sa) = sOpt
-    require(sa <= sb && sa > 0, s"band optimize produced $sa of $sb files")
-    val (mb, ma) = mOpt
-    require(ma <= mb && ma > 0, s"md5 optimize produced $ma of $mb files")
-    val (ab, aa) = aOpt
-    require(aa <= ab && aa > 0, s"ann optimize produced $aa of $ab files")
-    if (mediaGate) {
-      val (hb, ha) = hOpt
-      require(ha <= hb && ha > 0, s"hamming optimize produced $ha of $hb files")
-    }
     spark.read.parquet(fates)
       .select(col("doc_id"), col("round").cast("long").as("round"),
         col("fate"), col("dup_of"), col("quality_score"))
@@ -2497,42 +2387,32 @@ object EventStream {
           col("start_off"), col("seq_start"), col("seq_end")),
         Seq("doc_id"), "left")
       .orderBy(col("doc_id"))
-      .localCheckpoint()
   }
 
-  /** st29's staged source: st25's CDC-over-embedded-quarters shape
-    * (see [[stagedCdcEmbeddedLoopSource]]) carrying the `source`
-    * column the calibrated gate keys on.
+  /** The staged source of the admission loops (st25, st29-st32): the
+    * EMBEDDED window in QUARTERS under an `op` column — batch 0 = slice
+    * 0 (history backfill), batches 1..3 = slices 1..3 (successive
+    * deltas); batch 2 additionally carries the delete traffic (every
+    * earlier-ingested `doc_id % 17 = 3`, i.e. ids below the slice-2
+    * boundary — rows with op = 'D' and empty source and text). Carries
+    * the `source` column the calibrated gate keys on; the uncalibrated
+    * loops ignore it.
     */
-  private def stagedCdcProductionSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st29src:$dir", sourceFingerprint(
-          s"$dir/documents.parquet", s"$dir/embeddings.parquet")) {
+  private[streaming] def stagedCdcLoopSource(
+      spark: SparkSession, dir: String): (String, StructType, Unit) =
+    stageBatches("st29src", dir, "documents", "embeddings") {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("source"), col("text"))
       val e = spark.read.parquet(s"$dir/embeddings.parquet").count()
       val bounds = (1 to 3).map(k => e * k / 4L)
-      val d = scratchDir("st29src")
-      val a = docs.filter(col("doc_id") < bounds(0)).withColumn("op", lit("I"))
-      val b = docs.filter(col("doc_id") >= bounds(0) && col("doc_id") < bounds(1))
-        .withColumn("op", lit("I"))
-      val c = docs.filter(col("doc_id") >= bounds(1) && col("doc_id") < bounds(2))
-        .withColumn("op", lit("I"))
-        .unionAll(docs
-          .filter(col("doc_id") < bounds(1) && col("doc_id") % 17 === 3)
-          .select(col("doc_id"), lit("").as("source"), lit("").as("text"),
-            lit("D").as("op")))
-      val dd = docs.filter(col("doc_id") >= bounds(2) && col("doc_id") < e)
-        .withColumn("op", lit("I"))
-      Seq(("a", a), ("b", b), ("c", c), ("d", dd)).zipWithIndex
-        .foreach { case ((n, df), i) =>
-          stageSingleFile(df, d, s"$n.parquet")
-          Files.setLastModifiedTime(d.resolve(s"$n.parquet"),
-            java.nio.file.attribute.FileTime.fromMillis(
-              1700000000000L + i * 1000L)): Unit
-        }
-      (d.toString, a.schema)
+      def ins(slice: org.apache.spark.sql.Column) =
+        docs.filter(slice).withColumn("op", lit("I"))
+      val id = col("doc_id")
+      val dels = docs.filter(id < bounds(1) && id % 17 === 3)
+        .select(id, lit("").as("source"), lit("").as("text"), lit("D").as("op"))
+      (Seq(ins(id < bounds(0)), ins(id >= bounds(0) && id < bounds(1)),
+        ins(id >= bounds(1) && id < bounds(2)).unionAll(dels),
+        ins(id >= bounds(2) && id < e)), ())
     }
 
   /** st26: the Hamming-signature zone ([[graft.operators.HammingZone]])
@@ -2551,86 +2431,40 @@ object EventStream {
     import graft.operators.HammingZone
     import graft.queries.TrainingData.{audioHammingBits, audioHammingChunks, audioHammingMax}
     val (src, schema, cut) = stagedDocumentSource(spark, dir)
-    val root = scratchDir("st26")
-    val zone = root.resolve("ham").toString
-    try {
+    scoped("st26") { root =>
+      val zone = root.resolve("ham").toString
       HammingZone.create(spark, zone,
         audioHammingBits, audioHammingMax, audioHammingChunks)
       runForeachBatchStream(spark, src, schema) { batch =>
         HammingZone.append(graft.queries.TrainingData.audioSigs(batch), zone)
       }
-      val (fb, fa) = HammingZone.optimize(spark, zone)
-      require(fa <= fb && fa > 0, s"hamming optimize produced $fa of $fb files")
+      optimizeAll("hamming" -> (() => HammingZone.optimize(spark, zone)))
       val docs = graft.core.Tables(spark, dir, "documents")
       HammingZone.incrementalPairs(
           graft.queries.TrainingData.audioSigs(
             docs.filter(col("doc_id") >= cut)), zone)
         .orderBy(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
-    } finally reap(root)
-  }
-
-  /** st25's staged source: the EMBEDDED window in QUARTERS under an
-    * `op` column — batch a = slice 0 (history backfill), batches b..d =
-    * slices 1..3 (successive deltas); batch c additionally carries the
-    * delete traffic (every earlier-ingested `doc_id % 17 = 3`, i.e.
-    * ids below the slice-2 boundary — rows with op = 'D' and empty
-    * text). File mtimes are pinned ascending so the file source's
-    * timestamp ordering can never tie-break four fast copies out of
-    * slice order.
-    */
-  private def stagedCdcEmbeddedLoopSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st25src:$dir", sourceFingerprint(
-          s"$dir/documents.parquet", s"$dir/embeddings.parquet")) {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val e = spark.read.parquet(s"$dir/embeddings.parquet").count()
-      val bounds = (1 to 3).map(k => e * k / 4L)
-      val d = scratchDir("st25src")
-      val a = docs.filter(col("doc_id") < bounds(0)).withColumn("op", lit("I"))
-      val b = docs.filter(col("doc_id") >= bounds(0) && col("doc_id") < bounds(1))
-        .withColumn("op", lit("I"))
-      val c = docs.filter(col("doc_id") >= bounds(1) && col("doc_id") < bounds(2))
-        .withColumn("op", lit("I"))
-        .unionAll(docs
-          .filter(col("doc_id") < bounds(1) && col("doc_id") % 17 === 3)
-          .select(col("doc_id"), lit("").as("text"), lit("D").as("op")))
-      val dd = docs.filter(col("doc_id") >= bounds(2) && col("doc_id") < e)
-        .withColumn("op", lit("I"))
-      Seq(("a", a), ("b", b), ("c", c), ("d", dd)).zipWithIndex
-        .foreach { case ((n, df), i) =>
-          stageSingleFile(df, d, s"$n.parquet")
-          Files.setLastModifiedTime(d.resolve(s"$n.parquet"),
-            java.nio.file.attribute.FileTime.fromMillis(
-              1700000000000L + i * 1000L)): Unit
-        }
-      (d.toString, a.schema)
     }
+  }
 
   /** st23's staged source: history in the overlap-replay shape with an
     * `op` column — batch a inserts the first half, batch b re-inserts
     * ALL of history and deletes every `doc_id % 17 = 3` (rows with
     * op = 'D' and empty text).
     */
-  private def stagedCdcHistorySource(
-      spark: SparkSession, dir: String): (String, StructType, java.lang.Long) =
-    stageSourceOnce(
-        s"st23src:$dir", sourceFingerprint(s"$dir/documents.parquet")) {
+  private[streaming] def stagedCdcHistorySource(
+      spark: SparkSession, dir: String): (String, StructType, Long) =
+    stageBatches("st23src", dir, "documents") {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val cut = docs.count() * 4L / 5L
-      val d = scratchDir("st23src")
       val a = docs.filter(col("doc_id") < cut / 2)
         .withColumn("op", lit("I"))
       val b = docs.filter(col("doc_id") < cut)
         .withColumn("op", lit("I"))
         .unionAll(docs.filter(col("doc_id") < cut && col("doc_id") % 17 === 3)
           .select(col("doc_id"), lit("").as("text"), lit("D").as("op")))
-      stageSingleFile(a, d, "a.parquet")
-      stageSingleFile(b, d, "b.parquet")
-      (d.toString, a.schema, java.lang.Long.valueOf(cut))
+      (Seq(a, b), cut)
     }
 
   /** st22's staged source: history (ids < cut) as two DISJOINT
@@ -2639,17 +2473,13 @@ object EventStream {
     * at the operator spec level.
     */
   private def stagedDisjointHistorySource(
-      spark: SparkSession, dir: String): (String, StructType, java.lang.Long) =
-    stageSourceOnce(
-        s"st22src:$dir", sourceFingerprint(s"$dir/documents.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Long) =
+    stageBatches("st22src", dir, "documents") {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val cut = docs.count() * 4L / 5L
-      val d = scratchDir("st22src")
-      stageSingleFile(docs.filter(col("doc_id") < cut / 2), d, "a.parquet")
-      stageSingleFile(docs.filter(col("doc_id") >= cut / 2 &&
-        col("doc_id") < cut), d, "b.parquet")
-      (d.toString, docs.schema, java.lang.Long.valueOf(cut))
+      (Seq(docs.filter(col("doc_id") < cut / 2),
+        docs.filter(col("doc_id") >= cut / 2 && col("doc_id") < cut)), cut)
     }
 
   /** st21's staged source: HISTORY ONLY (ids < cut) in the overlap-
@@ -2670,16 +2500,12 @@ object EventStream {
     * materialized.
     */
   private def stagedHistorySource(
-      spark: SparkSession, dir: String): (String, StructType, java.lang.Long) =
-    stageSourceOnce(
-        s"st21src:$dir", sourceFingerprint(s"$dir/documents.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Long) =
+    stageBatches("st21src", dir, "documents") {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val cut = docs.count() * 4L / 5L
-      val d = scratchDir("st21src")
-      stageSingleFile(docs.filter(col("doc_id") < cut / 2), d, "a.parquet")
-      stageSingleFile(docs.filter(col("doc_id") < cut), d, "b.parquet")
-      (d.toString, docs.schema, java.lang.Long.valueOf(cut))
+      (Seq(docs.filter(col("doc_id") < cut / 2), docs.filter(col("doc_id") < cut)), cut)
     }
 
   /** st24's staged source: the EMBEDDED history slice (ids < 4/5 of
@@ -2689,18 +2515,13 @@ object EventStream {
     * Fingerprints BOTH tables — the cut moves with the embeddings.
     */
   private def stagedEmbeddedHistorySource(
-      spark: SparkSession, dir: String): (String, StructType, java.lang.Long) =
-    stageSourceOnce(
-        s"st24src:$dir", sourceFingerprint(
-          s"$dir/documents.parquet", s"$dir/embeddings.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Long) =
+    stageBatches("st24src", dir, "documents", "embeddings") {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val cut =
         spark.read.parquet(s"$dir/embeddings.parquet").count() * 4L / 5L
-      val d = scratchDir("st24src")
-      stageSingleFile(docs.filter(col("doc_id") < cut / 2), d, "a.parquet")
-      stageSingleFile(docs.filter(col("doc_id") < cut), d, "b.parquet")
-      (d.toString, docs.schema, java.lang.Long.valueOf(cut))
+      (Seq(docs.filter(col("doc_id") < cut / 2), docs.filter(col("doc_id") < cut)), cut)
     }
 
   /** st20's staged source: the documents table in the overlap-replay
@@ -2709,16 +2530,12 @@ object EventStream {
     * returns the cut for the read side's delta definition.
     */
   private def stagedDocumentSource(
-      spark: SparkSession, dir: String): (String, StructType, java.lang.Long) =
-    stageSourceOnce(
-        s"st20src:$dir", sourceFingerprint(s"$dir/documents.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Long) =
+    stageBatches("st20src", dir, "documents") {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val cut = docs.count() * 4L / 5L
-      val d = scratchDir("st20src")
-      stageSingleFile(docs.filter(col("doc_id") < cut), d, "a.parquet")
-      stageSingleFile(docs, d, "b.parquet")
-      (d.toString, docs.schema, java.lang.Long.valueOf(cut))
+      (Seq(docs.filter(col("doc_id") < cut), docs), cut)
     }
 
   /** st19's staged source: the embeddings table in the overlap-replay
@@ -2727,16 +2544,12 @@ object EventStream {
     * plan.
     */
   private def stagedEmbeddingSource(
-      spark: SparkSession, dir: String): (String, StructType, java.lang.Long) =
-    stageSourceOnce(
-        s"st19src:$dir", sourceFingerprint(s"$dir/embeddings.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Long) =
+    stageBatches("st19src", dir, "embeddings") {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
       val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-      val d = scratchDir("st19src")
-      stageSingleFile(emb.filter(col("vec_id") < half), d, "a.parquet")
-      stageSingleFile(emb, d, "b.parquet")
-      (d.toString, emb.schema, java.lang.Long.valueOf(emb.count()))
+      (Seq(emb.filter(col("vec_id") < half), emb), emb.count())
     }
 
   /** st15's staged source: the overlap-replay shape (first file, then
@@ -2745,17 +2558,13 @@ object EventStream {
     * (what makes min/max skipping selective under streaming append).
     */
   private def stagedRangeOverlapSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st15src:$dir", sourceFingerprint(s"$dir/events.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType, Unit) =
+    stageBatches("st15src", dir, "events") {
       val events = spark.read.parquet(s"$dir/events.parquet")
         .select(col("event_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
       val half = events.agg(max(col("event_id"))).head().getLong(0) / 2
-      val d = scratchDir("st15src")
-      stageSingleFile(events.filter(col("event_id") < half), d, "a.parquet")
-      stageSingleFile(events, d, "b.parquet")
-      (d.toString, events.schema)
+      (Seq(events.filter(col("event_id") < half), events), ())
     }
 
   /** The st6/st11/st12 shared staged source: two overlapping parquet
@@ -2764,17 +2573,15 @@ object EventStream {
     * prove effectively-once. Staged once per JVM per content fingerprint.
     */
   private[graft] def stagedOverlapSource(
-      spark: SparkSession, dir: String): (String, StructType) =
-    stageSourceOnce(
-        s"st6src:$dir", sourceFingerprint(s"$dir/events.parquet")) {
+      spark: SparkSession, dir: String): (String, StructType) = {
+    val (src, schema, _) = stageBatches("st6src", dir, "events") {
       val events = spark.read.parquet(s"$dir/events.parquet")
         .select(col("event_id"), col("event_type"), col("user_id"),
           round(col("value") * 100).cast("long").as("cents"))
-      val d = scratchDir("st6src")
-      stageSingleFile(events.filter(col("event_id") % 2 === 0), d, "a.parquet")
-      stageSingleFile(events, d, "b.parquet")
-      (d.toString, events.schema)
+      (Seq(events.filter(col("event_id") % 2 === 0), events), ())
     }
+    (src, schema)
+  }
 
   /** The canonical checkpointed micro-batch driver: one file per
     * trigger, `AvailableNow`, each batch handed to `load`. This seam is
@@ -2822,21 +2629,20 @@ object EventStream {
   private def incrementalIngestRuns(
       spark: SparkSession, dir: String, replays: Int): (DataFrame, Seq[Long]) = {
     val (src, schema) = stagedOverlapSource(spark, dir)
-    val root = scratchDir("st6")
-    val target = root.resolve("data").toString
-    val ckpt = root.resolve("ckpt").toString
-    def run(): Long = {
-      ingestIncremental(
-        spark, src, schema, target, Seq("event_id"), ckpt,
-        filesPerTrigger = Some(1))
-      // the per-run count exists for the replay proof only — the plain
-      // query (replays = 0) must not pay an extra job for it
-      if (replays > 0) spark.read.parquet(target).count() else -1L
+    val counts = Seq.newBuilder[Long]
+    val df = scoped("st6") { root =>
+      val target = root.resolve("data").toString
+      (0 to replays).foreach { _ =>
+        ingestIncremental(
+          spark, src, schema, target, Seq("event_id"), root.resolve("ckpt").toString,
+          filesPerTrigger = Some(1))
+        // the per-run count exists for the replay proof only — the plain
+        // query (replays = 0) must not pay an extra job for it
+        counts += (if (replays > 0) spark.read.parquet(target).count() else -1L)
+      }
+      spark.read.parquet(target).orderBy(col("event_id"))
     }
-    try {
-      val counts = (0 to replays).map(_ => run())
-      (spark.read.parquet(target).orderBy(col("event_id")).localCheckpoint(), counts)
-    } finally reap(root)
+    (df, counts.result())
   }
 
   /** Stage `df` as a single named parquet file inside `destDir` (the

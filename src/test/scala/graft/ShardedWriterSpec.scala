@@ -130,6 +130,31 @@ class ShardedWriterSpec extends SparkSpec {
       "recovery must republish the retired data, never the stale staging")
   }
 
+  test("compaction after an interrupted publish: rows appended meanwhile join the retired rows; a stale retired copy is not re-added") {
+    import spark.implicits._
+    val key = org.apache.spark.sql.functions.col("id")
+    def rows(r: Range) = r.map(i => (i.toLong, s"v$i")).toDF("id", "payload")
+    def ids(dir: String) = spark.read.parquet(dir).select("id").as[Long].collect().toSeq
+    // crash between the renames, then an append recreates the dir
+    val dir = tmpDir("compactappend") + "/data"
+    rows(1 to 100).repartition(4).write.parquet(dir)
+    Files.move(Paths.get(dir), Paths.get(dir + ".pre-compact"))
+    rows(1 to 100).write.parquet(dir + ".compact")
+    rows(101 to 120).write.mode("append").parquet(dir)
+    ShardedWriter.compactParquet(spark, dir, key, 50L)
+    assert(ids(dir).sorted == (1 to 120).map(_.toLong),
+      "the rows parked in .pre-compact must survive an append before the next compaction")
+    assert(!new java.io.File(dir + ".pre-compact").exists)
+    // crash after the publish: the retired copy still holds the same rows
+    val pk = tmpDir("compactstale") + "/data"
+    rows(1 to 100).repartition(4).write.parquet(pk)
+    ShardedWriter.compactParquet(spark, pk, key, 50L)
+    rows(1 to 100).write.parquet(pk + ".pre-compact")
+    ShardedWriter.compactParquet(spark, pk, key, 50L)
+    assert(ids(pk).sorted == (1 to 100).map(_.toLong),
+      "a retired copy left after a completed publish must not be folded back in")
+  }
+
   test("compaction no-ops on an absent or part-file-free directory") {
     val missing = tmpDir("compactnoop") + "/never-written"
     assert(ShardedWriter.compactParquet(

@@ -18,10 +18,13 @@ import graft.SparkSpec
   *     (emulated by restoring the tombstone files the clear removed);
   *   - between [[ShardedWriter.compactParquet]]'s two renames (emulated
   *     by leaving `<rows>.pre-compact`, a stale `<rows>.compact` and no
-  *     `<rows>`), followed by the retried OPTIMIZE.
+  *     `<rows>`), followed by an append that recreates `<rows>` and by
+  *     further random calls until the next OPTIMIZE.
   *
   * After every call the zone's live id set ([[Zone.live]] over its rows)
-  * must equal a plain Scala model: appended ids minus deleted ids. Ids
+  * must equal a plain Scala model: appended ids minus deleted ids. While
+  * rows sit parked in `<rows>.pre-compact` reads do not see them, so the
+  * check waits for the OPTIMIZE that settles the crash. Ids
   * are fresh per append (the admission-timeline contract) and a replay
   * re-appends the batch just appended (at-least-once delivery).
   */
@@ -99,13 +102,16 @@ class ZoneLifecycleSpec extends SparkSpec {
   private case object CrashAfterPublish extends Op
   private case object CrashBetweenRenames extends Op
 
-  /** `n` random ops with both crash kinds at random positions. */
+  /** `n` random ops with both crash kinds at random positions; the
+    * crash between the renames is always followed by an append.
+    */
   private def opsFor(rnd: scala.util.Random, n: Int): Seq[Op] = {
     val pool = Seq(Append, Append, Append, Replay, Delete, Delete, Optimize)
     val base = Seq.fill(n)(pool(rnd.nextInt(pool.size)))
-    Seq(CrashAfterPublish, CrashBetweenRenames).foldLeft(base) { (ops, c) =>
+    val crashes = Seq(Seq(CrashAfterPublish), Seq(CrashBetweenRenames, Append))
+    crashes.foldLeft(base) { (ops, c) =>
       val at = 1 + rnd.nextInt(ops.size)
-      (ops.take(at) :+ c) ++ ops.drop(at)
+      (ops.take(at) ++ c) ++ ops.drop(at)
     }
   }
 
@@ -121,7 +127,8 @@ class ZoneLifecycleSpec extends SparkSpec {
     var next = 0L
     var last = Seq.empty[Long]
     var lastWasAppend = false
-    def check(step: String): Unit = {
+    var parked = false
+    def check(step: String): Unit = if (!parked) {
       val live = liveIds(z)
       val model = (appended -- deleted).toSet
       assert(live == model, s"${s.name} seed $seed after $step: live $live != model $model")
@@ -142,7 +149,9 @@ class ZoneLifecycleSpec extends SparkSpec {
           val xs = Seq.fill(1 + rnd.nextInt(3))(appended.toSeq(rnd.nextInt(appended.size)))
           s.delete(zd, xs)
           deleted ++= xs
-        case Optimize => s.optimize(zd)
+        case Optimize =>
+          s.optimize(zd)
+          parked = false
         case CrashAfterPublish =>
           val tomb = Paths.get(z.tombstonesDir)
           val saved = Paths.get(s"$root/tombstones.saved")
@@ -154,18 +163,20 @@ class ZoneLifecycleSpec extends SparkSpec {
             copyTree(saved, tomb)
             graft.core.Fs.deleteRecursively(spark, saved.toString)
           }
+          parked = false
         case CrashBetweenRenames =>
           val rows = Paths.get(z.rowsDir)
           if (Files.exists(rows)) {
             Files.move(rows, Paths.get(z.rowsDir + ".pre-compact"))
             copyTree(Paths.get(z.rowsDir + ".pre-compact"), Paths.get(z.rowsDir + ".compact"))
+            parked = true
           }
-          s.optimize(zd)
       }
       lastWasAppend = op == Append
       check(s"op $i ($op)")
     }
     s.optimize(zd)
+    parked = false
     check("the final OPTIMIZE")
     assert(!graft.core.Fs.hasParquetFiles(spark, z.tombstonesDir),
       s"${s.name}: a quiescent OPTIMIZE left tombstone files")

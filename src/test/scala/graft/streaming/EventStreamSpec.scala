@@ -439,4 +439,68 @@ class EventStreamSpec extends SparkSpec {
     runOnce()
     assert(spark.read.parquet(out).count() == 15)
   }
+
+  /** The staged batch files of a source dir, in the order the file
+    * source delivers them (modification time), after checking that the
+    * mtimes are strictly ascending in that order.
+    */
+  private def deliveryOrder(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      .map(f => f -> java.nio.file.Files.getLastModifiedTime(f).toMillis)
+      .sortBy(_._2)
+    files.sliding(2).foreach {
+      case Seq((a, ta), (b, tb)) => assert(ta < tb, s"$a and $b share mtime $ta")
+      case _ => ()
+    }
+    files.map(_._1)
+  }
+
+  test("staged CDC sources deliver their batches in declared order (st23, st25)") {
+    val dir = "/root/testdata/sf0.001"
+    def batch(f: java.nio.file.Path) = spark.read.parquet(f.toString)
+    def deletes(f: java.nio.file.Path) = batch(f).filter(col("op") === "D").count()
+    // st23: the first half of history, then all of it plus the deletes
+    val (src23, _, cut) = EventStream.stagedCdcHistorySource(spark, dir)
+    val b23 = deliveryOrder(src23)
+    assert(b23.size == 2)
+    assert(deletes(b23(0)) == 0 && deletes(b23(1)) > 0)
+    assert(batch(b23(0)).agg(max(col("doc_id"))).head().getLong(0) < cut / 2)
+    // st25 (st29's copy): four ascending slices, deletes ride the third
+    val (src25, _, _) = EventStream.stagedCdcLoopSource(spark, dir)
+    val b25 = deliveryOrder(src25)
+    assert(b25.size == 4)
+    val dels = b25.map(deletes)
+    assert(dels.indices.forall(i => (dels(i) > 0) == (i == 2)), s"deletes per batch: $dels")
+    val firstIds = b25.map(f => batch(f).filter(col("op") === "I")
+      .agg(min(col("doc_id"))).head().getLong(0))
+    assert(firstIds == firstIds.sorted && firstIds.distinct.size == 4,
+      s"slices out of order: $firstIds")
+  }
+
+  test("scoped reaps its root when the body throws") {
+    var seen: java.nio.file.Path = null
+    val e = intercept[IllegalStateException] {
+      EventStream.scoped("scopedthrow") { root =>
+        seen = root
+        java.nio.file.Files.write(root.resolve("x"), Array[Byte](1))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(seen != null && !java.nio.file.Files.exists(seen), s"root not reaped: $seen")
+  }
+
+  test("a frame returned by scoped stays readable after its root is gone") {
+    var seen: java.nio.file.Path = null
+    val df = EventStream.scoped("scopedread") { root =>
+      seen = root
+      val out = root.resolve("data").toString
+      spark.range(7).toDF("id").write.parquet(out)
+      spark.read.parquet(out)
+    }
+    assert(!java.nio.file.Files.exists(seen), s"root not reaped: $seen")
+    assert(df.orderBy(col("id")).collect().map(_.getLong(0)).toSeq == (0L until 7L))
+  }
 }

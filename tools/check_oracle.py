@@ -6,7 +6,9 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB against the sfDir parquet
 tables, sorts columns by name and rows by all columns, and compares values
-exactly. Reports per-query PASS/FAIL with first diffs.
+exactly. Reports per-query PASS/FAIL with first diffs. Results are looked up
+by oracle key only, so Verify's verify_failures.json sidecar is never read as
+a query result.
 """
 import json
 import math
