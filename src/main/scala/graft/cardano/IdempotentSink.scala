@@ -2,8 +2,10 @@ package graft.cardano
 
 import java.util.UUID
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent bulk load — the reference's one genuinely custom sink
   * (SURVEY §2.2 K3): `CREATE TEMP TABLE … COPY … INSERT … ON CONFLICT
@@ -17,7 +19,8 @@ import org.apache.spark.sql.functions._
   *    100 TB the "existing keys" side is a column-pruned scan of just the
   *    key columns (never the full rows).
   *  - [[upsertParquet]]: lakehouse tables (used by tests and the offline
-  *    pipelines here).
+  *    pipelines here), split into [[stage]] and [[publish]] so a caller
+  *    can stage several tables at once and publish them in FK order.
   *  - [[pgMergeStatements]]: the JDBC path — emits the staging-table DDL
   *    and the single `INSERT … SELECT … ON CONFLICT DO NOTHING` merge so
   *    a driver-side transaction can bracket multi-table FK-ordered loads
@@ -39,60 +42,99 @@ object IdempotentSink {
     deduped.join(existingKeys, keys, "left_anti")
   }
 
-  /** Load-merge-append into a parquet table (creates it if absent).
-    * Returns counts so callers (and the idempotency spec) can assert
-    * re-loads insert zero.
+  /** A merge delta written beside its table, complete but not yet
+    * visible to the table's readers; [[publish]] makes it visible.
+    * `creates` marks the delta of a table that did not exist yet.
+    */
+  final case class StagedDelta(table: String, delta: String, creates: Boolean,
+      stats: MergeStats)
+
+  /** Load-merge-append into a parquet table (creates it if absent):
+    * [[stage]] the delta, then [[publish]] it. Returns counts so callers
+    * (and the idempotency spec) can assert re-loads insert zero.
     *
-    * Into an existing table the merge runs as ONE write job, to a
-    * sibling delta directory (the merge plan reads the table, so it
-    * cannot write into it), and the delta is published by RENAMING its
-    * part files into the table directory ([[graft.core.Fs.moveParts]])
-    * — no second job re-reading and rewriting what was just written.
-    * Part names carry the write job's UUID, so they never collide with
-    * the table's; the table stays flat (every part at its top level); a
-    * reload that inserts zero rows adds no file; the delta dir is always
-    * deleted. A crash mid-publish leaves some of the delta's files moved
-    * and the rest in the delta dir — the same window a FileOutputCommitter
-    * v1 job commit (a per-file rename loop) has; the batch's watermark is
-    * not yet written, so the re-run's anti-join inserts what did not land.
+    * Crash windows: a crash while staging leaves the table untouched
+    * and a stale `<table>.delta-*` sibling, swept by the table's next
+    * stage. A crash mid-publish into an existing table leaves some of
+    * the delta's files moved and the rest in the delta dir — the same
+    * window a FileOutputCommitter v1 job commit (a per-file rename loop)
+    * has; the batch's watermark is not yet written, so the re-run's
+    * anti-join inserts what did not land, and its stage sweeps the
+    * remains. Creating a table publishes by ONE directory rename, so the
+    * table appears whole or not at all.
     */
   def upsertParquet(
       spark: SparkSession,
       staged: DataFrame,
       path: String,
       keys: Seq[String]): MergeStats = {
+    val d = stage(spark, staged, path, keys)
+    publish(spark, d)
+    d.stats
+  }
+
+  /** Write the merge of `staged` into the table at `path` as ONE write
+    * job, to a sibling delta dir (the merge plan reads the table, so it
+    * cannot write into it): within-batch dedup, then — when the table
+    * exists — the anti-join against its key columns, read under a
+    * schema typed from `staged.schema` (no footer-inference job). Both
+    * counts ride that job as observed metrics (staged rows before the
+    * dedup/anti-join, surviving rows after) — no separate count()
+    * actions, each of which would re-run the merge plan. First sweeps
+    * the table's stale delta dirs, which a crashed stage or publish
+    * left behind; this relies on the single-writer assumption
+    * [[graft.operators.ShardedWriter.compactParquet]] states. Tables
+    * with no FK between them may be staged concurrently.
+    */
+  def stage(
+      spark: SparkSession,
+      staged: DataFrame,
+      path: String,
+      keys: Seq[String]): StagedDelta = {
     import org.apache.spark.sql.Observation
-    val exists = graft.core.Fs.exists(spark, path)
-    // Both counts ride the ONE write job as observed metrics (staged rows
-    // before the dedup/anti-join, surviving rows after) — no separate
-    // count() actions, each of which would re-run the merge plan and at
-    // scale re-scan the inputs.
+    sweepDeltas(spark, path)
+    val creates = !graft.core.Fs.exists(spark, path)
     val inObs = Observation()
     val outObs = Observation()
-    def observed(df: DataFrame) =
-      df.observe(inObs, count(lit(1)).as("n"))
-    def counts(): (Long, Long) =
-      (inObs.get("n").asInstanceOf[Long], outObs.get("n").asInstanceOf[Long])
-    if (!exists) {
-      observed(staged).dropDuplicates(keys)
-        .observe(outObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(path)
-      val (stagedCount, inserted) = counts()
-      MergeStats(stagedCount, inserted, stagedCount - inserted)
+    val in = staged.observe(inObs, count(lit(1)).as("n"))
+    val fresh =
+      if (creates) in.dropDuplicates(keys)
+      else mergeBatch(in, spark.read
+        .schema(StructType(keys.map(k => staged.schema(k))))
+        .parquet(path), keys)
+    val delta = s"$path.delta-${UUID.randomUUID().toString.take(8)}"
+    fresh.observe(outObs, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(delta)
+    val stagedCount = inObs.get("n").asInstanceOf[Long]
+    val inserted = outObs.get("n").asInstanceOf[Long]
+    StagedDelta(path, delta, creates, MergeStats(stagedCount, inserted, stagedCount - inserted))
+  }
+
+  /** Make a staged delta visible: a new table by renaming the delta dir
+    * to the table path, an existing one by RENAMING the delta's part
+    * files into the table dir ([[graft.core.Fs.moveParts]]) — no second
+    * job re-reading and rewriting what was just written. Part names
+    * carry the write job's UUID, so they never collide with the
+    * table's; the table stays flat (every part at its top level); a
+    * delta of zero rows adds no file; the delta dir is always gone
+    * afterwards.
+    */
+  def publish(spark: SparkSession, d: StagedDelta): Unit =
+    if (d.creates) {
+      val (fs, delta) = graft.core.Fs.resolve(spark, d.delta)
+      require(fs.rename(delta, new Path(d.table)), s"publish rename failed: ${d.delta}")
     } else {
-      val existing = spark.read.parquet(path)
-      val fresh = mergeBatch(observed(staged), existing, keys)
-        .observe(outObs, count(lit(1)).as("n"))
-      // The merge plan reads the same path it appends to, so materialize
-      // the delta to a scratch dir first (distributed — never through the
-      // driver), then publish its files by rename.
-      val delta = s"$path.delta-${UUID.randomUUID().toString.take(8)}"
-      fresh.write.mode(SaveMode.Overwrite).parquet(delta)
-      val (stagedCount, inserted) = counts()
-      if (inserted > 0) graft.core.Fs.moveParts(spark, delta, path)
-      graft.core.Fs.deleteRecursively(spark, delta)
-      MergeStats(stagedCount, inserted, stagedCount - inserted)
+      if (d.stats.inserted > 0) graft.core.Fs.moveParts(spark, d.delta, d.table)
+      graft.core.Fs.deleteRecursively(spark, d.delta)
     }
+
+  private def sweepDeltas(spark: SparkSession, path: String): Unit = {
+    val (fs, table) = graft.core.Fs.resolve(spark, path)
+    val prefix = table.getName + ".delta-"
+    val parent = table.getParent
+    if (parent != null && fs.exists(parent))
+      fs.listStatus(parent, (p: Path) => p.getName.startsWith(prefix))
+        .foreach(s => fs.delete(s.getPath, true): Unit)
   }
 
   /** Bucketed-table upsert — the scale layout for a hot merge target: the

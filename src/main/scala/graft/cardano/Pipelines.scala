@@ -17,15 +17,16 @@ import org.apache.spark.sql.functions._
   *
   * Idempotency: every warehouse write goes through
   * [[IdempotentSink.upsertParquet]] keyed on [[Schemas.conflictKeys]];
-  * watermarks make re-runs skip completed work entirely. FK ordering for
-  * the five UTXO tables (parent before child —
-  * `s3_to_db_cardano_tx_utxo_pipeline.py:142-209`) is preserved by FK
-  * LEVELS in [[runUtxos]]: `cardano_tx_utxo`, then input ∥ output, then
-  * input_amount ∥ output_amount. Tables within a level have no FK
-  * between them, so they merge as concurrent jobs ([[graft.core.Par]]);
-  * a level starts only after its parent level committed, so no child
-  * table ever commits before its parent. The watermarks are written
-  * after the last level.
+  * watermarks make re-runs skip completed work entirely. FK ordering
+  * (parent before child — `s3_to_db_cardano_tx_utxo_pipeline.py:142-209`)
+  * binds only what readers can see, so a stage that loads several tables
+  * ([[runTransactions]]: transactions → output_amount; [[runUtxos]]:
+  * `cardano_tx_utxo` → input, output → input_amount, output_amount)
+  * STAGES all of their merge deltas as one concurrent group
+  * ([[graft.core.Par]]; each delta reads only its own table's keys) and
+  * then PUBLISHES them by rename in FK order, so no child table ever
+  * commits before its parent. A failed stage publishes nothing. The
+  * batch's watermarks are written after the last publish.
   */
 final class Pipelines(
     spark: SparkSession,
@@ -39,16 +40,17 @@ final class Pipelines(
 
   private def table(name: String): String = s"$warehouse/$name"
 
-  private def upsert(df: DataFrame, name: String): IdempotentSink.MergeStats =
-    IdempotentSink.upsertParquet(spark, df, table(name), Schemas.conflictKeys(name))
-
-  /** Merge one FK level: tables with no FK between them, as concurrent
-    * jobs; returns once all of them committed.
+  /** Merge a batch into `tables`, listed parent before child: every
+    * delta staged as one concurrent group, then published in list order.
     */
-  private def upsertLevel(tables: (DataFrame, String)*): Unit =
-    graft.core.Par.run(tables.map { case (df, name) => () => upsert(df, name): Unit }: _*)
+  private def load(tables: (DataFrame, String)*): Unit =
+    graft.core.Par.all(tables.map { case (df, name) => () =>
+      IdempotentSink.stage(spark, df, table(name), Schemas.conflictKeys(name))
+    }: _*).foreach(IdempotentSink.publish(spark, _))
 
-  def readTable(name: String): DataFrame = spark.read.parquet(table(name))
+  /** A warehouse table, read under its declared schema (no inference). */
+  def readTable(name: String): DataFrame =
+    spark.read.schema(Schemas.warehouse(name)).parquet(table(name))
 
   /** Re-read exactly the batch directory the fetch just wrote (never a
     * whole-zone glob: re-scanning the full raw zone per batch is O(B²)
@@ -58,15 +60,16 @@ final class Pipelines(
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).json(lake.rawDir(entity, endBlock))
 
-  /** Record the lake→warehouse load watermark from the files actually
-    * loaded (K4/Q2 — one listing call, no Spark job). MUST run only
-    * after the warehouse upsert committed: recording first would mark a
-    * failed load complete and make watermark-driven incremental readers
-    * (S7, `readRawJsonSince`) skip the batch forever.
+  /** Record a loaded batch's watermarks (K4): the block mark and the
+    * lake→warehouse file mark, taken from the files actually loaded
+    * (Q2 — one listing call, no Spark job). MUST run only after the
+    * warehouse merge is published: recording first would mark a failed
+    * load complete and make watermark-driven incremental readers (S7,
+    * `readRawJsonSince`) skip the batch forever.
     */
   private def recordLoaded(entity: String, table: String, endBlock: Long): Unit =
-    graft.core.Fs.latestModification(spark, lake.rawDir(entity, endBlock))
-      .foreach(ts => watermarks.recordFileLoad(table, ts))
+    watermarks.recordBatch(table, endBlock,
+      graft.core.Fs.latestModification(spark, lake.rawDir(entity, endBlock)))
 
   /** EP1 stage a+b: blocks → raw zone → DTO → warehouse merge. The fetch
     * fans out over `spark.range`; the watermark makes completed batches
@@ -79,9 +82,8 @@ final class Pipelines(
       val raw = BlockfrostSource.fetchBlocks(heights, backend)
       lake.writeRawJson(raw, "blocks", b)
       val dto = Transforms.blockDto(loadRawBatch("blocks", b, Schemas.rawBlock))
-      upsert(dto, "cardano_blocks")
+      load(dto -> "cardano_blocks")
       recordLoaded("blocks", "cardano_blocks", b)
-      watermarks.recordBlockExport("cardano_blocks", b)
     }
   }
 
@@ -94,9 +96,8 @@ final class Pipelines(
       lake.writeRawJson(raw, "block_tx", b)
       val dto = Transforms.blockTransactionsDto(
         loadRawBatch("block_tx", b, Schemas.rawBlockTransactions))
-      upsert(dto, "cardano_block_transactions")
+      load(dto -> "cardano_block_transactions")
       recordLoaded("block_tx", "cardano_block_transactions", b)
-      watermarks.recordBlockExport("cardano_block_transactions", b)
     }
   }
 
@@ -115,21 +116,19 @@ final class Pipelines(
       val raw = BlockfrostSource.fetchTransactions(hashes, backend)
       lake.writeRawJson(raw, "transactions", b)
       val raw0 = loadRawBatch("transactions", b, Schemas.rawTransaction)
-      upsert(Transforms.transactionDto(raw0), "cardano_transactions")
       // the sixth entity: the raw batch's nested output_amount array,
-      // exploded and merged right after its parent (FK order) — the
+      // exploded and published right after its parent (FK order) — the
       // table the reference declares but never loads (see
       // Transforms.transactionOutputAmountDto)
-      upsert(Transforms.transactionOutputAmountDto(raw0),
-        "cardano_tx_output_amount")
+      load(Transforms.transactionDto(raw0) -> "cardano_transactions",
+        Transforms.transactionOutputAmountDto(raw0) -> "cardano_tx_output_amount")
       recordLoaded("transactions", "cardano_transactions", b)
-      watermarks.recordBlockExport("cardano_transactions", b)
     }
   }
 
   /** EP2 stage c+d: UTXOs — fan out over loaded tx hashes (reference Q4),
-    * normalize the nested docs (T4), merge the five tables level by FK
-    * level.
+    * normalize the nested docs (T4), stage the five tables at once and
+    * publish them in FK order.
     */
   def runUtxos(start: Long, end: Long): Unit = {
     val from = math.max(start, watermarks.highestExportedBlock("cardano_tx_utxo") + 1)
@@ -141,13 +140,11 @@ final class Pipelines(
       lake.writeRawJson(raw, "transaction_utxo", b)
       val docs = loadRawBatch("transaction_utxo", b, Schemas.rawTxUtxo)
       val t = Transforms.normalizeUtxo(docs)
-      // FK-safe order: each level after its parent level.
-      upsertLevel(t.utxo -> "cardano_tx_utxo")
-      upsertLevel(t.inputs -> "cardano_tx_utxo_input", t.outputs -> "cardano_tx_utxo_output")
-      upsertLevel(t.inputAmounts -> "cardano_tx_utxo_input_amount",
+      load(t.utxo -> "cardano_tx_utxo",
+        t.inputs -> "cardano_tx_utxo_input", t.outputs -> "cardano_tx_utxo_output",
+        t.inputAmounts -> "cardano_tx_utxo_input_amount",
         t.outputAmounts -> "cardano_tx_utxo_output_amount")
       recordLoaded("transaction_utxo", "cardano_tx_utxo", b)
-      watermarks.recordBlockExport("cardano_tx_utxo", b)
     }
   }
 

@@ -240,6 +240,24 @@ object Schemas {
   /** cardano_tx_utxo_output_amount — cardano_tables.py:205-218. */
   val txUtxoOutputAmount: StructType = txUtxoInputAmount
 
+  /** The nine warehouse tables by name: the one schema every warehouse
+    * read declares ([[Pipelines.readTable]], the merge's existing-key
+    * read), so no read pays a parquet footer-inference job. The DTOs
+    * ([[Transforms]]) produce exactly these columns, in this order and
+    * with these types (`WarehouseSchemaSpec` pins it: a read with a
+    * declared schema turns a renamed column into silent nulls).
+    */
+  val warehouse: Map[String, StructType] = Map(
+    "cardano_blocks" -> blocks,
+    "cardano_block_transactions" -> blockTransactions,
+    "cardano_transactions" -> transactions,
+    "cardano_tx_output_amount" -> txOutputAmount,
+    "cardano_tx_utxo" -> txUtxo,
+    "cardano_tx_utxo_input" -> txUtxoInput,
+    "cardano_tx_utxo_input_amount" -> txUtxoInputAmount,
+    "cardano_tx_utxo_output" -> txUtxoOutput,
+    "cardano_tx_utxo_output_amount" -> txUtxoOutputAmount)
+
   /** provider_to_s3_import_status — cardano_tables.py:233-244. */
   val providerImportStatus: StructType = StructType(Seq(
     StructField("table", StringType, nullable = false),

@@ -13,17 +13,22 @@ package graft.core
   * rethrows.
   */
 object Par {
-  def run(ops: (() => Unit)*): Unit =
-    if (ops.sizeIs <= 1) ops.foreach(_())
+  def run(ops: (() => Unit)*): Unit = all(ops: _*): Unit
+
+  /** [[run]] returning each op's result, in the order of `ops`. */
+  def all[A](ops: (() => A)*): Seq[A] =
+    if (ops.sizeIs <= 1) ops.map(_())
     else {
       val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val threads = ops.map { op =>
+      val results = new Array[Any](ops.size)
+      val threads = ops.zipWithIndex.map { case (op, i) =>
         val t = new Thread(() =>
-          try op() catch { case t: Throwable => failures.add(t): Unit })
+          try results(i) = op() catch { case t: Throwable => failures.add(t): Unit })
         t.start()
         t
       }
       threads.foreach(_.join())
       if (!failures.isEmpty) throw failures.peek()
+      results.toSeq.map(_.asInstanceOf[A])
     }
 }

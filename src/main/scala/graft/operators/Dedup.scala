@@ -49,9 +49,13 @@ object Dedup {
   /** Record document deletions against an md5 zone ([[Zone.delete]]). */
   def md5ZoneDelete(ids: DataFrame, dir: String): Unit = md5Zone(dir).delete(ids)
 
-  /** The zone's live rows: stored rows minus tombstoned documents. */
+  /** The zone's live rows: stored rows ([[Zone.liveRows]]: parked rows
+    * of an interrupted OPTIMIZE included) minus tombstoned documents.
+    */
   def md5ZoneRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = md5Zone(dir).live(spark.read.parquet(dir))
+      dir: String): DataFrame =
+    // an absent zone fails the plain read, as it always has
+    md5Zone(dir).liveRows(spark).getOrElse(spark.read.parquet(dir))
 
   /** OPTIMIZE an append-only md5 keeper zone ([[Zone.optimize]]),
     * rewritten md5-clustered. Result-invisible: compacted and

@@ -50,8 +50,8 @@ import graft.core.Fs
   *     tombstones next pass — idempotent. A crash between the publish's
   *     two renames leaves `<rows>.pre-compact` and no rows dir; the next
   *     OPTIMIZE restores it and compacts, folding in any rows appended
-  *     in between (appends may run first and lose nothing). Until that
-  *     OPTIMIZE, reads do not see the parked rows.
+  *     in between (appends may run first and lose nothing). Reads see
+  *     the parked rows meanwhile ([[liveRows]]).
   *
   * `tombstoneId` names the tombstone column when it differs from the
   * rows' `id` (the md5 keeper zone tombstones `doc_id` against
@@ -109,10 +109,25 @@ private[operators] final case class Zone(kind: String, dir: String,
     below.fold(alive)(m => alive.filter(col(id) < m))
   }
 
-  /** [[live]] over the rows dir; None while the zone holds no rows. */
-  def liveRows(spark: SparkSession, below: Option[Long] = None): Option[DataFrame] =
-    if (Fs.exists(spark, rowsDir)) Some(live(spark.read.parquet(rowsDir), below))
-    else None
+  /** [[live]] over the stored rows; None while the zone holds no rows.
+    * The stored rows include those a crash between
+    * [[ShardedWriter.compactParquet]]'s two renames parked in
+    * `<rows>.pre-compact` — alone when no append has recreated the rows
+    * dir, beside it when one has (the staging `<rows>.compact` is still
+    * there). With both dirs and no staging the publish completed and
+    * the parked copy is stale, so it is not read (it would count every
+    * row twice). A clean zone pays one existence check for this.
+    */
+  def liveRows(spark: SparkSession, below: Option[Long] = None): Option[DataFrame] = {
+    val parked = rowsDir + ".pre-compact"
+    val hasRows = Fs.exists(spark, rowsDir)
+    val dirs =
+      if (!Fs.exists(spark, parked)) (if (hasRows) Seq(rowsDir) else Nil)
+      else if (!hasRows) Seq(parked)
+      else if (Fs.exists(spark, rowsDir + ".compact")) Seq(rowsDir, parked)
+      else Seq(rowsDir)
+    if (dirs.isEmpty) None else Some(live(spark.read.parquet(dirs: _*), below))
+  }
 
   /** OPTIMIZE; returns (filesBefore, filesAfter), (0, 0) for a zone
     * that holds no rows. `after` runs once the tombstones are cleared.

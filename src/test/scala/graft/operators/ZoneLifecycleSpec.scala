@@ -21,10 +21,9 @@ import graft.SparkSpec
   *     `<rows>`), followed by an append that recreates `<rows>` and by
   *     further random calls until the next OPTIMIZE.
   *
-  * After every call the zone's live id set ([[Zone.live]] over its rows)
-  * must equal a plain Scala model: appended ids minus deleted ids. While
-  * rows sit parked in `<rows>.pre-compact` reads do not see them, so the
-  * check waits for the OPTIMIZE that settles the crash. Ids
+  * After every call — right after a crash too — the zone's live id set
+  * ([[Zone.liveRows]], which reads rows parked in `<rows>.pre-compact`)
+  * must equal a plain Scala model: appended ids minus deleted ids. Ids
   * are fresh per append (the admission-timeline contract) and a replay
   * re-appends the batch just appended (at-least-once delivery).
   */
@@ -84,9 +83,8 @@ class ZoneLifecycleSpec extends SparkSpec {
       z => Dedup.optimizeMd5Zone(spark, z, target): Unit))
 
   private def liveIds(z: Zone): Set[Long] =
-    if (!graft.core.Fs.exists(spark, z.rowsDir)) Set.empty
-    else z.live(spark.read.parquet(z.rowsDir)).select(col(z.id)).distinct()
-      .collect().map(_.getLong(0)).toSet
+    z.liveRows(spark).fold(Set.empty[Long])(
+      _.select(col(z.id)).distinct().collect().map(_.getLong(0)).toSet)
 
   private def copyTree(from: Path, to: Path): Unit = {
     val walk = Files.walk(from)
@@ -127,8 +125,7 @@ class ZoneLifecycleSpec extends SparkSpec {
     var next = 0L
     var last = Seq.empty[Long]
     var lastWasAppend = false
-    var parked = false
-    def check(step: String): Unit = if (!parked) {
+    def check(step: String): Unit = {
       val live = liveIds(z)
       val model = (appended -- deleted).toSet
       assert(live == model, s"${s.name} seed $seed after $step: live $live != model $model")
@@ -149,9 +146,7 @@ class ZoneLifecycleSpec extends SparkSpec {
           val xs = Seq.fill(1 + rnd.nextInt(3))(appended.toSeq(rnd.nextInt(appended.size)))
           s.delete(zd, xs)
           deleted ++= xs
-        case Optimize =>
-          s.optimize(zd)
-          parked = false
+        case Optimize => s.optimize(zd)
         case CrashAfterPublish =>
           val tomb = Paths.get(z.tombstonesDir)
           val saved = Paths.get(s"$root/tombstones.saved")
@@ -163,24 +158,40 @@ class ZoneLifecycleSpec extends SparkSpec {
             copyTree(saved, tomb)
             graft.core.Fs.deleteRecursively(spark, saved.toString)
           }
-          parked = false
         case CrashBetweenRenames =>
           val rows = Paths.get(z.rowsDir)
           if (Files.exists(rows)) {
             Files.move(rows, Paths.get(z.rowsDir + ".pre-compact"))
             copyTree(Paths.get(z.rowsDir + ".pre-compact"), Paths.get(z.rowsDir + ".compact"))
-            parked = true
           }
       }
       lastWasAppend = op == Append
       check(s"op $i ($op)")
     }
     s.optimize(zd)
-    parked = false
     check("the final OPTIMIZE")
     assert(!graft.core.Fs.hasParquetFiles(spark, z.tombstonesDir),
       s"${s.name}: a quiescent OPTIMIZE left tombstone files")
     assert(!graft.core.Fs.exists(spark, z.rowsDir + ".pre-compact"))
     graft.core.Caches.release()
+  }
+
+  test("a stale retired copy beside a completed publish is not read twice") {
+    val zd = tmpDir("lifecycle") + "/z"
+    val z = SignatureZone.zone(zd)
+    SignatureZone.create(spark, zd)
+    SignatureZone.append(docRows(0L until 12L), zd)
+    SignatureZone.optimize(spark, zd, target)
+    val rows = z.liveRows(spark).get.count()
+    // the crash after the publish rename, before the retired copy's delete
+    copyTree(Paths.get(z.rowsDir), Paths.get(z.rowsDir + ".pre-compact"))
+    assert(z.liveRows(spark).get.count() == rows)
+    // the crash between the renames, then an append: both dirs are read
+    graft.core.Fs.deleteRecursively(spark, z.rowsDir + ".pre-compact")
+    Files.move(Paths.get(z.rowsDir), Paths.get(z.rowsDir + ".pre-compact"))
+    copyTree(Paths.get(z.rowsDir + ".pre-compact"), Paths.get(z.rowsDir + ".compact"))
+    assert(z.liveRows(spark).get.count() == rows)
+    SignatureZone.append(docRows(12L until 15L), zd)
+    assert(liveIds(z) == (0L until 15L).toSet)
   }
 }
