@@ -82,8 +82,8 @@ object IdempotentSink {
     * dedup/anti-join, surviving rows after) — no separate count()
     * actions, each of which would re-run the merge plan. First sweeps
     * the table's stale delta dirs, which a crashed stage or publish
-    * left behind; this relies on the single-writer assumption
-    * [[graft.operators.ShardedWriter.compactParquet]] states. Tables
+    * left behind; this relies on the single-writer assumption every
+    * sweep here makes (as [[graft.operators.Generations]] does). Tables
     * with no FK between them may be staged concurrently.
     */
   def stage(

@@ -1,6 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Loaders for the driver-provided star schema (TESTDATA.md).
   *
@@ -38,11 +41,26 @@ object Tables {
     * dominates a narrow shuffle of their input columns. Result-
     * invariant: every consumer is partitioning-independent by the
     * oracle contract (deterministic hash ranks, total output ORDER BY).
+    * The input's width is its leaf scans' planned splits, which need no
+    * job — `df.rdd`'s partition count would run AQE's upstream shuffles
+    * once extra just to finalize the plan.
     */
   def widened(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (plannedSplits(df.queryExecution.sparkPlan) < target) df.repartition(target)
+    else df
   }
+
+  /** The summed input splits of `plan`'s leaves, from file listings and
+    * existing RDDs.
+    */
+  private def plannedSplits(plan: SparkPlan): Int = plan.collectLeaves().map {
+    case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    case s: RDDScanExec => s.rdd.getNumPartitions
+    case s: InMemoryTableScanExec => plannedSplits(s.relation.cachedPlan)
+    case s: AdaptiveSparkPlanExec => plannedSplits(s.inputPlan)
+    case s => math.max(1, s.outputPartitioning.numPartitions)
+  }.sum
 
   // Base-table row counts keyed on the file's listing fingerprint —
   // the incremental cuts (count*4/5) and window bounds re-run a 1-row

@@ -82,10 +82,11 @@ object AnnIndexZone {
   def appendIndex(delta: DataFrame, zoneDir: String): Unit = {
     val spark = delta.sparkSession
     Similarity.ensure(spark)
-    val (planes, dims) = meta(spark, zoneDir)
-    delta.select(col("vec_id"),
+    zone(zoneDir).append(spark) {
+      val (planes, dims) = meta(spark, zoneDir)
+      delta.select(col("vec_id"),
         Similarity.srpBucket(col("embedding"), planes, dims).as("bucket"))
-      .write.mode(SaveMode.Append).parquet(s"$zoneDir/index")
+    }
   }
 
   /** Create + index an existing corpus in one call (the batch-backfill
@@ -120,7 +121,7 @@ object AnnIndexZone {
   def optimize(spark: SparkSession, zoneDir: String,
       targetRowsPerFile: Long = 4 << 20): (Int, Int) =
     zone(zoneDir).optimize(spark, targetRowsPerFile, () =>
-      ZoneMap.buildStats(spark, s"$zoneDir/index", s"$zoneDir/stats", Seq("bucket")))
+      ZoneMap.buildStats(spark, zone(zoneDir).rowsDir, s"$zoneDir/stats", Seq("bucket")))
 
   /** Verified near-dup pairs of a DELTA against the stored index AND
     * within itself — the EMBEDDING-side twin of
@@ -198,8 +199,6 @@ object AnnIndexZone {
     val spark = corpus.sparkSession
     Similarity.ensure(spark)
     val (planes, dims) = meta(spark, zoneDir)
-    val indexDir = s"$zoneDir/index"
-    val statsDir = s"$zoneDir/stats"
     // materialize the one query row ONCE: the caller's frame is often a
     // corpus filter, and referencing it from the probe derivation, the
     // stats planner, and the final cross join would re-scan it three
@@ -212,21 +211,13 @@ object AnnIndexZone {
     val qv: Seq[Float] = qrow(0).getSeq[Float](0)
     val q1 = Seq(Tuple1(qv)).toDF("qvec")
     // a created-but-never-appended zone has no index dir yet: an empty
-    // index legitimately yields zero candidates, so return an empty
-    // frame with the output shape (same projection, zero-row corpus)
-    // instead of the opaque path-not-found AnalysisException a raw
-    // parquet read of the missing dir would throw
-    if (!graft.core.Fs.exists(spark, indexDir))
-      return corpus.limit(0).crossJoin(broadcast(q1))
-        .select(col("vec_id"),
-          Similarity.cosine(col("embedding"), col("qvec")).as("cos_sim"))
-    val index = zone(zoneDir).live(
-      ZoneMap.statsPlannedRead(spark, indexDir, statsDir, "bucket", {
-        val qb = q1
-          .select(Similarity.srpBucket(col("qvec"), planes, dims).as("qb"))
-          .head().getLong(0)
-        (0 until planes).map(p => qb ^ (1L << p)) :+ qb
-      }))
+    // index legitimately yields zero candidates
+    val index = zone(zoneDir).plannedLiveRows(spark, s"$zoneDir/stats", "bucket", {
+      val qb = q1
+        .select(Similarity.srpBucket(col("qvec"), planes, dims).as("qb"))
+        .head().getLong(0)
+      (0 until planes).map(p => qb ^ (1L << p)) :+ qb
+    }).getOrElse(spark.range(0).select(col("id").as("vec_id"), col("id").as("bucket")))
     val probes = q1
       .withColumn("qbucket", Similarity.srpBucket(col("qvec"), planes, dims))
       .select(col("qvec"), explode(array(

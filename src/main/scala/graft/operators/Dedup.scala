@@ -25,7 +25,8 @@ object Dedup {
       .agg(min(idCol).as("keeper_id"), count(lit(1)).as("dup_cnt"))
 
   /** The md5 keeper zone — c8/st21/c9's exact-dedup history index: a
-    * plain parquet dir of `(text_md5, keeper_id)` rows, ONE PER
+    * parquet dir ([[Generations]]-resolved, so read it through
+    * [[md5ZoneRead]]) of `(text_md5, keeper_id)` rows, ONE PER
     * DOCUMENT (not per-batch minima: per-doc rows are what make
     * [[md5ZoneDelete]] exact — under collapsed minima, deleting the
     * min-id holder would silently un-block content that OTHER live
@@ -39,8 +40,8 @@ object Dedup {
     */
   def md5ZoneAppend(delta: DataFrame, text: Column, idCol: Column,
       dir: String): Unit =
-    delta.select(md5(text).as("text_md5"), idCol.as("keeper_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(dir)
+    md5Zone(dir).append(delta.sparkSession)(
+      delta.select(md5(text).as("text_md5"), idCol.as("keeper_id")))
 
   private[operators] def md5Zone(dir: String) = Zone("md5 zone", dir, metaDir = "",
     rowsDir = dir, tombstonesDir = dir + ".tombstones", id = "keeper_id",
@@ -49,8 +50,8 @@ object Dedup {
   /** Record document deletions against an md5 zone ([[Zone.delete]]). */
   def md5ZoneDelete(ids: DataFrame, dir: String): Unit = md5Zone(dir).delete(ids)
 
-  /** The zone's live rows: stored rows ([[Zone.liveRows]]: parked rows
-    * of an interrupted OPTIMIZE included) minus tombstoned documents.
+  /** The zone's live rows ([[Zone.liveRows]]): stored rows minus
+    * tombstoned documents.
     */
   def md5ZoneRead(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =

@@ -101,9 +101,10 @@ object HammingZone {
     */
   def append(sigs: DataFrame, zoneDir: String): Unit = {
     val spark = sigs.sparkSession
-    val (bits, _, chunks) = meta(spark, zoneDir)
-    chunkRows(sigs.select(col("doc_id"), col("sig")), bits, chunks)
-      .write.mode(SaveMode.Append).parquet(s"$zoneDir/rows")
+    zone(zoneDir).append(spark) {
+      val (bits, _, chunks) = meta(spark, zoneDir)
+      chunkRows(sigs.select(col("doc_id"), col("sig")), bits, chunks)
+    }
   }
 
   /** Create + index an existing corpus in one call (the batch-backfill

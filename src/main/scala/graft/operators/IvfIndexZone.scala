@@ -94,10 +94,10 @@ object IvfIndexZone {
     */
   def append(delta: DataFrame, zoneDir: String): Unit = {
     val spark = delta.sparkSession
-    Similarity.assignToCentroids(delta, centroids(spark, zoneDir))
-      .select(col("vec_id"), col("cid"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$zoneDir/lists")
+    zone(zoneDir).append(spark) {
+      Similarity.assignToCentroids(delta, centroids(spark, zoneDir))
+        .select(col("vec_id"), col("cid"))
+    }
   }
 
   /** Fit + create + index an existing corpus in one call (the
@@ -124,7 +124,7 @@ object IvfIndexZone {
   def optimize(spark: SparkSession, zoneDir: String,
       targetRowsPerFile: Long = 4 << 20): (Int, Int) =
     zone(zoneDir).optimize(spark, targetRowsPerFile, () =>
-      ZoneMap.buildStats(spark, s"$zoneDir/lists", s"$zoneDir/stats", Seq("cid")))
+      ZoneMap.buildStats(spark, zone(zoneDir).rowsDir, s"$zoneDir/stats", Seq("cid")))
 
   /** Per-row probe cells under literal centroids: sort the k
     * (dist, cid) structs lexicographically — (dist asc, cid asc), the
@@ -153,8 +153,6 @@ object IvfIndexZone {
     val cents = centroids(spark, zoneDir)
     require(nprobe >= 1 && nprobe <= cents.size,
       s"nprobe must be in [1, ${cents.size}] (got $nprobe)")
-    val listsDir = s"$zoneDir/lists"
-    val statsDir = s"$zoneDir/stats"
     // quantize + probe: expression-only per query row (k literal
     // distance folds, one array_sort) — no shuffle, any query count
     val probes = graft.core.Caches.persistTracked(queries
@@ -163,15 +161,13 @@ object IvfIndexZone {
           expr("transform(qvec, x -> floor((CAST(x AS DOUBLE) + 1.0D) * 1048576.0D))"),
           cents, nprobe)).as("p"))
       .select(col("q_id"), col("p.cid").as("cid")))
-    if (!graft.core.Fs.exists(spark, listsDir))
-      return probes.limit(0).select(col("q_id"), lit(0L).as("vec_id"))
     // stats-planned lists read: the probed cell set is ≤ k values no
     // matter how many queries ride the batch (cells, not queries, are
     // the metadata key), so the planning collect is bounded by the
     // quantizer size — the watermark altitude
-    val lists = zone(zoneDir).live(
-      ZoneMap.statsPlannedRead(spark, listsDir, statsDir, "cid",
-        probes.select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq))
+    val lists = zone(zoneDir).plannedLiveRows(spark, s"$zoneDir/stats", "cid",
+        probes.select(col("cid")).distinct().collect().map(_.getLong(0)).toSeq)
+      .getOrElse(spark.range(0).select(col("id").as("vec_id"), col("id").as("cid")))
     // candidates: one cid-keyed join, probe side broadcast (nq·nprobe
     // rows); DISTINCT absorbs replayed duplicate list rows
     lists

@@ -145,11 +145,11 @@ object PqZone {
   def append(delta: DataFrame, zoneDir: String, dims: Int = 64): Unit = {
     val spark = delta.sparkSession
     Similarity.ensure(spark)
-    val books = loadBooks(spark, zoneDir)
-    delta.select(col("vec_id"),
+    zone(zoneDir).append(spark) {
+      val books = loadBooks(spark, zoneDir)
+      delta.select(col("vec_id"),
         codeExpr(col("embedding"), books, dims / books.size).as("codes"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$zoneDir/codes")
+    }
   }
 
   /** Fit + create + encode an existing corpus (the batch-backfill
@@ -180,13 +180,14 @@ object PqZone {
     * replays; DISTINCT on (vec_id, codes) is exact dedup.
     */
   private def readableCodes(spark: SparkSession, zoneDir: String): DataFrame = {
-    val codes = spark.read.parquet(s"$zoneDir/codes")
+    val z = zone(zoneDir)
+    val codes = Generations.read(spark, z.rowsDir)
       .select(col("vec_id"), col("codes"))
     val marker = s"$zoneDir/clean"
     val clean = graft.core.Fs.hasParquetFiles(spark, marker) &&
       graft.core.MetaReads.row(spark, marker).getString(0) ==
-        graft.core.Fs.fingerprint(spark, s"$zoneDir/codes")
-    zone(zoneDir).live(if (clean) codes else codes.distinct())
+        graft.core.Fs.fingerprint(spark, z.rowsDir)
+    z.live(if (clean) codes else codes.distinct())
   }
 
   /** OPTIMIZE ([[Zone.optimize]]): the codes rewritten vec_id-clustered
@@ -200,7 +201,7 @@ object PqZone {
       targetRowsPerFile: Long = 4 << 20): (Int, Int) =
     zone(zoneDir).optimize(spark, targetRowsPerFile, () => {
       import spark.implicits._
-      Seq(graft.core.Fs.fingerprint(spark, s"$zoneDir/codes"))
+      Seq(graft.core.Fs.fingerprint(spark, zone(zoneDir).rowsDir))
         .toDF("codes_fingerprint").coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$zoneDir/clean")

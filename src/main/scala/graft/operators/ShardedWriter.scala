@@ -57,19 +57,15 @@ object ShardedWriter {
     * rewrite folds them into [[writeSharded]]'s balanced clustered
     * layout.
     *
-    * Crash-safety is rename-based staging, the same discipline as the
-    * JDBC staging table: the rewrite lands complete in `<dir>.compact`
-    * (source fully read — the write is the action), then publishes via
-    * two directory renames (dir → `.pre-compact`, staging → dir) and
-    * drops the retired copy. A crash before the first rename leaves the
-    * source untouched (stale staging is re-overwritten next run); a
-    * crash BETWEEN the renames leaves `dir` absent with the data intact
-    * in `.pre-compact`, and one after the publish leaves a stale
-    * `.pre-compact` beside the new `dir` — the next call settles either
-    * state first ([[recoverInterrupted]]), so the windows are
-    * self-healing, not just documented. Concurrency is a single-writer
-    * assumption; a transactional table format replaces the whole rename
-    * protocol with a metadata commit at deployment.
+    * Crash safety is [[Generations]]' one-step commit: the rewrite of
+    * the current generation lands complete as the next one (source
+    * fully read — the write is the action) and is published by
+    * creating its marker. A crash before the marker leaves the current
+    * generation serving; one after it leaves the new generation
+    * serving; either residue is swept by the next call. Readers and
+    * appends of `dir` must resolve through [[Generations.resolve]].
+    * Concurrency is a single-writer assumption: an append racing the
+    * rewrite lands in the generation being replaced.
     *
     * Returns (filesBefore, filesAfter). `knownCount` skips
     * [[writeSharded]]'s sizing scan when the caller already knows the
@@ -79,8 +75,8 @@ object ShardedWriter {
       key: Column, targetRowsPerFile: Long,
       knownCount: Option[Long] = None,
       transform: DataFrame => DataFrame = identity): (Int, Int) = {
-    recoverInterrupted(spark, dir)
-    val before = parquetCount(spark, dir)
+    val src = Generations.resolve(spark, dir)
+    val before = parquetCount(spark, src)
     // absent dir or metadata-only residue (zero part files): nothing to
     // fold, and spark.read.parquet could not even infer a schema
     if (before == 0) return (0, 0)
@@ -95,28 +91,17 @@ object ShardedWriter {
     // consumes the cached blocks (MEMORY_AND_DISK — zone-sized, spills
     // rather than OOMs, exactly the storage the second computation's
     // shuffle would have cost).
-    val frame0 = transform(spark.read.parquet(dir))
+    val frame0 = transform(spark.read.parquet(src))
     val frame =
       if (knownCount.isDefined) frame0
       else frame0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val staging = dir + ".compact"
-    val retired = dir + ".pre-compact"
-    try writeSharded(frame, staging, key, targetRowsPerFile, knownCount)
-    finally if (knownCount.isEmpty) frame.unpersist(): Unit
-    val (fs, _) = graft.core.Fs.resolve(spark, dir)
-    require(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(retired)), s"retire rename failed: $dir")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging),
-      new org.apache.hadoop.fs.Path(dir)), s"publish rename failed: $staging")
-    graft.core.Fs.deleteRecursively(spark, retired)
-    // an in-place rewrite MUST invalidate the session's caches for the
-    // path: a frame persisted over the pre-rewrite files canonicalizes
-    // equal to a post-rewrite read of the same path (same root, same
-    // schema), so without this the CacheManager would silently serve
-    // the RETIRED data to every later reader — stale listings and
-    // cached plans both drop here
-    spark.catalog.refreshByPath(dir)
-    (before, parquetCount(spark, dir))
+    // the new generation has its own path, so no cached plan over the
+    // replaced one can answer a later read of `dir`
+    val gen =
+      try Generations.publish(spark, dir)(
+        writeSharded(frame, _, key, targetRowsPerFile, knownCount): Unit)
+      finally if (knownCount.isEmpty) frame.unpersist(): Unit
+    (before, parquetCount(spark, gen))
   }
 
   /** Z-order OPTIMIZE: [[compactParquet]] keyed on the Morton
@@ -140,16 +125,42 @@ object ShardedWriter {
     * fold or a dimension is all-null (no meaningful scale exists).
     */
   def compactZorder2(spark: org.apache.spark.sql.SparkSession, dir: String,
-      dimA: String, dimB: String, targetRowsPerFile: Long): (Int, Int) = {
+      dimA: String, dimB: String, targetRowsPerFile: Long): (Int, Int) =
+    compactZorder(spark, dir, Seq(dimA, dimB), targetRowsPerFile, 65535L)(cells =>
+      graft.functions.LayoutExpressions.zorder2(cells(0), cells(1)))
+
+  /** K-dimensional Z-order OPTIMIZE — [[compactZorder2]] generalized to
+    * any column list (2..8 dims) via [[graft.functions.ZOrderN]]: the
+    * same one-scan stats pre-read min-max scales EVERY dimension onto
+    * the shared `2^(63/K)` grid, so each weighs equally in the
+    * interleave and a K-rectangle predicate prunes files on all K
+    * dimensions. Same one-step generation commit, same
+    * knownCount-from-stats sizing. Prefer [[compactZorder2]] for two
+    * dimensions (its five-round spread is the unrolled fast path).
+    */
+  def compactZorderN(spark: org.apache.spark.sql.SparkSession, dir: String,
+      dims: Seq[String], targetRowsPerFile: Long): (Int, Int) = {
+    require(dims.length >= 2 && dims.length <= 8,
+      s"compactZorderN takes 2..8 dimensions, got ${dims.length}")
+    compactZorder(spark, dir, dims, targetRowsPerFile, (1L << (63 / dims.length)) - 1)(
+      cells => graft.functions.LayoutExpressions.zorderN(cells: _*))
+  }
+
+  /** The Z-order OPTIMIZE both entries share: one stats scan (each
+    * dimension's min and max, and the row count), each dimension
+    * min-max scaled onto `[0, gridMax]`, the cells interleaved, and
+    * [[compactParquet]] sized by the scanned count.
+    */
+  private def compactZorder(spark: org.apache.spark.sql.SparkSession, dir: String,
+      dims: Seq[String], targetRowsPerFile: Long, gridMax: Long)(
+      interleave: Seq[Column] => Column): (Int, Int) = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    recoverInterrupted(spark, dir)
-    if (parquetCount(spark, dir) == 0) return (0, 0)
-    val stats = spark.read.parquet(dir)
-      .agg(min(col(dimA)).cast("long"), max(col(dimA)).cast("long"),
-        min(col(dimB)).cast("long"), max(col(dimB)).cast("long"),
-        count(lit(1)))
-      .head()
-    if (stats.isNullAt(0) || stats.isNullAt(2)) return (0, 0)
+    val src = Generations.resolve(spark, dir)
+    if (parquetCount(spark, src) == 0) return (0, 0)
+    val aggs = dims.flatMap(d =>
+      Seq(min(col(d)).cast("long"), max(col(d)).cast("long"))) :+ count(lit(1))
+    val stats = spark.read.parquet(src).agg(aggs.head, aggs.tail: _*).head()
+    if (dims.indices.exists(i => stats.isNullAt(2 * i))) return (0, 0)
     def scaled(c: String, mn: Long, mx: Long): Column =
       if (mx <= mn) lit(0L)
       // ratio-first in double: multiply-first long math would overflow
@@ -159,44 +170,9 @@ object ShardedWriter {
       // non-negatives — so cells stay ordered for EVERY long span, at
       // worst losing sub-cell resolution on astronomically wide domains
       else ((col(c).cast("long") - lit(mn)).cast("double") / lit((mx - mn).toDouble)
-        * lit(65535.0)).cast("long")
-    val key = graft.functions.LayoutExpressions.zorder2(
-      scaled(dimA, stats.getLong(0), stats.getLong(1)),
-      scaled(dimB, stats.getLong(2), stats.getLong(3)))
-    compactParquet(spark, dir, key, targetRowsPerFile,
-      knownCount = Some(stats.getLong(4)))
-  }
-
-  /** K-dimensional Z-order OPTIMIZE — [[compactZorder2]] generalized to
-    * any column list (2..8 dims) via [[graft.functions.ZOrderN]]: the
-    * same one-scan stats pre-read min-max scales EVERY dimension onto
-    * the shared `2^(63/K)` grid, so each weighs equally in the
-    * interleave and a K-rectangle predicate prunes files on all K
-    * dimensions. Same crash-safe rename protocol, same
-    * knownCount-from-stats sizing. Prefer [[compactZorder2]] for two
-    * dimensions (its five-round spread is the unrolled fast path).
-    */
-  def compactZorderN(spark: org.apache.spark.sql.SparkSession, dir: String,
-      dims: Seq[String], targetRowsPerFile: Long): (Int, Int) = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    require(dims.length >= 2 && dims.length <= 8,
-      s"compactZorderN takes 2..8 dimensions, got ${dims.length}")
-    recoverInterrupted(spark, dir)
-    if (parquetCount(spark, dir) == 0) return (0, 0)
-    val aggs = dims.flatMap(d =>
-      Seq(min(col(d)).cast("long"), max(col(d)).cast("long"))) :+ count(lit(1))
-    val stats = spark.read.parquet(dir).agg(aggs.head, aggs.tail: _*).head()
-    if (dims.indices.exists(i => stats.isNullAt(2 * i))) return (0, 0)
-    val gridMax = (1L << (63 / dims.length)) - 1
-    def scaled(c: String, mn: Long, mx: Long): Column =
-      if (mx <= mn) lit(0L)
-      // ratio-first in double — same overflow-free monotone scaling as
-      // compactZorder2, onto this K's per-dimension grid
-      else ((col(c).cast("long") - lit(mn)).cast("double") / lit((mx - mn).toDouble)
         * lit(gridMax.toDouble)).cast("long")
-    val key = graft.functions.LayoutExpressions.zorderN(
-      dims.zipWithIndex.map { case (d, i) =>
-        scaled(d, stats.getLong(2 * i), stats.getLong(2 * i + 1)) }: _*)
+    val key = interleave(dims.zipWithIndex.map { case (d, i) =>
+      scaled(d, stats.getLong(2 * i), stats.getLong(2 * i + 1)) })
     compactParquet(spark, dir, key, targetRowsPerFile,
       knownCount = Some(stats.getLong(2 * dims.length)))
   }
@@ -205,35 +181,5 @@ object ShardedWriter {
     val (fs, hp) = graft.core.Fs.resolve(spark, p)
     if (!fs.exists(hp)) 0
     else fs.listStatus(hp).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** Settle what a crashed [[compactParquet]] left behind; afterwards no
-    * `.pre-compact` exists. The staging dir `.compact` tells the windows
-    * apart, since the publish rename consumes it:
-    *   - retired copy, no `dir`: the crash landed between the renames —
-    *     restore it instead of treating the table as empty;
-    *   - retired copy, `dir` AND staging: the same crash, after which an
-    *     append recreated `dir` — move the retired parts into `dir`
-    *     (rename by name, so a re-run after a crash mid-move moves the
-    *     rest), or dropping the retired copy would lose every row it
-    *     holds;
-    *   - retired copy and `dir`, no staging: the publish completed and
-    *     the retired copy is stale — drop it (folding it in would
-    *     duplicate every row).
-    */
-  private def recoverInterrupted(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val (fs, dirP) = graft.core.Fs.resolve(spark, dir)
-    val retired = dir + ".pre-compact"
-    val retiredP = new org.apache.hadoop.fs.Path(retired)
-    if (!fs.exists(retiredP)) return
-    if (!fs.exists(dirP))
-      require(fs.rename(retiredP, dirP),
-        s"interrupted-publish recovery rename failed: $retiredP -> $dirP")
-    else {
-      if (fs.exists(new org.apache.hadoop.fs.Path(dir + ".compact")))
-        graft.core.Fs.moveParts(spark, retired, dir)
-      graft.core.Fs.deleteRecursively(spark, retired)
-    }
   }
 }

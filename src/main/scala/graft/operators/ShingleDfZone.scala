@@ -41,18 +41,21 @@ import org.apache.spark.sql.functions._
   * most total-occurrences/√n shingles qualify — and is the only thing
   * dedup consumers join against. At deployment scale the rows table is
   * periodically FOLDED (sum-aggregate rewritten under one retired
-  * batch epoch — [[ShardedWriter.compactParquet]]'s rename protocol),
-  * which keeps the read proportional to distinct shingles, not batch
-  * count.
+  * batch epoch, published as a new generation by
+  * [[ShardedWriter.compactParquet]]; reads and appends resolve it
+  * through [[Zone]]), which keeps the read proportional to distinct
+  * shingles, not batch count.
   */
 object ShingleDfZone {
 
   /** Create an empty zone with fixed shingle width (the [[Zone.create]]
     * guard: mixed-width counts are meaningless — rebuild instead).
     */
+  private[operators] def zone(zoneDir: String) =
+    Zone.at("ShingleDfZone", zoneDir, rows = "rows", id = "shingle", cluster = "shingle")
+
   def create(spark: SparkSession, zoneDir: String, shingleN: Int): Unit =
-    Zone.at("ShingleDfZone", zoneDir, rows = "rows", id = "shingle",
-        cluster = "shingle").create(spark) {
+    zone(zoneDir).create(spark) {
       val n = shingleWidth(spark, zoneDir)
       if (n == shingleN) None
       else Some((s"$n-shingle counts", s"shingle_n=$shingleN (incompatible counts)"))
@@ -74,11 +77,11 @@ object ShingleDfZone {
     */
   def append(delta: DataFrame, zoneDir: String, batchId: Long): Unit = {
     val spark = delta.sparkSession
-    val n = shingleWidth(spark, zoneDir)
-    Dedup.shingles(delta, col("doc_id"), col("text"), n)
-      .groupBy(col("shingle")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Append).parquet(s"$zoneDir/rows")
+    zone(zoneDir).append(spark) {
+      Dedup.shingles(delta, col("doc_id"), col("text"), shingleWidth(spark, zoneDir))
+        .groupBy(col("shingle")).agg(count(lit(1)).as("cnt"))
+        .withColumn("batch_id", lit(batchId))
+    }
   }
 
   /** Exact corpus document frequency per shingle: DISTINCT absorbs
@@ -87,16 +90,9 @@ object ShingleDfZone {
     * Empty zone (created, never appended) reads as an empty frame.
     */
   def df(spark: SparkSession, zoneDir: String): DataFrame =
-    if (!graft.core.Fs.exists(spark, s"$zoneDir/rows"))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("shingle",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("df",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$zoneDir/rows")
-      .distinct()
-      .groupBy(col("shingle")).agg(sum(col("cnt")).as("df"))
+    zone(zoneDir).rows(spark).fold(
+      spark.range(0).select(col("id").cast("string").as("shingle"), col("id").as("df")))(
+      _.distinct().groupBy(col("shingle")).agg(sum(col("cnt")).as("df")))
 
   /** The hot-shingle drop list: shingles whose corpus df EXCEEDS the
     * cap. This is what dedup consumers anti-join against — small next

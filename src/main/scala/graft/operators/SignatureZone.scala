@@ -145,9 +145,10 @@ object SignatureZone {
     */
   def append(delta: DataFrame, zoneDir: String): Unit = {
     val spark = delta.sparkSession
-    val (n, k, b) = meta(spark, zoneDir)
-    deltaBandRows(delta, n, k, b, dropList(spark, zoneDir))
-      .write.mode(SaveMode.Append).parquet(s"$zoneDir/bands")
+    zone(zoneDir).append(spark) {
+      val (n, k, b) = meta(spark, zoneDir)
+      deltaBandRows(delta, n, k, b, dropList(spark, zoneDir))
+    }
   }
 
   /** Create + index an existing corpus in one call (the batch-backfill
@@ -220,8 +221,9 @@ object SignatureZone {
     // recording the post-read fingerprint would bless a genuinely stale
     // table (TOCTOU); with the pre-read fingerprint such an append makes
     // the staleness guard fail loudly instead — the safe direction
-    val fp = graft.core.Fs.fingerprint(spark, s"$zoneDir/bands")
-    spark.read.parquet(s"$zoneDir/bands").distinct()
+    val z = zone(zoneDir)
+    val fp = graft.core.Fs.fingerprint(spark, z.rowsDir)
+    Generations.read(spark, z.rowsDir).distinct()
       .write.format("parquet").bucketBy(buckets, "band", "bh").saveAsTable(t)
     stagedTables.put(t, (zoneDir, fp)): Unit
     t
@@ -237,7 +239,7 @@ object SignatureZone {
     val (dir, fp) = staged
     require(dir == zoneDir,
       s"bands table $table was staged from zone $dir, not $zoneDir")
-    val now = graft.core.Fs.fingerprint(spark, s"$zoneDir/bands")
+    val now = graft.core.Fs.fingerprint(spark, zone(zoneDir).rowsDir)
     require(now == fp,
       s"bands table $table is STALE: the zone's bands dir changed since " +
         "staging (appends or an optimize ran) — re-stage with " +

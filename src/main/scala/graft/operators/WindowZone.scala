@@ -45,8 +45,7 @@ object WindowZone {
     */
   def create(spark: SparkSession, zoneDir: String, w: Int): Unit = {
     require(w >= 2, s"window width must be >= 2 (got $w)")
-    Zone.at("WindowZone", zoneDir, rows = "rows", id = "h", cluster = "h")
-      .create(spark) {
+    zone(zoneDir).create(spark) {
         val old = width(spark, zoneDir)
         if (old == w) None
         else Some((s"$old-token window counts", s"w=$w (incompatible counts)"))
@@ -55,6 +54,9 @@ object WindowZone {
         Seq(w).toDF("w").write.mode(SaveMode.Overwrite).parquet(s"$zoneDir/meta")
       }
   }
+
+  private[operators] def zone(zoneDir: String) =
+    Zone.at("WindowZone", zoneDir, rows = "rows", id = "h", cluster = "h")
 
   /** Zone meta — a driver-side 1-row read (the watermark altitude),
     * served from the fingerprint-guarded cache
@@ -68,21 +70,20 @@ object WindowZone {
     */
   def append(delta: DataFrame, zoneDir: String, batchId: Long): Unit = {
     val spark = delta.sparkSession
-    Dedup.windowHashes(delta, col("doc_id"), col("text"), width(spark, zoneDir))
-      .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode(SaveMode.Append).parquet(s"$zoneDir/rows")
+    zone(zoneDir).append(spark) {
+      Dedup.windowHashes(delta, col("doc_id"), col("text"), width(spark, zoneDir))
+        .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
+        .withColumn("batch_id", lit(batchId))
+    }
   }
 
   /** Exact corpus occurrence count per window hash: DISTINCT absorbs
     * replayed batches, per-batch counts sum. Empty zone reads empty.
     */
   def counts(spark: SparkSession, zoneDir: String): DataFrame =
-    if (!graft.core.Fs.exists(spark, s"$zoneDir/rows"))
-      spark.range(0).select(col("id").as("h"), col("id").as("hist_cnt"))
-    else spark.read.parquet(s"$zoneDir/rows")
-      .distinct()
-      .groupBy(col("h")).agg(sum(col("cnt")).as("hist_cnt"))
+    zone(zoneDir).rows(spark).fold(
+      spark.range(0).select(col("id").as("h"), col("id").as("hist_cnt")))(
+      _.distinct().groupBy(col("h")).agg(sum(col("cnt")).as("hist_cnt")))
 
   /** A DELTA's maximal duplicated spans against history∪delta — d33's
     * rule served from the stored counts ([[incrementalSpans]] ≡ the

@@ -37,21 +37,24 @@ import graft.core.Fs
   *     feedback appends replays the decide) and must not generate
   *     candidates against it. The cut is a pushed-down scalar filter —
   *     zero new exchanges, a no-op on a clean zone.
+  *   - [[append]] and [[rows]]: the rows dir is written and read only
+  *     here, through [[Generations.resolve]] — OPTIMIZE rewrites it as
+  *     a new generation.
+  *   - [[create]], [[requireEmpty]] and [[append]] first restore a zone
+  *     an interrupted [[ZoneRebuild]] cutover left retired, so none of
+  *     them recreates it empty beside the retired copy.
   *   - [[optimize]]: snapshot the tombstone LISTING, rewrite the rows as
   *     their live rows DISTINCTed (replay duplicates and deleted ids
   *     folded for good) clustered on the cluster column through
-  *     [[ShardedWriter.compactParquet]]'s crash-safe rename publish,
+  *     [[ShardedWriter.compactParquet]]'s one-step generation commit,
   *     delete only the SNAPSHOTTED tombstone files, then run the zone's
   *     after-hook (stats, a clean stamp). Result-invisible: readers
   *     already DISTINCT and subtract tombstones. A tombstone appended
   *     while the pass runs lands outside the snapshot and survives to
   *     the next pass (clearing it would resurrect the deleted id). A
-  *     crash between the publish and the clear re-applies the same
-  *     tombstones next pass — idempotent. A crash between the publish's
-  *     two renames leaves `<rows>.pre-compact` and no rows dir; the next
-  *     OPTIMIZE restores it and compacts, folding in any rows appended
-  *     in between (appends may run first and lose nothing). Reads see
-  *     the parked rows meanwhile ([[liveRows]]).
+  *     crash between the commit and the clear re-applies the same
+  *     tombstones next pass — idempotent. A crash anywhere leaves one
+  *     committed generation serving every read and append.
   *
   * `tombstoneId` names the tombstone column when it differs from the
   * rows' `id` (the md5 keeper zone tombstones `doc_id` against
@@ -68,6 +71,7 @@ private[operators] final case class Zone(kind: String, dir: String,
     */
   def create(spark: SparkSession)(conflict: => Option[(String, String)])(
       writeMeta: => Unit): Unit = {
+    ZoneRebuild.recoverInterrupted(spark, dir)
     val hasMeta = Fs.exists(spark, metaDir)
     lazy val mismatch = conflict
     if (Fs.exists(spark, rowsDir)) {
@@ -83,13 +87,17 @@ private[operators] final case class Zone(kind: String, dir: String,
     if (!hasMeta || mismatch.nonEmpty) writeMeta
   }
 
-  /** The build guard: refuse to re-append a whole corpus over stored rows. */
+  /** The build guard: refuse to re-append a whole corpus over stored
+    * rows, a retired zone's included.
+    */
   def requireEmpty(spark: SparkSession, op: String = "build()",
-      appendWith: String = "append"): Unit =
+      appendWith: String = "append"): Unit = {
+    ZoneRebuild.recoverInterrupted(spark, dir)
     require(!Fs.exists(spark, rowsDir),
       s"$kind $dir already holds rows; $op would re-append the entire " +
         s"corpus on top of them — use $appendWith for deltas, or drop the " +
         "zone first for a full rebuild")
+  }
 
   /** Tombstone the ids in `ids` (it must expose the tombstone column). */
   def delete(ids: DataFrame): Unit =
@@ -109,33 +117,39 @@ private[operators] final case class Zone(kind: String, dir: String,
     below.fold(alive)(m => alive.filter(col(id) < m))
   }
 
-  /** [[live]] over the stored rows; None while the zone holds no rows.
-    * The stored rows include those a crash between
-    * [[ShardedWriter.compactParquet]]'s two renames parked in
-    * `<rows>.pre-compact` — alone when no append has recreated the rows
-    * dir, beside it when one has (the staging `<rows>.compact` is still
-    * there). With both dirs and no staging the publish completed and
-    * the parked copy is stale, so it is not read (it would count every
-    * row twice). A clean zone pays one existence check for this.
+  /** Append the frame `rows` builds (after the restore, so a meta read
+    * inside it sees the restored zone).
     */
-  def liveRows(spark: SparkSession, below: Option[Long] = None): Option[DataFrame] = {
-    val parked = rowsDir + ".pre-compact"
-    val hasRows = Fs.exists(spark, rowsDir)
-    val dirs =
-      if (!Fs.exists(spark, parked)) (if (hasRows) Seq(rowsDir) else Nil)
-      else if (!hasRows) Seq(parked)
-      else if (Fs.exists(spark, rowsDir + ".compact")) Seq(rowsDir, parked)
-      else Seq(rowsDir)
-    if (dirs.isEmpty) None else Some(live(spark.read.parquet(dirs: _*), below))
+  def append(spark: SparkSession)(rows: => DataFrame): Unit = {
+    ZoneRebuild.recoverInterrupted(spark, dir)
+    rows.write.mode(SaveMode.Append).parquet(Generations.resolve(spark, rowsDir))
   }
+
+  /** The stored rows, tombstones not applied; None while the zone holds
+    * no rows.
+    */
+  def rows(spark: SparkSession): Option[DataFrame] =
+    if (!Fs.exists(spark, rowsDir)) None else Some(Generations.read(spark, rowsDir))
+
+  /** [[live]] over the stored rows; None while the zone holds no rows. */
+  def liveRows(spark: SparkSession, below: Option[Long] = None): Option[DataFrame] =
+    rows(spark).map(live(_, below))
+
+  /** [[live]] over the stored rows of the files whose `column` range can
+    * hold any of `points` ([[ZoneMap.statsPlannedRead]] over `statsDir`);
+    * None while the zone holds no rows.
+    */
+  def plannedLiveRows(spark: SparkSession, statsDir: String, column: String,
+      points: => Seq[Long]): Option[DataFrame] =
+    if (!Fs.exists(spark, rowsDir)) None
+    else Some(live(ZoneMap.statsPlannedRead(spark, rowsDir, statsDir, column, points)))
 
   /** OPTIMIZE; returns (filesBefore, filesAfter), (0, 0) for a zone
     * that holds no rows. `after` runs once the tombstones are cleared.
     */
   def optimize(spark: SparkSession, targetRowsPerFile: Long,
       after: () => Unit = () => ()): (Int, Int) = {
-    if (!Fs.exists(spark, rowsDir) &&
-        !Fs.exists(spark, rowsDir + ".pre-compact")) return (0, 0)
+    if (!Fs.exists(spark, rowsDir)) return (0, 0)
     val snap = Fs.listFilePaths(spark, tombstonesDir)
     val res = ShardedWriter.compactParquet(spark, rowsDir, col(cluster),
       targetRowsPerFile, transform = rows => live(rows).distinct())

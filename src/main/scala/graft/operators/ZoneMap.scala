@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
   * pruning selective in all of them at once (s13_zonemap_skip proves
   * the composition end-to-end; ZoneMapSpec pins the file-hit counts).
   *
+  * Every data-dir read resolves the dir's current generation
+  * ([[Generations]]) in [[data]], so a dir a compaction rewrote is read
+  * as its committed rows; stats record the generation's file paths.
+  *
   * Staleness contract: the stats table is a snapshot of the data dir at
   * build time. [[prunedRead]] fails loudly if the dir has gained files
   * the stats don't cover (a file the planner doesn't know about could
@@ -39,7 +43,7 @@ object ZoneMap {
     */
   private def requireFresh(spark: SparkSession, dataDir: String,
       known: Set[String], what: String, rebuild: String): Unit = {
-    val actual = spark.read.parquet(dataDir).inputFiles.toSet
+    val actual = data(spark, dataDir).inputFiles.toSet
     require(actual == known, {
       val extra = actual -- known
       val gone = known -- actual
@@ -61,7 +65,7 @@ object ZoneMap {
     */
   def buildStats(spark: SparkSession, dataDir: String, statsDir: String,
       cols: Seq[String]): Unit =
-    statsAgg(spark.read.parquet(dataDir), cols)
+    statsAgg(data(spark, dataDir), cols)
       .write.mode(SaveMode.Overwrite).parquet(statsDir)
 
   private def statsAgg(df: DataFrame, cols: Seq[String]): DataFrame = {
@@ -94,7 +98,7 @@ object ZoneMap {
       metaDir: String)(perFile: DataFrame => DataFrame): Long = {
     val covered = spark.read.parquet(metaDir)
       .select(col("file")).collect().map(_.getString(0)).toSet
-    val fresh = spark.read.parquet(dataDir).inputFiles.filterNot(covered)
+    val fresh = data(spark, dataDir).inputFiles.filterNot(covered)
     if (fresh.isEmpty) return 0L
     perFile(spark.read.parquet(fresh.toIndexedSeq: _*))
       .write.mode(SaveMode.Append).parquet(metaDir)
@@ -137,19 +141,29 @@ object ZoneMap {
     */
   private def readFiles(spark: SparkSession, dataDir: String,
       files: Seq[String]): DataFrame =
-    if (files.isEmpty) spark.read.parquet(dataDir).filter(lit(false))
+    if (files.isEmpty) data(spark, dataDir).filter(lit(false))
     else spark.read.parquet(files: _*)
+
+  /** The current rows of `dataDir` (the one place ZoneMap reads data). */
+  private def data(spark: SparkSession, dataDir: String): DataFrame =
+    Generations.read(spark, dataDir)
 
   /** The read of a zone's rows once OPTIMIZE persisted `statsDir`
     * (`points` are computed only then): the files whose `column` range
     * can hold any of `points` ([[statsPlanFilesAnyOf]]). Without stats,
-    * the whole dir.
+    * or with stats of a generation a later compaction replaced (a crash
+    * before the stats rebuild), the whole dir — those stats prove
+    * nothing about the current files.
     */
   private[operators] def statsPlannedRead(spark: SparkSession, dataDir: String,
-      statsDir: String, column: String, points: => Seq[Long]): DataFrame =
-    if (!graft.core.Fs.exists(spark, statsDir)) spark.read.parquet(dataDir)
-    else readFiles(spark, dataDir,
-      statsPlanFilesAnyOf(spark, dataDir, statsDir, column, points))
+      statsDir: String, column: String, points: => Seq[Long]): DataFrame = {
+    val stats =
+      if (!graft.core.Fs.exists(spark, statsDir)) Seq.empty
+      else statsRanges(spark, statsDir, column)
+    if (!Generations.holdsAny(spark, dataDir, stats.map(_.getString(0))))
+      data(spark, dataDir)
+    else readFiles(spark, dataDir, planAnyOf(spark, dataDir, stats, points))
+  }
 
   /** Stats-planned POINT-SET file planning: the files whose `[min_c,
     * max_c]` range contains ANY of the probe points — the disjunctive
@@ -161,11 +175,19 @@ object ZoneMap {
     * file can hold any probe.
     */
   def statsPlanFilesAnyOf(spark: SparkSession, dataDir: String,
-      statsDir: String, column: String, points: Seq[Long]): Seq[String] = {
-    val rows = spark.read.parquet(statsDir)
+      statsDir: String, column: String, points: Seq[Long]): Seq[String] =
+    planAnyOf(spark, dataDir, statsRanges(spark, statsDir, column), points)
+
+  /** The `(file, min, max)` rows of `column` in the stats table. */
+  private def statsRanges(spark: SparkSession, statsDir: String,
+      column: String): Seq[org.apache.spark.sql.Row] =
+    spark.read.parquet(statsDir)
       .select(col("file"), col(s"min_$column").cast("long").as("mn"),
         col(s"max_$column").cast("long").as("mx"))
-      .collect()
+      .collect().toSeq
+
+  private def planAnyOf(spark: SparkSession, dataDir: String,
+      rows: Seq[org.apache.spark.sql.Row], points: Seq[Long]): Seq[String] = {
     requireFresh(spark, dataDir, rows.map(_.getString(0)).toSet,
       "zone map", "stats")
     rows.collect {
@@ -189,7 +211,7 @@ object ZoneMap {
     */
   def buildBlooms(spark: SparkSession, dataDir: String, bloomDir: String,
       keyCol: String, expectedItemsPerFile: Int): Unit =
-    bloomAgg(spark.read.parquet(dataDir), keyCol, expectedItemsPerFile)
+    bloomAgg(data(spark, dataDir), keyCol, expectedItemsPerFile)
       .write.mode(SaveMode.Overwrite).parquet(bloomDir)
 
   private def bloomAgg(df: DataFrame, keyCol: String,

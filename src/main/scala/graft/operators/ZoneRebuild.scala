@@ -17,15 +17,17 @@ import org.apache.spark.sql.SparkSession
   * read it, and publish with two directory renames. The old zone
   * serves every reader until the instant of the swap.
   *
-  * Crash semantics (the [[ShardedWriter.compactParquet]] rename
-  * protocol lifted to whole zones):
+  * Crash semantics (a rename publish of the whole zone dir — meta,
+  * rows and tombstones together, the unit a rows-dir generation
+  * ([[Generations]]) cannot cover):
   *   - crash DURING the build: the old zone is untouched and serving;
   *     the stale staging dir is deleted and re-built by the next run;
   *   - crash BETWEEN the two renames: the zone dir is absent with the
-  *     data intact in `<dir>.retired` — the next [[rebuild]] (or an
-  *     explicit [[recoverInterrupted]]) detects exactly that state and
-  *     renames the retired zone back, so the OLD zone resumes serving
-  *     (never an empty or half-new zone);
+  *     data intact in `<dir>.retired` — the next [[rebuild]], [[Zone]]
+  *     create or append (or an explicit [[recoverInterrupted]])
+  *     detects exactly that state and renames the retired zone back,
+  *     so the OLD zone resumes serving (never an empty or half-new
+  *     zone, and never one a create recreated empty beside it);
   *   - crash AFTER the second rename: the new zone is live; the
   *     leftover retired copy is dropped by the next run.
   *

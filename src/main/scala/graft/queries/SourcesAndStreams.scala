@@ -688,6 +688,44 @@ object SourcesAndStreams {
       .orderBy(col("c_mktsegment"))
   }
 
+  /** A hash-fragmented events copy (every file spans the full user and
+    * time domain — exactly what a parallel ingest leaves) folded by
+    * `compact(path, targetRowsPerFile)`, which must fold it; staged once
+    * per session under `key`, as one OPTIMIZE'd production table serves
+    * many queries.
+    */
+  private def compactedEventsCopy(spark: SparkSession, dir: String, key: String)(
+      compact: (String, Long) => (Int, Int)): String =
+    stageOnce(spark, s"$key:$dir") { () =>
+      val p = scratch(key)
+      val events = Tables.events(spark, dir)
+        .select(col("event_id"), col("user_id"),
+          unix_timestamp(col("ts")).as("sec"),
+          round(col("value") * 100).cast("long").as("cents"))
+      val n = events.count()
+      events.repartition(16).write.mode(SaveMode.Overwrite).parquet(p)
+      val (before, after) = compact(p, math.max(1L, (n + 7) / 8))
+      require(after < before,
+        s"$key: z-order compaction must fold the fragmented layout: $before -> $after")
+      p
+    }
+
+  /** The q46/s13 staged layout: the fragmented copy folded by 2-D
+    * z-order compaction on (user_id, sec).
+    */
+  private def zorderedEventsCopy(spark: SparkSession, dir: String): String =
+    compactedEventsCopy(spark, dir, "q46z")((p, target) =>
+      graft.operators.ShardedWriter.compactZorder2(spark, p, "user_id", "sec", target))
+
+  /** The box aggregate q46, q47, s13 and c3 answer. */
+  private[graft] def boxAgg(df: DataFrame): DataFrame =
+    df.agg(
+      count(lit(1)).as("n_box"),
+      sum(col("cents")).as("cents_box"),
+      countDistinct(col("user_id")).as("users_box"),
+      min(col("event_id")).as("min_eid"),
+      max(col("event_id")).as("max_eid"))
+
   /** Z-order-compacted layout end-to-end — the OPTIMIZE ZORDER pass a
     * 100 TB events table needs so BOTH per-user and per-time-range
     * predicates prune files. The staged layout is worst-case incoming
@@ -695,8 +733,9 @@ object SourcesAndStreams {
     * user and time domain — exactly what a parallel ingest leaves),
     * folded by [[graft.operators.ShardedWriter.compactZorder2]] on
     * (user_id, sec): min-max scaled to a shared 16-bit grid, Morton
-    * interleaved ([[graft.functions.ZOrder2]]), rewritten via the
-    * crash-safe rename protocol. The timed query is the 2-D box
+    * interleaved ([[graft.functions.ZOrder2]]), rewritten as a new
+    * generation published in one commit step
+    * ([[graft.operators.Generations]]). The timed query is the 2-D box
     * aggregate the layout exists for — each compacted file holds a
     * tight Morton tile, so its zone maps bound BOTH dimensions and the
     * box touches a constant number of files regardless of table size
@@ -705,40 +744,11 @@ object SourcesAndStreams {
     * table — equality proves the whole stage-fragment-compact pipeline
     * content-exact where the query lands.
     */
-  /** The q46/s13 staged layout: a hash-fragmented events copy folded by
-    * 2-D z-order compaction on (user_id, sec) — staged once per session
-    * and shared, exactly as one OPTIMIZE'd production table serves many
-    * queries.
-    */
-  private def zorderedEventsCopy(spark: SparkSession, dir: String): String =
-    stageOnce(spark, s"q46z:$dir") { () =>
-      val p = scratch("q46z")
-      val events = Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"),
-          unix_timestamp(col("ts")).as("sec"),
-          round(col("value") * 100).cast("long").as("cents"))
-      val n = events.count()
-      events.repartition(16).write.mode(SaveMode.Overwrite).parquet(p)
-      val (before, after) = graft.operators.ShardedWriter.compactZorder2(
-        spark, p, "user_id", "sec", math.max(1L, (n + 7) / 8))
-      require(after < before,
-        s"z-order compaction must fold the fragmented layout: $before -> $after")
-      p
-    }
-
-  def q46ZorderCompact(spark: SparkSession, dir: String): DataFrame = {
-    val path = zorderedEventsCopy(spark, dir)
+  def q46ZorderCompact(spark: SparkSession, dir: String): DataFrame =
     // users 3..6 on 2024-01-10..11 UTC: selective in both dimensions
-    spark.read.parquet(path)
+    boxAgg(graft.operators.Generations.read(spark, zorderedEventsCopy(spark, dir))
       .filter(col("user_id").between(3, 6) &&
-        col("sec").between(1704844800L, 1705017599L))
-      .agg(
-        count(lit(1)).as("n_box"),
-        sum(col("cents")).as("cents_box"),
-        countDistinct(col("user_id")).as("users_box"),
-        min(col("event_id")).as("min_eid"),
-        max(col("event_id")).as("max_eid"))
-  }
+        col("sec").between(1704844800L, 1705017599L)))
 
   /** [[q46ZorderCompact]]'s K-dimensional sibling: the same fragmented
     * events copy compacted by
@@ -752,31 +762,14 @@ object SourcesAndStreams {
     * "top-spenders in a window" shape a 100 TB events table serves.
     */
   def q47Zorder3Compact(spark: SparkSession, dir: String): DataFrame = {
-    val path = stageOnce(spark, s"q47z:$dir") { () =>
-      val p = scratch("q47z")
-      val events = Tables.events(spark, dir)
-        .select(col("event_id"), col("user_id"),
-          unix_timestamp(col("ts")).as("sec"),
-          round(col("value") * 100).cast("long").as("cents"))
-      val n = events.count()
-      events.repartition(16).write.mode(SaveMode.Overwrite).parquet(p)
-      val (before, after) = graft.operators.ShardedWriter.compactZorderN(
-        spark, p, Seq("user_id", "sec", "cents"), math.max(1L, (n + 7) / 8))
-      require(after < before,
-        s"3-D z-order compaction must fold the fragmented layout: $before -> $after")
-      p
-    }
+    val path = compactedEventsCopy(spark, dir, "q47z")((p, target) =>
+      graft.operators.ShardedWriter.compactZorderN(
+        spark, p, Seq("user_id", "sec", "cents"), target))
     // users 3..6, 2024-01-10..19 UTC, spend band 20.00..79.99
-    spark.read.parquet(path)
+    boxAgg(graft.operators.Generations.read(spark, path)
       .filter(col("user_id").between(3, 6) &&
         col("sec").between(1704844800L, 1705708799L) &&
-        col("cents").between(2000L, 7999L))
-      .agg(
-        count(lit(1)).as("n_box"),
-        sum(col("cents")).as("cents_box"),
-        countDistinct(col("user_id")).as("users_box"),
-        min(col("event_id")).as("min_eid"),
-        max(col("event_id")).as("max_eid"))
+        col("cents").between(2000L, 7999L)))
   }
 
   /** Zone-map data skipping end-to-end — [[graft.operators.ZoneMap]]
@@ -800,18 +793,12 @@ object SourcesAndStreams {
     }
     // users 10..12 on 2024-01-20..24 UTC — a different box than q46, so
     // the two queries exercise different file subsets of the same layout
-    graft.operators.ZoneMap.prunedRead(spark, path, statsDir,
+    boxAgg(graft.operators.ZoneMap.prunedRead(spark, path, statsDir,
         Seq(("user_id", 10L, 12L), ("sec", 1705708800L, 1706140799L)))
       // file pruning is file-granular: the row-level predicate still
       // applies on top (and pushes into the surviving files' scans)
       .filter(col("user_id").between(10, 12) &&
-        col("sec").between(1705708800L, 1706140799L))
-      .agg(
-        count(lit(1)).as("n_box"),
-        sum(col("cents")).as("cents_box"),
-        countDistinct(col("user_id")).as("users_box"),
-        min(col("event_id")).as("min_eid"),
-        max(col("event_id")).as("max_eid"))
+        col("sec").between(1705708800L, 1706140799L)))
   }
 
   /** Bloom-filter data skipping (s14) — the POINT-LOOKUP half of the

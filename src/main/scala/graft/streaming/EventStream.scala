@@ -942,16 +942,13 @@ object EventStream {
     // toy scale two micro-batches can land as two already-large files;
     // a fixed shard count would then expand, not fold). Real
     // deployments size by bytes; rows are the local proxy.
-    val preCount = {
-      val (fs, p) = graft.core.Fs.resolve(spark, target)
-      fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
+    val preCount = spark.read.parquet(target).inputFiles.length
     val shards = math.min(4L, math.max(1L, preCount / 2L))
     val (before, after) = graft.operators.ShardedWriter.compactParquet(
       spark, target, col("event_id"), math.max(1L, (n + shards - 1) / shards))
     require(after < before,
       s"compaction did not fold the ingest layout ($before -> $after files)")
-    spark.read.parquet(target).orderBy(col("event_id"))
+    graft.operators.Generations.read(spark, target).orderBy(col("event_id"))
   }
 
   /** st12: the reference's ACTUAL production loop — stream into a live
@@ -1437,8 +1434,8 @@ object EventStream {
     * the round-8 pieces exist for, run as one pipeline: (1) checkpointed
     * ingest with zone-map stats maintained per batch (st6's PK merge +
     * st15's appendStats), (2) the OPTIMIZE rewrite z-ordering the
-    * accumulated table on (user_id, sec) (q46's compaction, crash-safe
-    * rename protocol), (3) the stats REBUILD the rewrite forces —
+    * accumulated table on (user_id, sec) (q46's compaction, published
+    * as a new generation in one commit step), (3) the stats REBUILD the rewrite forces —
     * history changed, so appendStats' never-covered-files contract is
     * exactly wrong here and prunedRead's staleness guard would fail
     * loudly against the old stats; only a rebuild proves which rows
@@ -1454,7 +1451,7 @@ object EventStream {
     * pins the composition, not re-proofs of the parts.)
     */
   def lakeMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{ShardedWriter, ZoneMap}
+    import graft.operators.{Generations, ShardedWriter, ZoneMap}
     val (src, schema, _) = stagedLakeSource(spark, dir)
     val statCols = Seq("user_id", "sec")
     scoped("c3") { root =>
@@ -1469,18 +1466,12 @@ object EventStream {
       ZoneMap.buildStats(spark, target, statsRebuilt, statCols)
       val pruned = ZoneMap.prunedRead(spark, target, statsRebuilt,
         Seq(("user_id", 3L, 6L), ("sec", 1704844800L, 1705017599L)))
-      val all = spark.read.parquet(target).inputFiles.length
+      val all = Generations.read(spark, target).inputFiles.length
       require(pruned.inputFiles.length < all,
         s"z-order + zone maps pruned nothing (${pruned.inputFiles.length}/$all files)")
-      pruned
+      graft.queries.SourcesAndStreams.boxAgg(pruned
         .filter(col("user_id").between(3, 6) &&
-          col("sec").between(1704844800L, 1705017599L))
-        .agg(
-          count(lit(1)).as("n_box"),
-          sum(col("cents")).as("cents_box"),
-          countDistinct(col("user_id")).as("users_box"),
-          min(col("event_id")).as("min_eid"),
-          max(col("event_id")).as("max_eid"))
+          col("sec").between(1704844800L, 1705017599L)))
     }
   }
 

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.functions.LayoutExpressions
-import graft.operators.ShardedWriter
+import graft.operators.{Generations, ShardedWriter}
 
 /** The Z-order expression contract: bit-exact interleave (vs a bit-by-bit
   * reference), SQL-surface null semantics, and the layout win it exists
@@ -205,9 +205,9 @@ class LayoutExpressionsSpec extends SparkSpec {
     // exact file count.
     assert(before == 16 && after <= 16 && after < before)
     // content survives the rewrite
-    assert(spark.read.parquet(dir).count() == 4096)
+    assert(Generations.read(spark, dir).count() == 4096)
     def filesHitting(pred: Column): Int =
-      Files.list(Paths.get(dir)).iterator().asScala
+      Files.list(Paths.get(Generations.resolve(spark, dir))).iterator().asScala
         .map(_.toString).filter(_.endsWith(".parquet"))
         .count(f => spark.read.parquet(f).filter(pred).limit(1).count() > 0)
     // a quarter-stripe in EACH dimension skips files — impossible for
@@ -227,7 +227,7 @@ class LayoutExpressionsSpec extends SparkSpec {
     def fragment(path: String): Unit =
       events.repartition(16).write.mode("overwrite").parquet(path)
     def parquetFiles(dir: String): Seq[String] =
-      Files.list(Paths.get(dir)).iterator().asScala
+      Files.list(Paths.get(Generations.resolve(spark, dir))).iterator().asScala
         .map(_.toString).filter(_.endsWith(".parquet")).toSeq
     def filesHitting(dir: String, pred: Column): Int =
       parquetFiles(dir)
@@ -242,7 +242,7 @@ class LayoutExpressionsSpec extends SparkSpec {
     assert(after <= 8 && after < before, s"compaction must fold: $before -> $after")
 
     // content-exact through the rewrite (full table, row-level)
-    val got = spark.read.parquet(zDir)
+    val got = Generations.read(spark, zDir)
       .orderBy($"event_id").collect().map(_.toSeq).toSeq
     val want = events.orderBy($"event_id").collect().map(_.toSeq).toSeq
     assert(got == want, "z-order compaction changed table content")

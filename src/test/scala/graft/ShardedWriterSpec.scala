@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.ShardedWriter
+import graft.operators.{CompactionCrash, Generations, ShardedWriter}
 
 /** The balanced-shard sink contract: bounded file sizes, key-disjoint
   * clustered shards (the zone-map property), lossless round-trip.
@@ -69,14 +69,17 @@ class ShardedWriterSpec extends SparkSpec {
       spark, dir, org.apache.spark.sql.functions.col("id"), 250L)
     assert(before == beforeFiles.size)
     assert(after <= 5, s"$after files after compaction") // 1000/250 + straddle slack
-    // no staging/retired residue; contents identical
-    assert(!new java.io.File(dir + ".compact").exists)
-    assert(!new java.io.File(dir + ".pre-compact").exists)
-    val back = spark.read.parquet(dir)
+    // the rows moved into the committed generation; the flat files are
+    // swept, so a read that skips the resolver finds no part file
+    val current = Generations.resolve(spark, dir)
+    assert(current != dir && parquetFiles(dir).isEmpty)
+    assert(parquetFiles(current).size == after)
+    // contents identical
+    val back = Generations.read(spark, dir)
     assert(back.count() == 1000L)
     assert(back.as[(Long, String)].collect().toSet == all.toSet)
     // compaction restored the clustered layout: disjoint sorted id spans
-    val spans = parquetFiles(dir).map { f =>
+    val spans = parquetFiles(current).map { f =>
       val ids = spark.read.parquet(f).select("id").collect().map(_.getLong(0)).toSeq
       assert(ids == ids.sorted)
       (ids.min, ids.max)
@@ -87,72 +90,67 @@ class ShardedWriterSpec extends SparkSpec {
     }
   }
 
-  test("compaction recovers from a prior crash's staging/retired residue") {
+  test("a crash before the commit: the uncommitted generation never serves and is swept") {
     import spark.implicits._
     val dir = tmpDir("compactcrash") + "/data"
     (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
       .repartition(4).write.parquet(dir)
-    // a previous run died mid-flight: stale staging AND retired copies
-    (1 to 10).map(i => (-i.toLong, "stale")).toDF("id", "payload")
-      .write.parquet(dir + ".compact")
-    Files.createDirectories(Paths.get(dir + ".pre-compact"))
-    Files.write(Paths.get(dir + ".pre-compact", "junk"), Array[Byte](1))
+    // a previous run died after writing its generation, before the marker
+    intercept[IllegalStateException] {
+      Generations.publish(spark, dir) { gen =>
+        (1 to 10).map(i => (-i.toLong, "stale")).toDF("id", "payload").write.parquet(gen)
+        throw new IllegalStateException("crash before the commit")
+      }
+    }
+    def ids = Generations.read(spark, dir).select("id").as[Long].collect().toSeq.sorted
+    assert(Generations.resolve(spark, dir) == dir && ids == (1 to 100).map(_.toLong))
 
     val (before, after) = ShardedWriter.compactParquet(
       spark, dir, org.apache.spark.sql.functions.col("id"), 50L)
     assert(before >= 4 && after <= 3)
-    assert(!new java.io.File(dir + ".compact").exists)
-    assert(!new java.io.File(dir + ".pre-compact").exists)
-    val ids = spark.read.parquet(dir).select("id").as[Long].collect().toSet
-    assert(ids == (1 to 100).map(_.toLong).toSet, "stale staging rows must never publish")
+    assert(ids == (1 to 100).map(_.toLong), "stale generation rows must never publish")
+    assert(Files.list(Paths.get(dir)).iterator().asScala
+      .count(!_.getFileName.toString.endsWith(".crc")) == 2,
+      "the committed generation and its marker are all that remain")
   }
 
-  test("compaction recovers an interrupted publish (dir absent, .pre-compact holds the data)") {
+  test("a crash after the commit: readers see the new generation only; the next compaction sweeps the old files") {
     import spark.implicits._
     val dir = tmpDir("compactmid") + "/data"
     (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "payload")
       .repartition(4).write.parquet(dir)
-    // simulate a crash BETWEEN the two publish renames: the table dir is
-    // gone, the retired copy holds the only data (plus stale staging)
-    Files.move(Paths.get(dir), Paths.get(dir + ".pre-compact"))
-    (1 to 10).map(i => (-i.toLong, "stale")).toDF("id", "payload")
-      .write.parquet(dir + ".compact")
-    assert(!new java.io.File(dir).exists)
+    val key = org.apache.spark.sql.functions.col("id")
+    CompactionCrash.run(spark, dir, Seq(dir), tmpDir("compactmidx"),
+      CompactionCrash.BeforeSweep)(ShardedWriter.compactParquet(spark, dir, key, 50L): Unit)
+    // the replaced flat files are still there, and no reader counts them
+    assert(parquetFiles(dir).size >= 4)
+    def ids = Generations.read(spark, dir).select("id").as[Long].collect().toSeq.sorted
+    assert(ids == (1 to 100).map(_.toLong))
 
-    val (before, after) = ShardedWriter.compactParquet(
-      spark, dir, org.apache.spark.sql.functions.col("id"), 50L)
-    // the retired copy was restored (4 files) and then compacted
-    assert(before >= 4 && after <= 3, s"($before, $after)")
-    assert(!new java.io.File(dir + ".compact").exists)
-    assert(!new java.io.File(dir + ".pre-compact").exists)
-    val ids = spark.read.parquet(dir).select("id").as[Long].collect().toSet
-    assert(ids == (1 to 100).map(_.toLong).toSet,
-      "recovery must republish the retired data, never the stale staging")
+    val (before, after) = ShardedWriter.compactParquet(spark, dir, key, 50L)
+    assert(before <= 3 && after <= 3, s"($before, $after)")
+    assert(parquetFiles(dir).isEmpty, "the replaced flat files were not swept")
+    assert(ids == (1 to 100).map(_.toLong))
   }
 
-  test("compaction after an interrupted publish: rows appended meanwhile join the retired rows; a stale retired copy is not re-added") {
+  test("an append after either crash lands in the serving generation and survives the next compaction") {
     import spark.implicits._
     val key = org.apache.spark.sql.functions.col("id")
     def rows(r: Range) = r.map(i => (i.toLong, s"v$i")).toDF("id", "payload")
-    def ids(dir: String) = spark.read.parquet(dir).select("id").as[Long].collect().toSeq
-    // crash between the renames, then an append recreates the dir
-    val dir = tmpDir("compactappend") + "/data"
-    rows(1 to 100).repartition(4).write.parquet(dir)
-    Files.move(Paths.get(dir), Paths.get(dir + ".pre-compact"))
-    rows(1 to 100).write.parquet(dir + ".compact")
-    rows(101 to 120).write.mode("append").parquet(dir)
-    ShardedWriter.compactParquet(spark, dir, key, 50L)
-    assert(ids(dir).sorted == (1 to 120).map(_.toLong),
-      "the rows parked in .pre-compact must survive an append before the next compaction")
-    assert(!new java.io.File(dir + ".pre-compact").exists)
-    // crash after the publish: the retired copy still holds the same rows
-    val pk = tmpDir("compactstale") + "/data"
-    rows(1 to 100).repartition(4).write.parquet(pk)
-    ShardedWriter.compactParquet(spark, pk, key, 50L)
-    rows(1 to 100).write.parquet(pk + ".pre-compact")
-    ShardedWriter.compactParquet(spark, pk, key, 50L)
-    assert(ids(pk).sorted == (1 to 100).map(_.toLong),
-      "a retired copy left after a completed publish must not be folded back in")
+    def ids(dir: String) = Generations.read(spark, dir).select("id").as[Long].collect().toSeq
+    for (at <- Seq(CompactionCrash.BeforeCommit, CompactionCrash.BeforeSweep)) {
+      val dir = tmpDir("compactappend") + "/data"
+      rows(1 to 100).repartition(4).write.parquet(dir)
+      // compacted once, so the crash lands between two generations
+      ShardedWriter.compactParquet(spark, dir, key, 50L)
+      CompactionCrash.run(spark, dir, Seq(dir), tmpDir("compactappendx"), at)(
+        ShardedWriter.compactParquet(spark, dir, key, 50L): Unit)
+      rows(101 to 120).write.mode("append").parquet(Generations.resolve(spark, dir))
+      assert(ids(dir).sorted == (1 to 120).map(_.toLong), s"after $at and an append")
+      ShardedWriter.compactParquet(spark, dir, key, 50L)
+      assert(ids(dir).sorted == (1 to 120).map(_.toLong),
+        s"rows appended after $at must survive the next compaction, once each")
+    }
   }
 
   test("compaction no-ops on an absent or part-file-free directory") {

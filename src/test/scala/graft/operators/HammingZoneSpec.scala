@@ -54,10 +54,10 @@ class HammingZoneSpec extends SparkSpec {
     assert(got(z2) == expected, "replayed append changed the result")
 
     // posture 4: OPTIMIZE folds the replay duplicates, result-invisible
-    val rows = spark.read.parquet(s"$z2/rows").count()
+    val rows = Generations.read(spark, s"$z2/rows").count()
     val (fb, fa) = HammingZone.optimize(spark, z2)
     assert(fa <= fb && fa > 0)
-    assert(spark.read.parquet(s"$z2/rows").count() < rows,
+    assert(Generations.read(spark, s"$z2/rows").count() < rows,
       "optimize failed to fold replayed duplicate chunk rows")
     assert(got(z2) == expected, "optimize changed the result")
 

@@ -86,7 +86,7 @@ class IvfIndexZoneSpec extends SparkSpec {
     val before = hits(zone, nprobe = 2)
     IvfIndexZone.append(emb, zone) // a full replay
     val n = emb.count()
-    assert(spark.read.parquet(s"$zone/lists").count() == 2 * n)
+    assert(Generations.read(spark, s"$zone/lists").count() == 2 * n)
     assert(hits(zone, nprobe = 2) == before,
       "replayed duplicate list rows changed the topK result")
     // target n/4 rows per file → a handful of cid-disjoint shards (the
@@ -94,7 +94,7 @@ class IvfIndexZoneSpec extends SparkSpec {
     // fa <= fb is the storm-folding contract, pinned for AnnIndexZone)
     val (_, fa) = IvfIndexZone.optimize(spark, zone, math.max(1L, n / 4))
     assert(fa > 1, s"optimize produced $fa files — need >1 to observe skipping")
-    assert(spark.read.parquet(s"$zone/lists").count() == n,
+    assert(Generations.read(spark, s"$zone/lists").count() == n,
       "optimize left replayed duplicate (vec_id, cid) rows")
     assert(hits(zone, nprobe = 2) == before,
       "cid-clustered rewrite changed the topK result")
@@ -121,7 +121,7 @@ class IvfIndexZoneSpec extends SparkSpec {
     IvfIndexZone.optimize(spark, zone): Unit
     assert(!graft.core.Fs.exists(spark, s"$zone/tombstones"),
       "quiescent optimize should clear the tombstone list")
-    assert(spark.read.parquet(s"$zone/lists")
+    assert(Generations.read(spark, s"$zone/lists")
       .filter(col("vec_id") === victim).count() == 0,
       "tombstone was not folded out of the lists")
     assert(hits(zone, nprobe = 8) == after)

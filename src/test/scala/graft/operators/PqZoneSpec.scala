@@ -146,12 +146,12 @@ class PqZoneSpec extends SparkSpec {
     val before = adcRows(zone)
     PqZone.append(emb, zone) // a full replay
     val n = emb.count()
-    assert(spark.read.parquet(s"$zone/codes").count() == 2 * n)
+    assert(Generations.read(spark, s"$zone/codes").count() == 2 * n)
     assert(adcRows(zone) == before,
       "replayed duplicate code rows changed the ADC result")
     val (_, fa) = PqZone.optimize(spark, zone, math.max(1L, n / 4))
     assert(fa > 0)
-    assert(spark.read.parquet(s"$zone/codes").count() == n,
+    assert(Generations.read(spark, s"$zone/codes").count() == n,
       "optimize left replayed duplicate code rows")
     assert(adcRows(zone) == before)
     val victim = before.filter(_._1 == 0L)(1)._2
@@ -160,7 +160,7 @@ class PqZoneSpec extends SparkSpec {
       "tombstoned vector still scored")
     PqZone.optimize(spark, zone): Unit
     assert(!graft.core.Fs.exists(spark, s"$zone/tombstones"))
-    assert(spark.read.parquet(s"$zone/codes")
+    assert(Generations.read(spark, s"$zone/codes")
       .filter(col("vec_id") === victim).count() == 0)
     graft.core.Caches.release()
   }

@@ -67,10 +67,10 @@ class SignatureZoneSpec extends SparkSpec {
 
     // posture 5: OPTIMIZE folds z2's replay duplicates and file storm,
     // result-invisible
-    val rows = spark.read.parquet(s"$z2/bands").count()
+    val rows = Generations.read(spark, s"$z2/bands").count()
     val (fb, fa) = SignatureZone.optimize(spark, z2)
     assert(fa <= fb && fa > 0, s"optimize produced $fa of $fb files")
-    assert(spark.read.parquet(s"$z2/bands").count() < rows,
+    assert(Generations.read(spark, s"$z2/bands").count() < rows,
       "optimize failed to fold the replayed duplicate band rows")
     assert(got(z2) == expected, "optimize changed the result")
 
@@ -116,10 +116,10 @@ class SignatureZoneSpec extends SparkSpec {
       // (a) band-table equivalence vs a fresh batch build through k
       val batchZone = tmpDir(s"c9zoneinv-batch$k") + "/z"
       SignatureZone.build(spark, through, batchZone)
-      val looped = spark.read.parquet(s"$sig/bands")
+      val looped = Generations.read(spark, s"$sig/bands")
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
         .toSeq.sorted
-      val batch = spark.read.parquet(s"$batchZone/bands")
+      val batch = Generations.read(spark, s"$batchZone/bands")
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
         .toSeq.sorted
       assert(looped == batch, s"band table diverged from batch build after round $k")
@@ -139,7 +139,7 @@ class SignatureZoneSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     val (mb, ma) = Dedup.optimizeMd5Zone(spark, md5Zone)
     assert(ma <= mb && ma > 0, s"md5 optimize produced $ma of $mb files")
-    val after = spark.read.parquet(md5Zone)
+    val after = Generations.read(spark, md5Zone)
       .groupBy(col("text_md5")).agg(min(col("keeper_id")).as("keeper_id"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
     assert(after == before, "md5 optimize changed the min-aggregated read")
@@ -276,10 +276,10 @@ class SignatureZoneSpec extends SparkSpec {
     assert(!graft.core.Fs.exists(spark, md5Zone + ".tombstones"))
     assert(!graft.core.Fs.exists(spark, s"$sigZone/tombstones"))
     assert(fate() == (("kept", null)), "compaction moved the fate")
-    assert(spark.read.parquet(md5Zone)
+    assert(Generations.read(spark, md5Zone)
       .filter(col("keeper_id").isin(5L, 7L)).count() == 0,
       "compaction left dead md5 rows")
-    assert(spark.read.parquet(s"$sigZone/bands")
+    assert(Generations.read(spark, s"$sigZone/bands")
       .filter(col("doc_id").isin(5L, 7L)).count() == 0,
       "compaction left dead band rows")
   }

@@ -173,7 +173,7 @@ class SimilaritySpec extends SparkSpec {
       "tombstoned vector still produces candidates")
     assert(AnnIndexZone.optimize(spark, z1)._2 > 0)
     assert(!graft.core.Fs.exists(spark, s"$z1/tombstones"))
-    assert(spark.read.parquet(s"$z1/index")
+    assert(Generations.read(spark, s"$z1/index")
       .filter(col("vec_id") === dead).count() == 0,
       "compaction left dead index rows")
     assert(got(z1) == afterDelete, "compaction moved the pair set")
@@ -206,7 +206,7 @@ class SimilaritySpec extends SparkSpec {
     // and the probe now opens a strict subset of the index files
     AnnIndexZone.optimize(spark, zone2, targetRowsPerFile = math.max(1L, n / 8))
     assert(got(zone2) == expected, "optimize changed the probe result")
-    val total = spark.read.parquet(s"$zone2/index").inputFiles.length
+    val total = Generations.read(spark, s"$zone2/index").inputFiles.length
     val (planes, dims) = AnnIndexZone.meta(spark, zone2)
     val qb = query.select(Similarity.srpBucket(col("qvec"), planes, dims).as("qb"))
       .head().getLong(0)

@@ -39,7 +39,7 @@ class ZoneMaintenanceSpec extends SparkSpec {
     assert(fa <= fb && fa > 0)
     assert(!graft.core.Fs.exists(spark, s"$z/tombstones"),
       "quiescent optimize should clear the tombstone dir entirely")
-    assert(spark.read.parquet(s"$z/bands")
+    assert(Generations.read(spark, s"$z/bands")
       .filter(col("doc_id") === 2L).count() == 0,
       "the surviving tombstone was not folded by the next optimize")
   }
@@ -222,13 +222,13 @@ class ZoneMaintenanceSpec extends SparkSpec {
     AnnIndexZone.build(spark, emb, z): Unit
     AnnIndexZone.appendIndex(emb, z) // a full replay
     val n = emb.count()
-    assert(spark.read.parquet(s"$z/index").count() == 2 * n)
+    assert(Generations.read(spark, s"$z/index").count() == 2 * n)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
     val before = AnnIndexZone.topK(emb, q, z, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val (fb, fa) = AnnIndexZone.optimize(spark, z)
     assert(fa <= fb && fa > 0)
-    assert(spark.read.parquet(s"$z/index").count() == n,
+    assert(Generations.read(spark, s"$z/index").count() == n,
       "optimize left replayed duplicate (vec_id, bucket) rows in the index")
     val after = AnnIndexZone.topK(emb, q, z, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

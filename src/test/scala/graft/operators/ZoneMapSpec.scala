@@ -140,7 +140,7 @@ class ZoneMapSpec extends SparkSpec {
     events.repartition(8).write.parquet(data)
     ShardedWriter.compactZorder2(spark, data, "user_id", "sec",
       math.max(1L, (n + 15) / 16))
-    val total = spark.read.parquet(data).inputFiles.length
+    val total = Generations.read(spark, data).inputFiles.length
     assert(total >= 8, s"want a multi-file layout, got $total")
     val stats = tmpDir("zmzstats") + "/s"
     ZoneMap.buildStats(spark, data, stats, Seq("user_id", "sec"))
@@ -157,7 +157,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(byUser.inputFiles.length < total, "user-only box did not skip")
     assert(byTime.inputFiles.length < total, "time-only box did not skip")
     // no rows lost vs the unpruned read
-    val want = spark.read.parquet(data)
+    val want = Generations.read(spark, data)
       .filter(col("user_id").between(3, 6) &&
         col("sec").between(1704844800L, 1705017599L)).count()
     val got = pruned

@@ -108,11 +108,48 @@ class ZoneRebuildSpec extends SparkSpec {
     // the old zone (with the raced append) is intact and serving, and
     // the staging copy survives for a retried rebuild to replace
     assert(graft.core.Fs.exists(spark, staging))
-    assert(spark.read.parquet(s"$z/bands").count() >
-      spark.read.parquet(s"$staging/bands").count(),
+    assert(Generations.read(spark, s"$z/bands").count() >
+      Generations.read(spark, s"$staging/bands").count(),
       "the raced append is missing from the old zone")
     assert(pairsOf(z, delta).toSet.subsetOf(before.toSet) ||
       before.toSet.subsetOf(pairsOf(z, delta).toSet))
+    graft.core.Caches.release()
+  }
+
+  test("a create or an append after a crash between the cutover renames restores the retired zone") {
+    val d = docs
+    val cut = d.count() * 4L / 5L
+    val hist = d.filter(col("doc_id") < cut)
+    val delta = d.filter(col("doc_id") >= cut)
+    def crash(zone: String): Unit = {
+      val (fs, p) = graft.core.Fs.resolve(spark, zone)
+      require(fs.rename(p, new org.apache.hadoop.fs.Path(zone + ".retired")))
+    }
+    def restored(zone: String): Boolean =
+      graft.core.Fs.exists(spark, zone) && !graft.core.Fs.exists(spark, zone + ".retired")
+    val z = tmpDir("retiredwindow") + "/z"
+    SignatureZone.build(spark, hist, z, shingleN = 3, k = 16, bands = 4)
+    val rows = SignatureZone.zone(z).liveRows(spark).map(_.count())
+    val before = pairsOf(z, delta)
+    // a same-geometry create must not recreate the zone empty beside
+    // the retired copy (the next rebuild would then drop that copy)
+    crash(z)
+    SignatureZone.create(spark, z, shingleN = 3, k = 16, bands = 4)
+    assert(restored(z), "create left the retired zone retired")
+    assert(SignatureZone.zone(z).liveRows(spark).map(_.count()) == rows)
+    assert(pairsOf(z, delta) == before, "the restored zone answers differently")
+    // a zone append restores it before it reads the zone's meta
+    crash(z)
+    SignatureZone.append(delta.limit(1), z)
+    assert(restored(z) && SignatureZone.zone(z).liveRows(spark).map(_.count()).exists(_ > rows.get))
+    // the md5 keeper zone has no meta: an append would recreate it
+    val m = tmpDir("retiredmd5") + "/md5"
+    Dedup.md5ZoneAppend(hist, col("text"), col("doc_id"), m)
+    val n = Dedup.md5ZoneRead(spark, m).count()
+    crash(m)
+    Dedup.md5ZoneAppend(delta, col("text"), col("doc_id"), m)
+    assert(restored(m) && Dedup.md5ZoneRead(spark, m).count() == n + delta.count(),
+      "the md5 append lost the retired keeper rows")
     graft.core.Caches.release()
   }
 

@@ -109,10 +109,8 @@ class EventStreamSpec extends SparkSpec {
         }
         .toSeq.sortBy(_._1)
       assert(got.toSeq == expected)
-      // Listener delivery is async: give the progress events a deadline.
-      val deadline = System.nanoTime() + 15L * 1000000000L
-      while (!metricKeys.asScala.exists(_.startsWith("rocksdb")) &&
-        System.nanoTime() < deadline) Thread.sleep(100)
+      // Listener delivery is async: wait for the progress events.
+      ProgressWait(spark)(_.until(15)(metricKeys.asScala.exists(_.startsWith("rocksdb"))))
       assert(metricKeys.asScala.exists(_.startsWith("rocksdb")),
         s"no rocksdb state-store metrics observed; saw: ${metricKeys.asScala.take(10)}")
     } finally spark.streams.removeListener(listener)
@@ -174,11 +172,7 @@ class EventStreamSpec extends SparkSpec {
     }
     try {
       def dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (dataBatches < 2 && System.nanoTime() < deadline) {
-        q.exception.foreach(throw _)
-        Thread.sleep(100)
-      }
+      ProgressWait(spark)(_.until(60) { q.exception.foreach(throw _); dataBatches >= 2 })
       assert(dataBatches >= 2, "two data batches did not commit in time")
     } finally q.stop()
     // Snapshots: one per batch. With live state the second would read
@@ -288,12 +282,8 @@ class EventStreamSpec extends SparkSpec {
         .start()
     }
     def awaitDataBatches(q: org.apache.spark.sql.streaming.StreamingQuery, n: Int): Int = {
-      val deadline = System.nanoTime() + 120L * 1000000000L
       def count = q.recentProgress.count(_.numInputRows > 0)
-      while (count < n && System.nanoTime() < deadline) {
-        q.exception.foreach(throw _)
-        Thread.sleep(50)
-      }
+      ProgressWait(spark)(_.until(120) { q.exception.foreach(throw _); count >= n })
       count
     }
     // Run 1: KILL after the first data batch commits (mid-stream stop —
@@ -318,13 +308,12 @@ class EventStreamSpec extends SparkSpec {
     // last snapshot must restore run 1's state so the folds CONTINUE
     // (n keeps counting from the recovered state, never restarts at 1).
     val q2 = start()
-    try assert(awaitDataBatches(q2, 1) >= 1 && {
-      val deadline = System.nanoTime() + 120L * 1000000000L
-      def done = spark.read.parquet(out)
-        .filter(col("user_id") === 1L).agg(max(col("n_events"))).head().getLong(0) == 3L
-      while (!done && System.nanoTime() < deadline) { q2.exception.foreach(throw _); Thread.sleep(100) }
-      done
-    }) finally q2.stop()
+    try assert(awaitDataBatches(q2, 1) >= 1 &&
+      ProgressWait(spark)(_.until(120) {
+        q2.exception.foreach(throw _)
+        spark.read.parquet(out)
+          .filter(col("user_id") === 1L).agg(max(col("n_events"))).head().getLong(0) == 3L
+      })) finally q2.stop()
     // Compact the snapshot log exactly like st3/st10 and compare to truth.
     val got = spark.read.parquet(out)
       .groupBy(col("user_id"))

@@ -57,19 +57,12 @@ class ProcessingTimeTriggerSpec extends SparkSpec {
       q.processAllAvailable()
 
       // Watermark advance + eviction happen in the FOLLOWING (possibly
-      // no-data) micro-batch — poll for it instead of assuming timing.
-      // A loaded host can delay the no-data batch well past the trigger
-      // cadence, so the deadline is generous and the loop re-drains the
-      // query each pass (processAllAvailable is a cheap no-op when idle
-      // but guarantees any pending batch's progress record has landed
-      // before the next poll — the deterministic part of the wait).
+      // no-data) micro-batch — wait for its progress event instead of
+      // assuming timing. A loaded host can delay the no-data batch well
+      // past the trigger cadence, so the deadline is generous.
       def stateRows: Option[Long] =
         Option(q.lastProgress).flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
-      val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
-      while (stateRows.forall(_ > 1) && System.nanoTime() < deadline) {
-        Thread.sleep(250)
-        q.processAllAvailable()
-      }
+      ProgressWait(spark)(_.until(90)(stateRows.exists(_ <= 1)))
 
       // Watermark advanced across real micro-batches: past file A's
       // window end (2024-01-01 06:00), to file B's max event time - 1h.

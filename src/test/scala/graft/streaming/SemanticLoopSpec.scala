@@ -48,7 +48,7 @@ class SemanticLoopSpec extends SparkSpec {
 
     // signature zone ≡ band rows over the live corpus (OPTIMIZE already
     // folded replays and tombstones, so the stored set is exact)
-    val zoneBands = spark.read.parquet(root.resolve("sig").toString + "/bands")
+    val zoneBands = graft.operators.Generations.read(spark, root.resolve("sig").toString + "/bands")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val batchBands = Dedup.bandRows(
         Dedup.minhash(
@@ -61,7 +61,7 @@ class SemanticLoopSpec extends SparkSpec {
     // fixed plane count
     Similarity.ensure(spark)
     val (planes, dims) = AnnIndexZone.meta(spark, root.resolve("ann").toString)
-    val zoneIndex = spark.read.parquet(root.resolve("ann").toString + "/index")
+    val zoneIndex = graft.operators.Generations.read(spark, root.resolve("ann").toString + "/index")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batchIndex = emb
       .join(live.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
