@@ -7,14 +7,14 @@ import java.nio.file.{Files, Path, Paths}
   * DataFrames read lazily from scratch, so the dirs can't be deleted when
   * the query function returns — they are removed at JVM exit instead,
   * which keeps repeated Bench/Verify sessions from accumulating staged
-  * copies on disk. (Streaming scratch in `graft.streaming.EventStream`
-  * has its own eager reaper because checkpoints CAN be deleted as soon as
-  * the query finishes.)
+  * copies on disk. A dir whose contents are dead before then (a streaming
+  * query's checkpoints and sinks once its answer is materialized, a
+  * superseded staged source) is removed eagerly with [[reap]].
   *
-  * Scratch prefers RAM-backed storage (/dev/shm) when available — the
-  * same election EventStream's checkpoint scratch made in round 13:
-  * staged zones are many small parquet files, and on a disk-backed /tmp
-  * their write+probe latency rides the host's noisy-neighbor disk queue
+  * Scratch prefers RAM-backed storage (/dev/shm) when available:
+  * streaming state-store and offset-log fsyncs, and staged zones of many
+  * small parquet files, on a disk-backed /tmp ride the host's
+  * noisy-neighbor disk queue
   * (the round-16 cross-window audit measured 2-4× swings on exactly the
   * zone-staging entries while CPU-bound entries stayed flat). On a real
   * cluster this is "put shuffle/scratch on local NVMe, not on the shared
@@ -48,6 +48,13 @@ object Scratch {
     * unclean paths).
     */
   def sparkLocalDir(): String = dir("spark_local")
+
+  /** Delete a [[dir]] now and drop it from the JVM-exit list. */
+  def reap(dir: String): Unit = {
+    val p = Paths.get(dir)
+    deleteTree(p)
+    dirs.synchronized { dirs -= p }: Unit
+  }
 
   private def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {

@@ -108,6 +108,10 @@ object AnnIndexZone {
     */
   def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
+  /** Whether the zone stores tombstone rows ([[Zone.tombstoned]]). */
+  def tombstoned(spark: SparkSession, zoneDir: String): Boolean =
+    zone(zoneDir).tombstoned(spark)
+
   /** OPTIMIZE the index zone ([[Zone.optimize]]): the index is rewritten
     * bucket-clustered (each file then covers a tight, disjoint bucket
     * span) and per-file bucket min/max stats are persisted. After this,

@@ -50,6 +50,10 @@ object Dedup {
   /** Record document deletions against an md5 zone ([[Zone.delete]]). */
   def md5ZoneDelete(ids: DataFrame, dir: String): Unit = md5Zone(dir).delete(ids)
 
+  /** Whether an md5 zone stores tombstone rows ([[Zone.tombstoned]]). */
+  def md5ZoneTombstoned(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
+    md5Zone(dir).tombstoned(spark)
+
   /** The zone's live rows ([[Zone.liveRows]]): stored rows minus
     * tombstoned documents.
     */

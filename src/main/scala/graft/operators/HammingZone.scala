@@ -122,6 +122,10 @@ object HammingZone {
     */
   def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
+  /** Whether the zone stores tombstone rows ([[Zone.tombstoned]]). */
+  def tombstoned(spark: SparkSession, zoneDir: String): Boolean =
+    zone(zoneDir).tombstoned(spark)
+
   /** OPTIMIZE ([[Zone.optimize]]), rewritten chunk-value-clustered.
     * Returns (filesBefore, filesAfter).
     */

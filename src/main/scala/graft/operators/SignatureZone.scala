@@ -185,6 +185,10 @@ object SignatureZone {
     */
   def delete(ids: DataFrame, zoneDir: String): Unit = zone(zoneDir).delete(ids)
 
+  /** Whether the zone stores tombstone rows ([[Zone.tombstoned]]). */
+  def tombstoned(spark: SparkSession, zoneDir: String): Boolean =
+    zone(zoneDir).tombstoned(spark)
+
   /** OPTIMIZE the band zone ([[Zone.optimize]]): replay duplicates and
     * tombstones folded, the per-batch file storm compacted into
     * bh-clustered shards — the maintenance pass a deployment schedules

@@ -104,11 +104,14 @@ private[operators] final case class Zone(kind: String, dir: String,
     ids.select(col(tombstoneId)).write
       .mode(SaveMode.Append).parquet(tombstonesDir)
 
+  /** Whether any tombstone rows are stored (a listing, no job). */
+  def tombstoned(spark: SparkSession): Boolean = Fs.hasParquetFiles(spark, tombstonesDir)
+
   /** `rows` minus tombstoned ids, then `id < below` when a cut is given. */
   def live(rows: DataFrame, below: Option[Long] = None): DataFrame = {
     val spark = rows.sparkSession
     val alive =
-      if (!Fs.hasParquetFiles(spark, tombstonesDir)) rows
+      if (!tombstoned(spark)) rows
       else rows.join(
         spark.read.parquet(tombstonesDir)
           .select(if (tombstoneId == id) col(id) else col(tombstoneId).as(id))

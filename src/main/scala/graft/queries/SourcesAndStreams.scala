@@ -5,7 +5,7 @@ import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{StagedLayouts, Tables}
 import graft.streaming.EventStream
 
 /** Source round-trips (SURVEY §2.1 S5/S6: schema-first JSON and CSV
@@ -20,24 +20,16 @@ object SourcesAndStreams {
   private def scratch(prefix: String): String =
     graft.core.Scratch.dir(prefix) + "/data"
 
-  /** Session-lifetime staged layouts — see [[graft.core.StagedLayouts]]
-    * (shared with Relational's q64 edge table; session-identity-keyed
-    * so a fresh session re-stages its own catalog tables).
-    */
-  private def stageOnce(spark: SparkSession, key: String)(
-      build: () => String): String =
-    graft.core.StagedLayouts.once(spark, key)(build)
-
   /** S5: raw-zone JSON with explicit schema (multiLine-less JSON lines,
     * schema-on-read — no inference in prod paths). The JSON copy is a
-    * session-lifetime staged layout ([[stageOnce]] — the raw zone a
+    * session-lifetime staged layout ([[graft.core.StagedLayouts]] — the raw zone a
     * production pipeline reads already exists; the WRITER surface is K1,
     * covered by Lake + c1): the timed query is the schema-first read.
     */
   def s5JsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"), col("l_shipdate"))
-    val path = stageOnce(spark, s"s5json:$dir") { () =>
+    val path = StagedLayouts.once(spark, s"s5json:$dir") { () =>
       val p = scratch("s5json")
       src.write.mode(SaveMode.Overwrite).json(p)
       p
@@ -59,7 +51,7 @@ object SourcesAndStreams {
     val src = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"))
     // staged once per session — see s5JsonRoundtrip
-    val path = stageOnce(spark, s"s6csv:$dir") { () =>
+    val path = StagedLayouts.once(spark, s"s6csv:$dir") { () =>
       val p = scratch("s6csv")
       src.write.mode(SaveMode.Overwrite).option("header", "true").csv(p)
       p
@@ -81,7 +73,7 @@ object SourcesAndStreams {
     val src = Tables(spark, dir, "part")
       .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_retailprice"))
     // staged once per session — see s5JsonRoundtrip
-    val path = stageOnce(spark, s"s9orc:$dir") { () =>
+    val path = StagedLayouts.once(spark, s"s9orc:$dir") { () =>
       val p = scratch("s9orc")
       src.write.mode(SaveMode.Overwrite).orc(p)
       p
@@ -106,7 +98,7 @@ object SourcesAndStreams {
     val src = Tables(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"), col("c_name"))
     // staged once per session — see s5JsonRoundtrip
-    val path = stageOnce(spark, s"s12xml:$dir") { () =>
+    val path = StagedLayouts.once(spark, s"s12xml:$dir") { () =>
       val p = scratch("s12xml")
       src.write.mode(SaveMode.Overwrite).option("rowTag", "customer").xml(p)
       p
@@ -550,7 +542,7 @@ object SourcesAndStreams {
   private def c4Warehouse(spark: SparkSession): String = {
     import graft.cardano._
     import graft.operators.ZoneMap
-    stageOnce(spark, "c4wh") { () =>
+    StagedLayouts.once(spark, "c4wh") { () =>
       val root = scratch("c4")
       val pipelines = new Pipelines(
         spark,
@@ -632,7 +624,7 @@ object SourcesAndStreams {
     */
   def s10DynamicPartitionPruning(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = stageOnce(spark, s"s10dpp|$dir") { () =>
+    val path = StagedLayouts.once(spark, s"s10dpp|$dir") { () =>
       val p = scratch("s10dpp")
       Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -644,7 +636,7 @@ object SourcesAndStreams {
     // filter on a non-key attribute — DPP keys off a selective predicate
     // in the build side's plan; an inline LocalRelation folds the filter
     // away and no pruning subquery is planned.
-    val dimPath = stageOnce(spark, s"s10dim|$dir") { () =>
+    val dimPath = StagedLayouts.once(spark, s"s10dim|$dir") { () =>
       val p = scratch("s10dim")
       Tables.eventCategories.toDF("event_type", "category")
         .write.mode(SaveMode.Overwrite).parquet(p)
@@ -671,7 +663,7 @@ object SourcesAndStreams {
     * warehouse and vanish with the JVM.
     */
   def s11BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = stageOnce(spark, s"s11|$dir") { () =>
+    val tag = StagedLayouts.once(spark, s"s11|$dir") { () =>
       val t = UUID.randomUUID().toString.replace("-", "").take(10)
       Tables(spark, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
         .write.format("parquet").bucketBy(8, "o_custkey").saveAsTable(s"s11_orders_$t")
@@ -696,7 +688,7 @@ object SourcesAndStreams {
     */
   private def compactedEventsCopy(spark: SparkSession, dir: String, key: String)(
       compact: (String, Long) => (Int, Int)): String =
-    stageOnce(spark, s"$key:$dir") { () =>
+    StagedLayouts.once(spark, s"$key:$dir") { () =>
       val p = scratch(key)
       val events = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
@@ -786,7 +778,7 @@ object SourcesAndStreams {
     */
   def s13ZonemapSkip(spark: SparkSession, dir: String): DataFrame = {
     val path = zorderedEventsCopy(spark, dir)
-    val statsDir = stageOnce(spark, s"s13stats:$dir") { () =>
+    val statsDir = StagedLayouts.once(spark, s"s13stats:$dir") { () =>
       val sp = scratch("s13stats")
       graft.operators.ZoneMap.buildStats(spark, path, sp, Seq("user_id", "sec"))
       sp
@@ -817,7 +809,7 @@ object SourcesAndStreams {
     * opening a million files.
     */
   def s14BloomSkip(spark: SparkSession, dir: String): DataFrame = {
-    val frag = stageOnce(spark, s"s14frag:$dir") { () =>
+    val frag = StagedLayouts.once(spark, s"s14frag:$dir") { () =>
       val p = scratch("s14frag")
       Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -826,7 +818,7 @@ object SourcesAndStreams {
         .write.mode(SaveMode.Overwrite).parquet(p)
       p
     }
-    val bloomDir = stageOnce(spark, s"s14bloom:$dir") { () =>
+    val bloomDir = StagedLayouts.once(spark, s"s14bloom:$dir") { () =>
       val bp = scratch("s14bloom")
       val n = spark.read.parquet(frag).count()
       graft.operators.ZoneMap.buildBlooms(

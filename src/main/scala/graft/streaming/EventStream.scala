@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Par
+import graft.core.{Par, Scratch}
+import graft.queries.{AdmissionZones, TrainingData}
 
 /** Structured Streaming surface (SURVEY §2.5): the reference's
   * watermark-based incremental file pattern (S7+Q2) re-expressed as the
@@ -43,28 +44,17 @@ object EventStream {
   case class SessIn(user_id: Long, ts: java.sql.Timestamp, tsMicros: Long)
   case class SessionState(start: Long, end: Long, n: Long)
 
-  /** Streaming scratch (checkpoints, staged sources) on RAM-backed
-    * storage when available: state-store and offset-log fsyncs on a
-    * disk-backed /tmp dominate micro-benchmark latency.
+  /** A [[graft.core.Scratch]] dir for checkpoints, sinks and staged
+    * sources, also recorded in the running staged-source build (if any)
+    * so the entry can reap it when superseded ([[stageSourceOnce]]).
     */
   private def scratchDir(prefix: String): java.nio.file.Path = {
-    val shm = Paths.get("/dev/shm")
-    val dir =
-      if (Files.isDirectory(shm) && Files.isWritable(shm))
-        Files.createTempDirectory(shm, prefix)
-      else Files.createTempDirectory(prefix)
-    scratchDirs.synchronized { scratchDirs += dir }
+    val dir = Paths.get(Scratch.dir(prefix))
     Option(buildingDirs.get()).foreach(_ += dir)
     dir
   }
 
-  /** Scratch dirs are RAM-backed; without cleanup repeated Bench/Verify
-    * runs accumulate checkpoints and staged copies until /dev/shm fills.
-    * Dirs still referenced by a live in-memory sink are only removed at
-    * JVM exit; finished checkpoints are removed eagerly via [[reap]].
-    */
-  private val scratchDirs = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-  sys.addShutdownHook { scratchDirs.synchronized { scratchDirs.foreach(deleteTree) } }
+  private def reap(p: java.nio.file.Path): Unit = Scratch.reap(p.toString)
 
   /** The scratch scope of one query: run `body` against a fresh scratch
     * root, materialize the frame it returns ONCE (eager
@@ -79,20 +69,6 @@ object EventStream {
     try body(root).localCheckpoint() finally reap(root)
   }
 
-  /** The post-stream OPTIMIZE: every named zone compacts concurrently
-    * ([[graft.core.Par.run]] — zones live in disjoint dirs, so the group
-    * costs its slowest member), then each must have folded: a zone the
-    * stream fed ends with at least one file and no more than it had.
-    */
-  private def optimizeAll(zones: (String, () => (Int, Int))*): Unit = {
-    val res = new Array[(Int, Int)](zones.size)
-    Par.run(zones.indices.map(i => () => res(i) = zones(i)._2()): _*)
-    zones.map(_._1).zip(res).foreach { case (name, (before, after)) =>
-      require(after <= before && after > 0,
-        s"$name optimize produced $after of $before files")
-    }
-  }
-
   /** ONE 1-row aggregation over a CDC micro-batch yielding both batch
     * scalars every loop needs: the crash-replay self-exclusion cut (min
     * insert doc_id; Long.MaxValue when the batch has no inserts) and
@@ -104,10 +80,10 @@ object EventStream {
     * probe: the min-insert agg already ran per batch.
     */
   private def batchCutAndDeletes(batch: DataFrame): (Long, Boolean) = {
-    val r = batch.agg(
-      min(when(col("op") === "I", col("doc_id"))),
-      count(when(col("op") === "D", lit(1)))).head()
-    (if (r.isNullAt(0)) Long.MaxValue else r.getLong(0), r.getLong(1) > 0L)
+    val (cut, r) = TrainingData.selfExclusionCut(batch,
+      when(col("op") === "I", col("doc_id")),
+      Seq(count(when(col("op") === "D", lit(1)))))
+    (cut, r.getLong(1) > 0L)
   }
 
   /** A CDC micro-batch split on `op`: its inserts projected to `cols`,
@@ -117,30 +93,13 @@ object EventStream {
     (batch.filter(col("op") === "I").select(cols.map(col): _*),
       batch.filter(col("op") === "D").select(col("doc_id")))
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(p)
-      // Materialize before closing (same as core.Scratch): an open walk
-      // stream holds a directory handle, which on some filesystems makes
-      // the deletes below fail — and reap() runs once per streaming
-      // query, so a leaked handle per call adds up over a bench session.
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.reverseIterator.foreach(f => Files.deleteIfExists(f))
-    }
-
-  private def reap(p: java.nio.file.Path): Unit = {
-    deleteTree(p)
-    scratchDirs.synchronized { scratchDirs -= p }: Unit
-  }
-
   /** Session-lifetime staged SOURCE directories keyed by (kind, source
     * dir): staging the fixture files a stream reads is SETUP — the
     * production analogue is a lake directory that already exists — so it
     * happens once per JVM, not inside every (timed) query run (the same
     * rule SourcesAndStreams applies to partitioned/bucketed layouts).
     * Checkpoints, state and sinks stay strictly per-run. Staged dirs are
-    * reaped at JVM exit by the scratch shutdown hook.
+    * reaped at JVM exit ([[graft.core.Scratch]]).
     *
     * Entries are keyed by base (kind + source path) and carry the
     * CONTENT FINGERPRINT ([[sourceFingerprint]]) of the files staged,
@@ -1676,48 +1635,6 @@ object EventStream {
     }
   }
 
-  /** The admission zones a curation stream maintains under one root:
-    * the MinHash signature zone `sig` (created with TrainingData's
-    * shared geometry, not a copy — the st20 desync argument), the
-    * exact-md5 keeper zone `md5` and, when `ann` gives the embeddings
-    * and their total, the SRP index zone `ann` (plane count fixed from
-    * the FULL expected corpus at creation — d19's capacity rule, what
-    * the oracles re-derive). Each step yields one op per zone; the dirs
-    * are disjoint, so callers run a step as one concurrent
-    * [[graft.core.Par.run]] group (§2.6).
-    */
-  private final class AdmissionZones(spark: SparkSession,
-      root: java.nio.file.Path, ann: Option[(DataFrame, Long)]) {
-    import graft.operators.{AnnIndexZone, Dedup, SignatureZone}
-    import graft.queries.TrainingData.{minhashBands, minhashK, shingleN}
-    val sig = root.resolve("sig").toString
-    val md5 = root.resolve("md5").toString
-    val annDir = root.resolve("ann").toString
-    SignatureZone.create(spark, sig, shingleN, minhashK, minhashBands)
-    ann.foreach { case (_, total) =>
-      AnnIndexZone.create(spark, annDir, expectedCount = total): Unit }
-
-    /** Append `ins` (doc_id, text) to every zone; the index takes the
-      * embedding rows of its doc_ids.
-      */
-    def appends(ins: DataFrame): Seq[() => Unit] =
-      Seq(() => SignatureZone.append(ins, sig),
-        () => Dedup.md5ZoneAppend(ins, col("text"), col("doc_id"), md5)) ++
-        ann.map { case (emb, _) => () => AnnIndexZone.appendIndex(
-          emb.join(ins.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"), annDir) }
-
-    /** Tombstone the `doc_id`s in `dels`. */
-    def deletes(dels: DataFrame): Seq[() => Unit] =
-      Seq(() => SignatureZone.delete(dels, sig), () => Dedup.md5ZoneDelete(dels, md5)) ++
-        ann.map(_ => () => AnnIndexZone.delete(dels.select(col("doc_id").as("vec_id")), annDir))
-
-    /** The post-stream OPTIMIZEs, named for [[optimizeAll]]. */
-    def optimizes: Seq[(String, () => (Int, Int))] =
-      Seq("band" -> (() => SignatureZone.optimize(spark, sig)),
-        "md5" -> (() => Dedup.optimizeMd5Zone(spark, md5))) ++
-        ann.map(_ => "ann" -> (() => AnnIndexZone.optimize(spark, annDir)))
-  }
-
   /** st21: BOTH admission zones (exact-md5 + signature) maintained from
     * ONE checkpointed stream — the st18 consolidation discipline applied
     * to c8's curation gates. Each micro-batch appends its own band rows
@@ -1737,7 +1654,8 @@ object EventStream {
   def streamAdmissionZones(spark: SparkSession, dir: String): DataFrame = {
     val (src, schema, cut) = stagedHistorySource(spark, dir)
     scoped("st21") { root =>
-      val zones = new AdmissionZones(spark, root, ann = None)
+      val zones = AdmissionZones(root.toString)
+      zones.create(spark)
       runForeachBatchStream(spark, src, schema)(batch => Par.run(zones.appends(batch): _*))
       // OPTIMIZE both zones before serving: fold the file-per-batch
       // storm and the overlap-replayed rows (the source replays the
@@ -1746,9 +1664,9 @@ object EventStream {
       // deployment schedules; result-invisible because the readers
       // DISTINCT (bands) and min-aggregate (md5), which the oracle
       // hash then proves end-to-end
-      optimizeAll(zones.optimizes: _*)
+      zones.optimize(spark)
       val docs = graft.core.Tables(spark, dir, "documents")
-      graft.queries.TrainingData.admissionDecisions(spark,
+      TrainingData.admissionDecisions(spark,
         docs, docs.filter(col("doc_id") >= cut), zones.md5, zones.sig)
     }
   }
@@ -1780,11 +1698,12 @@ object EventStream {
     val embTotal = graft.core.Tables.countOf(spark, dir, "embeddings")
     val (src, schema, cut) = stagedEmbeddedHistorySource(spark, dir)
     scoped("st24") { root =>
-      val zones = new AdmissionZones(spark, root, Some(emb -> embTotal))
+      val zones = AdmissionZones(root.toString, Some(emb -> embTotal))
+      zones.create(spark)
       runForeachBatchStream(spark, src, schema)(batch => Par.run(zones.appends(batch): _*))
-      optimizeAll(zones.optimizes: _*)
+      zones.optimize(spark)
       val docs = graft.core.Tables(spark, dir, "documents")
-      graft.queries.TrainingData.semanticAdmissionDecisions(spark, docs, emb,
+      TrainingData.semanticAdmissionDecisions(spark, docs, emb,
         docs.filter(col("doc_id") >= cut && col("doc_id") < embTotal),
         zones.md5, zones.sig, zones.annDir)
     }
@@ -1854,7 +1773,8 @@ object EventStream {
   def streamZoneTombstones(spark: SparkSession, dir: String): DataFrame = {
     val (src, schema, cut) = stagedCdcHistorySource(spark, dir)
     scoped("st23") { root =>
-      val zones = new AdmissionZones(spark, root, ann = None)
+      val zones = AdmissionZones(root.toString)
+      zones.create(spark)
       runForeachBatchStream(spark, src, schema) { batch =>
         val (ins, dels) = insertsAndDeletes(batch, "doc_id", "text")
         // the four writes land in four disjoint dirs (bands, md5 rows,
@@ -1864,14 +1784,11 @@ object EventStream {
       }
       // retention GC in the streamed posture: fold the tombstones (and
       // the per-batch file storm) for good before serving — independent
-      // zones, concurrent compactions (§2.6)
-      optimizeAll(zones.optimizes: _*)
-      // no tombstone ROWS may survive the fold; the dir itself may
-      // linger only as an empty scaffold a concurrent marker left
-      require(!graft.core.Fs.hasParquetFiles(spark, s"${zones.sig}/tombstones"),
-        "optimize left the band tombstone list")
+      // zones, concurrent compactions (§2.6); no zone may keep a
+      // tombstone row past the fold
+      zones.optimize(spark)
       val docs = graft.core.Tables(spark, dir, "documents")
-      graft.queries.TrainingData.admissionDecisions(spark,
+      TrainingData.admissionDecisions(spark,
         docs, docs.filter(col("doc_id") >= cut), zones.md5, zones.sig)
     }
   }
@@ -1956,7 +1873,8 @@ object EventStream {
     val (src, schema, _) = stagedCdcLoopSource(spark, dir)
     val fates = root.resolve("fates").toString
     val docs = graft.core.Tables(spark, dir, "documents")
-    val zones = new AdmissionZones(spark, root, Some(emb -> embTotal))
+    val zones = AdmissionZones(root.toString, Some(emb -> embTotal))
+    zones.create(spark)
     runForeachBatchStreamWithId(spark, src, schema) { (batch, id) =>
       val (ins, dels) = insertsAndDeletes(batch, "doc_id", "text")
       // ONE 1-row agg per batch yields the self-exclusion cut and the
@@ -1976,7 +1894,7 @@ object EventStream {
       // threaded through both gates; ordered=false — the fates are
       // re-read and globally ordered after the stream
       if (id > 0) {
-        graft.queries.TrainingData.semanticAdmissionDecisions(
+        TrainingData.semanticAdmissionDecisions(
             spark, docs, emb, ins, zones.md5, zones.sig, zones.annDir,
             selfCutOpt = Some(selfCut), ordered = false)
           .write.mode("overwrite").parquet(s"$fates/round=$id")
@@ -1991,11 +1909,8 @@ object EventStream {
     // per-batch file storm for good (result-invisible: fates are on
     // disk; the folded zones answer later probes identically) —
     // independent zones, concurrent compactions (§2.6)
-    optimizeAll(zones.optimizes: _*)
-    spark.read.parquet(fates)
-      .select(col("doc_id"), col("round").cast("long").as("round"),
-        col("fate"), col("dup_of"), col("quality_score"))
-      .orderBy(col("doc_id"))
+    zones.optimize(spark)
+    TrainingData.roundFates(spark, fates).orderBy(col("doc_id"))
   }
 
   /** st29: the FULL STREAMED PRODUCTION PIPELINE — the terminal
@@ -2171,9 +2086,8 @@ object EventStream {
       root: java.nio.file.Path,
       refreshAtBatch: Option[Long] = None): DataFrame = {
     import graft.operators.{Bpe, Dedup}
-    import graft.queries.TrainingData
     val (src, schema, _) = stagedCdcLoopSource(spark, dir)
-    val md5Zone = root.resolve("md5").toString
+    val md5Zone = AdmissionZones(root.toString).md5
     val bpeZone = root.resolve("bpe").toString
     val priced = root.resolve("priced").toString
     val docs = graft.core.Tables(spark, dir, "documents")
@@ -2189,14 +2103,8 @@ object EventStream {
       if (refreshAtBatch.contains(id)) {
         // scheduled re-fit at trigger START, self-excluding this
         // batch's own inserts at the delta's minimum id (st30's
-        // replay-determinism rule); live history = the md5 zone's own
-        // keeper rows, ingested minus tombstoned
-        val minIns = ins.agg(min(col("doc_id"))).head.get(0)
-        val liveAll = Dedup.md5ZoneRead(spark, md5Zone)
-          .select(col("keeper_id").as("doc_id")).distinct()
-        val live = graft.core.Caches.persistTracked(
-          if (minIns == null) liveAll
-          else liveAll.filter(col("doc_id") < lit(minIns)))
+        // replay-determinism rule)
+        val live = liveHistory(spark, md5Zone, TrainingData.selfExclusionCut(ins)._1)
         graft.operators.ZoneRebuild.rebuild(spark, bpeZone) { staging =>
           Bpe.saveMerges(spark, Bpe.train(
             docs.join(live, Seq("doc_id"), "left_semi"), col("text"),
@@ -2216,7 +2124,7 @@ object EventStream {
       graft.core.Caches.release()
     }
     // retention GC in the streamed posture (st25's closing discipline)
-    optimizeAll("md5" -> (() => Dedup.optimizeMd5Zone(spark, md5Zone)))
+    AdmissionZones.optimizeAll("md5" -> (() => Dedup.optimizeMd5Zone(spark, md5Zone)))
     spark.read.parquet(priced)
       .select(col("doc_id"), col("round").cast("long").as("round"),
         col("n_words"), col("n_syms0"), col("n_bpe_tokens"),
@@ -2236,20 +2144,15 @@ object EventStream {
       dir: String, root: java.nio.file.Path,
       refreshAtBatch: Option[Long] = None,
       mediaGate: Boolean = false): DataFrame = {
-    import graft.operators.{Dedup, Similarity}
-    import graft.queries.TrainingData
+    import graft.operators.Similarity
     val emb = graft.core.Tables(spark, dir, "embeddings")
     val embTotal = graft.core.Tables.countOf(spark, dir, "embeddings")
     val (src, schema, _) = stagedCdcLoopSource(spark, dir)
     val fates = root.resolve("fates").toString
     val shards = root.resolve("shards").toString
     val docs = graft.core.Tables(spark, dir, "documents")
-    val hamZone = root.resolve("ham").toString
-    val zones = new AdmissionZones(spark, root, Some(emb -> embTotal))
-    if (mediaGate)
-      graft.operators.HammingZone.create(spark, hamZone,
-        TrainingData.audioHammingBits, TrainingData.audioHammingMax,
-        TrainingData.audioHammingChunks)
+    val zones = AdmissionZones(root.toString, Some(emb -> embTotal), media = mediaGate)
+    zones.create(spark)
     // the REFRESH outputs, trained over the batch-0 history slice
     // BEFORE the stream opens and persisted (decision state belongs to
     // the last refresh; a per-batch re-fit would tie fates to replay
@@ -2273,10 +2176,7 @@ object EventStream {
       // tombstones FIRST (st25's rule: this batch's decisions see the
       // corpus as of this batch) — disjoint zone dirs, concurrent jobs
       // (§2.6); the whole group joins before the refresh/decide below
-      if (hasDels) Par.run(zones.deletes(dels) ++
-        (if (mediaGate)
-          Seq(() => graft.operators.HammingZone.delete(dels, hamZone))
-        else Nil): _*)
+      if (hasDels) Par.run(zones.deletes(dels): _*)
       if (refreshAtBatch.contains(id)) {
         // The scheduled re-fit, at trigger START (before this batch's
         // decide), AFTER this batch's tombstones, SELF-EXCLUDING this
@@ -2289,14 +2189,7 @@ object EventStream {
         // timeline where every prior slice sits below the delta's
         // min), and re-applied tombstones are absorbed by the zone
         // reader's anti-join (append-only tombstones are idempotent).
-        // The live history is read from the md5 zone's OWN keeper
-        // rows: ingested minus tombstoned, exactly the state every
-        // gate probes — no side-channel corpus knowledge.
-        val liveAll = Dedup.md5ZoneRead(spark, zones.md5)
-          .select(col("keeper_id").as("doc_id")).distinct()
-        val live = graft.core.Caches.persistTracked(
-          if (selfCut == Long.MaxValue) liveAll
-          else liveAll.filter(col("doc_id") < lit(selfCut)))
+        val live = liveHistory(spark, zones.md5, selfCut)
         // the two re-fits read the SAME persisted live set and land in
         // disjoint zone dirs — concurrent rebuilds (§2.6): the
         // threshold scan back-fills the Lloyd fit's driver-sequential
@@ -2321,7 +2214,7 @@ object EventStream {
       // the batch's audio decoded EXACTLY ONCE (st26's rule): these
       // fingerprints feed both the survivors' media probe and the
       // feedback append below
-      val batchSigs = if (!mediaGate) None else Some(
+      val batchSigs = Option.when(mediaGate)(
         graft.core.Caches.persistTracked(TrainingData.audioSigs(ins)))
       if (id > 0) {
         // decide with the calibrated gate (and the media gate when the
@@ -2329,7 +2222,7 @@ object EventStream {
         // any feedback append (c9's write-then-append ordering)
         val decided =
           if (mediaGate) TrainingData.mediaAdmissionDecisions(
-            spark, docs, emb, ins, zones.md5, zones.sig, zones.annDir, hamZone,
+            spark, docs, emb, ins, zones.md5, zones.sig, zones.annDir, zones.hamDir,
             calThresholds = Some(cal), deltaSigs = batchSigs,
             selfCutOpt = Some(selfCut), ordered = false)
           else TrainingData.semanticAdmissionDecisions(
@@ -2342,7 +2235,7 @@ object EventStream {
       // truncation (the c14 localCheckpoint rule: the tail's four
       // consumers must not each nest the full admission subtree).
       // It reads only fates/docs/emb/cents, the feedback appends write
-      // only the four zone dirs — disjoint, so the tail rides the SAME
+      // only the zone dirs — disjoint, so the tail rides the SAME
       // concurrent group as the appends (§2.6 widened, round 18): the
       // write-then-append ordering only requires the FATES on disk
       // before any append, which the write above already guarantees.
@@ -2350,34 +2243,37 @@ object EventStream {
         val kept = spark.read.parquet(s"$fates/round=$id")
           .filter(col("fate") === "kept")
           .select(col("doc_id"), col("quality_score"))
-        val cids = Similarity.assignToCentroids(
-            emb.join(kept.select(col("doc_id").as("vec_id")),
-              Seq("vec_id"), "left_semi"), cents)
-          .select(col("vec_id").as("doc_id"), col("cid"))
-        TrainingData.admissionShardTail(docs, kept, cids)
+        TrainingData.admissionShardTail(docs, kept,
+            TrainingData.keptCids(emb, kept, cents))
           .write.mode("overwrite").parquet(s"$shards/round=$id")
       }) else Nil
       // ...then feed back: the batch joins ingested history (disjoint
       // zone dirs — concurrent, after the fates materialized)
-      Par.run(shardTail ++ zones.appends(ins) ++
-        batchSigs.map(bs =>
-          () => graft.operators.HammingZone.append(bs, hamZone)): _*)
+      Par.run(shardTail ++ zones.appends(ins, batchSigs): _*)
       graft.core.Caches.release()
     }
     // retention GC in the streamed posture (st25's closing discipline)
     // — independent zones, concurrent compactions (§2.6)
-    optimizeAll(zones.optimizes ++
-      (if (mediaGate)
-        Seq("hamming" -> (() => graft.operators.HammingZone.optimize(spark, hamZone)))
-      else Nil): _*)
-    spark.read.parquet(fates)
-      .select(col("doc_id"), col("round").cast("long").as("round"),
-        col("fate"), col("dup_of"), col("quality_score"))
+    zones.optimize(spark)
+    TrainingData.roundFates(spark, fates)
       .join(spark.read.parquet(shards)
         .select(col("doc_id"), col("cid"), col("n_tokens"),
           col("start_off"), col("seq_start"), col("seq_end")),
         Seq("doc_id"), "left")
       .orderBy(col("doc_id"))
+  }
+
+  /** The input of a scheduled decision-state re-fit (st30, st32): the
+    * live history the md5 zone covers — its own keeper rows, ingested
+    * minus tombstoned, exactly the state every gate probes (no
+    * side-channel corpus knowledge) — below the delta's self-exclusion
+    * `cut`, persisted for the re-fits that read it.
+    */
+  private def liveHistory(spark: SparkSession, md5Zone: String, cut: Long): DataFrame = {
+    val live = graft.operators.Dedup.md5ZoneRead(spark, md5Zone)
+      .select(col("keeper_id").as("doc_id")).distinct()
+    graft.core.Caches.persistTracked(
+      if (cut == Long.MaxValue) live else live.filter(col("doc_id") < lit(cut)))
   }
 
   /** The staged source of the admission loops (st25, st29-st32): the
@@ -2429,7 +2325,7 @@ object EventStream {
       runForeachBatchStream(spark, src, schema) { batch =>
         HammingZone.append(graft.queries.TrainingData.audioSigs(batch), zone)
       }
-      optimizeAll("hamming" -> (() => HammingZone.optimize(spark, zone)))
+      AdmissionZones.optimizeAll("hamming" -> (() => HammingZone.optimize(spark, zone)))
       val docs = graft.core.Tables(spark, dir, "documents")
       HammingZone.incrementalPairs(
           graft.queries.TrainingData.audioSigs(

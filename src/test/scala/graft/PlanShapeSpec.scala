@@ -715,6 +715,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("c17: the media gate adds ONLY Hamming-probe keys over c12's set") {
+    // prime the staged zone set so the listener sees only the decide
+    plan("c17_admission_media")
+    // every execution of the five-gate decide, not only the truncated
+    // final plan: c8's admission set (with the CC fixpoint's src/dst),
+    // c12's vector-gate keys, and beyond them exactly the Hamming
+    // probe's boundaries — the (c, v) chunk-bucket join, the DISTINCT
+    // over the candidates' (doc_id, sig) rows, and the b-side signature
+    // attach (doc_b; the a-side rides c8's doc_a). Any other key would
+    // mean the media gate shuffled the corpus or history on something
+    // its boundary doesn't require (it decodes survivors only, and
+    // never touches text or vectors).
+    val keys = allExecutionKeyTuples("c17_admission_media")
+    val c12 = Set("band,bh", "component", "doc_a", "doc_a,doc_b",
+      "doc_b,shingle", "doc_id", "doc_id,shingle", "text_md5", "src", "dst",
+      "vec_id", "bucket", "vec_a", "vec_b", "vec_a,vec_b")
+    assert((keys -- c12) == Set("c,v", "doc_id,sig", "doc_b"),
+      s"exchange keys beyond c12's set: ${keys -- c12}")
+    assert(keys("text_md5") && keys("bucket"), s"admission keys missing: $keys")
+  }
+
   test("c11: capped admission adds ONLY the hot-shingle anti-join key over c8's set") {
     val p = plan("c11_admission_capped")
     val keys = exchangeKeyTuples(p)
