@@ -25,6 +25,7 @@ import graft.operators.{AnnIndexZone, Dedup, HammingZone, SignatureZone}
   */
 final case class AdmissionZones(root: String,
     ann: Option[(DataFrame, Long)] = None, media: Boolean = false) {
+  import AdmissionZones.Member
   import TrainingData._
 
   val md5: String = s"$root/md5"
@@ -41,13 +42,6 @@ final case class AdmissionZones(root: String,
       HammingZone.create(spark, hamDir, audioHammingBits, audioHammingMax,
         audioHammingChunks)
   }
-
-  /** One member's maintenance ops, owned here once: the append takes the
-    * inserts and the caller's already-decoded media fingerprints, if any.
-    */
-  private final case class Member(name: String,
-      append: (DataFrame, Option[DataFrame]) => Unit, delete: DataFrame => Unit,
-      optimize: SparkSession => (Int, Int), tombstoned: SparkSession => Boolean)
 
   private def members: Seq[Member] = Seq(
     Member("band", (ins, _) => SignatureZone.append(ins, sig),
@@ -98,6 +92,13 @@ final case class AdmissionZones(root: String,
 }
 
 object AdmissionZones {
+
+  /** One member's maintenance ops, owned here once: the append takes the
+    * inserts and the caller's already-decoded media fingerprints, if any.
+    */
+  private final case class Member(name: String,
+      append: (DataFrame, Option[DataFrame]) => Unit, delete: DataFrame => Unit,
+      optimize: SparkSession => (Int, Int), tombstoned: SparkSession => Boolean)
 
   /** The post-stream OPTIMIZE of a zone group: every named zone compacts
     * concurrently ([[graft.core.Par.all]] — zones live in disjoint dirs,
